@@ -151,6 +151,13 @@ def maintain_store(
     }
 
 
+def _reaggregate(raw: DataFrame) -> DataFrame:
+    """Fold an index read's partial counts to one row per (word, doc)."""
+    return raw.groupBy("word", "doc_id", "letter").agg(
+        F.sum("cnt").alias("cnt")
+    ).select("word", "doc_id", "cnt", "letter")
+
+
 class IndexSession:
     """A persisted letter-partitioned inverted index plus its query
     surface — the engine's equivalent of the reference's ./index
@@ -159,6 +166,8 @@ class IndexSession:
     def __init__(self, spark: SparkSession, index_path: str):
         self.spark = spark
         self.index_path = index_path
+        # (index state key, resolved postings frame): see postings()
+        self._resolved: tuple | None = None
 
     # -- build / maintain ---------------------------------------------------
 
@@ -223,7 +232,9 @@ class IndexSession:
         """Merge appended partial postings back to one row per
         (word, doc) — log-structured maintenance with crash recovery.
         Pinned generations survive the rewrite (relocated under _gen,
-        retention GEN_RETAIN — sources/generations.py)."""
+        retention GEN_RETAIN — sources/generations.py). The published
+        head records `unique_keys`, so queries skip the re-aggregation
+        until the next write (see `postings`)."""
         compact_index(self.spark, self.index_path)
 
     def delete_docs(self, doc_ids: list, mode: str = "cow") -> dict:
@@ -257,10 +268,9 @@ class IndexSession:
         are published by `append` and relocated by `compact`)."""
         from .sources.generations import read_generation
 
-        raw = read_generation(self.spark, self.index_path, at=generation)
-        return raw.groupBy("word", "doc_id", "letter").agg(
-            F.sum("cnt").alias("cnt")
-        ).select("word", "doc_id", "cnt", "letter")
+        return _reaggregate(
+            read_generation(self.spark, self.index_path, at=generation)
+        )
 
     def generation(self) -> int:
         """The newest published generation of this index (0 before the
@@ -355,15 +365,69 @@ class IndexSession:
     # -- query --------------------------------------------------------------
 
     def postings(self) -> DataFrame:
-        """(word, doc_id, cnt, letter), re-aggregated so appended
-        partial counts read correctly even before compaction."""
+        """(word, doc_id, cnt, letter) with one row per (word, doc_id),
+        so appended partial counts read correctly even before
+        compaction.
+
+        One resolved read per index state: the session keeps the last
+        resolved frame, keyed by the manifest's identity plus the live
+        data-file listing (relpath, size, mtime). Every call still
+        heals a crashed swap and re-walks the listing, so an append
+        that lands without publishing is visible on the next query
+        (`read_index`'s live-read contract); only a changed key pays
+        the read, manifest load and planning again.
+
+        The re-aggregation is skipped only when the head generation
+        was published by `compact()` (it carries `unique_keys`), has
+        no deletion vector, and its file list is exactly the live
+        listing; any other index (no manifest, appended files, a
+        deletion vector, another writer's rewrite) keeps the
+        `groupBy(word, doc_id, letter).sum(cnt)`."""
+        from .operators.indexing import _data_listing, recover_index
+        from .sources.generations import _manifest_identity
+
+        def state() -> tuple:
+            return (
+                _manifest_identity(self.index_path),
+                _data_listing(self.index_path),
+            )
+
+        recover_index(self.index_path)
+        key = state()
+        if self._resolved is not None and self._resolved[0] == key:
+            return self._resolved[1]
         raw = read_index(self.spark, self.index_path)
-        return raw.groupBy("word", "doc_id", "letter").agg(
-            F.sum("cnt").alias("cnt")
-        ).select("word", "doc_id", "cnt", "letter")
+        unique = self._compacted_head(key[1])
+        if state() != key:
+            # the index changed while resolving: the manifest just read
+            # may not describe `raw`, so serve the re-aggregating plan
+            # (correct for any listing) and keep nothing
+            return _reaggregate(raw)
+        if unique:
+            df = raw.select("word", "doc_id", "cnt", "letter")
+        else:
+            df = _reaggregate(raw)
+        self._resolved = (key, df)
+        return df
+
+    def _compacted_head(self, listing: dict) -> bool:
+        """True when the head generation is a compaction's output (one
+        row per (word, doc_id)), carries no deletion vector, and lists
+        exactly the live data files."""
+        from .sources.generations import load_manifest
+
+        m = load_manifest(self.index_path) or {}
+        head = m.get("gens", {}).get(str(m.get("head", 0))) or {}
+        return (
+            head.get("unique_keys") == ["word", "doc_id"]
+            and not head.get("dv")
+            and set(head.get("files", ())) == set(listing)
+        )
 
     def lookup(self, term: str) -> DataFrame:
-        """Posting list of one term: letter-partition-pruned scan.
+        """Posting list of one term: letter-partition-pruned scan of
+        the session's resolved `postings()` frame (no re-read while the
+        index state is unchanged; no shuffle on a compacted index).
         The term is normalized with the index tokenizer's rules first."""
         return term_lookup(self.postings(), _normalize_term(term)).select(
             "doc_id", "cnt"

@@ -32,6 +32,9 @@ from pyspark.sql.types import _parse_datatype_string
 
 
 def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    # materialize once: the per-column walk below iterates `rows` once
+    # per column, which would exhaust a generator after the first
+    rows = list(rows)
     try:
         struct = _parse_datatype_string(schema)
         names = struct.fieldNames()

@@ -122,7 +122,13 @@ def read_index(spark: SparkSession, path: str) -> DataFrame:
     in published immutable files, so the live scan anti-joins the same
     broadcast sidecar the generation reader uses; unpublished appended
     files are untouched by construction (a vector can only reference
-    files that existed at its publish)."""
+    files that existed at its publish).
+
+    Each call re-reads the directory (partition discovery, manifest
+    load). `IndexSession.postings()` calls it once per index state and
+    serves its queries from that frame; it skips its re-aggregation
+    only when the head is `compact_index`'s output (`unique_keys`),
+    has no deletion vector, and lists exactly the live files."""
     from ..sources.generations import _dv_anti, load_manifest
 
     recover_index(path)
@@ -194,6 +200,11 @@ def compact_index(spark: SparkSession, path: str) -> None:
     call. (POSIX rename gives no two-directory atomic swap; on a
     production object store / HDFS the same pattern runs under a
     metastore pointer swap, which IS atomic.)
+
+    The published head generation records `unique_keys: ["word",
+    "doc_id"]` (the rewrite's output has one row per key), which lets
+    `IndexSession.postings()` skip its re-aggregation until the next
+    publish.
     """
     compact_artifact(
         spark,
@@ -203,6 +214,7 @@ def compact_index(spark: SparkSession, path: str) -> None:
             staging,
             mode="overwrite",
         ),
+        entry_extra={"unique_keys": ["word", "doc_id"]},
     )
 
 
@@ -238,7 +250,13 @@ def _chmod_staging(staging: str) -> None:
     os.chmod(staging, 0o777 & ~_UMASK)
 
 
-def compact_artifact(spark: SparkSession, path: str, rewrite, df_source=None) -> None:
+def compact_artifact(
+    spark: SparkSession,
+    path: str,
+    rewrite,
+    df_source=None,
+    entry_extra: dict | None = None,
+) -> None:
     """The locked read -> rewrite -> staged-swap engine behind every
     persisted artifact's compaction (count index above, bucketed
     vector store in operators/similarity.py). `rewrite(df, staging)`
@@ -253,7 +271,11 @@ def compact_artifact(spark: SparkSession, path: str, rewrite, df_source=None) ->
     moment they land; generation-store rewrites pass a precise
     head-listing read instead (generations.optimize_store), so a
     crashed optimistic placement can never be folded into the
-    compacted store."""
+    compacted store.
+
+    `entry_extra` merges caller metadata into the head generation the
+    compaction publishes (`carry_generations`); e.g. `compact_index`
+    records the rewrite's unique keys."""
     import tempfile
 
     from ..sources.commitio import IO
@@ -290,7 +312,7 @@ def compact_artifact(spark: SparkSession, path: str, rewrite, df_source=None) ->
         # stores that never published a generation. The session is
         # passed through so a bulk rewrite's stats/bloom rebuild runs
         # as one Spark job over the staged file list.
-        carry_generations(path, staging, spark=spark)
+        carry_generations(path, staging, spark=spark, entry_extra=entry_extra)
         IO.publish_swap(path, staging)
 
 

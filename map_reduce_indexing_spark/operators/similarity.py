@@ -1841,10 +1841,18 @@ def train_kmeans_frame(
                     "fixed-DIM non-null vector contract (the exploded "
                     "aggregate would silently skew that dimension's mean)"
                 )
-            seen.setdefault(cl, {})[int(r["d"])] = int(r["n"])
+            d = int(r["d"])
+            if d >= DIM:
+                raise ValueError(
+                    f"train_kmeans_frame: cluster {cl} has a vector with "
+                    f"more than {DIM} dimensions (dim index {d}) — the "
+                    "corpus violates the fixed-DIM non-null vector "
+                    "contract"
+                )
+            seen.setdefault(cl, {})[d] = int(r["n"])
             if cl not in upd:
                 upd[cl] = list(cents[cl - 1])
-            upd[cl][int(r["d"])] = round(
+            upd[cl][d] = round(
                 float(r["s"]) / r["n"], KMEANS_ROUND
             )
         # Fixed-DIM guard (r15, zero extra jobs: validated on the rows

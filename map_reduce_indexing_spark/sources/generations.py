@@ -53,6 +53,13 @@ export_shards manifest pattern applied inward:
 - `read_generation(spark, path, at=N)` reads exactly generation N's
   files (basePath-anchored so Hive partition columns survive), with
   one re-resolve retry for a reader racing the swap's rename gap.
+- `unique_keys` (optional, per generation entry) names columns on
+  which the generation's rows are unique. Only `compact_index` sets
+  it (`["word", "doc_id"]`, through `carry_generations`'
+  `entry_extra`); every other publish builds a fresh entry without
+  it. `IndexSession.postings()` skips its re-aggregation when the
+  head carries it, has no deletion vector, and lists exactly the live
+  files.
 
 Retention: the newest GEN_RETAIN generations survive (enforced at
 every publish and at compaction); older ones age out with a helpful

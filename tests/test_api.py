@@ -444,3 +444,142 @@ def test_vector_store_delete_ids(spark, tmp_path):
     top = vs.topk(q, k=5).collect()  # one pruned-bucket scan: sparse
     assert top and top[0].vec_id == 10  # self-match leads
     assert not {5, 6, 7} & {r.vec_id for r in top}
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _has_exchange(df) -> bool:
+    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_session_serves_one_resolved_read_per_index_state(spark, tmp_path):
+    """One long-lived session reuses its resolved postings frame only
+    while the index state (manifest identity + live file listing) is
+    unchanged: after every writer verb its postings() equals a fresh
+    session's, an unpublished raw append is visible on the next query,
+    and only compact()'s head skips the re-aggregation shuffle."""
+    from map_reduce_indexing_spark.operators.indexing import (
+        build_postings,
+        with_letter,
+    )
+    from map_reduce_indexing_spark.sources.generations import load_manifest
+
+    def docs(*pairs):
+        return spark.createDataFrame(list(pairs), "doc_id string, text string")
+
+    def head_entry():
+        m = load_manifest(path)
+        return m["gens"][str(m["head"])]
+
+    path = str(tmp_path / "ix")
+    IndexSession.build(
+        spark, docs(("d1", "apple banana"), ("d2", "apple cherry")), path
+    )
+    s = IndexSession(spark, path)
+
+    def same_as_fresh():
+        assert _rows(s.postings()) == _rows(IndexSession(spark, path).postings())
+
+    same_as_fresh()
+    assert s.postings() is s.postings()  # unchanged state: one frame
+
+    s.append(docs(("d3", "banana date apple"), ("d1", "apple")))
+    same_as_fresh()
+    assert "unique_keys" not in head_entry()
+    assert {(r.doc_id, r.cnt) for r in s.lookup("apple").collect()} == {
+        ("d1", 2),
+        ("d2", 1),
+        ("d3", 1),
+    }
+
+    s.delete_docs(["d2"])
+    same_as_fresh()
+    s.delete_docs(["d3"], mode="dv")
+    same_as_fresh()
+
+    s.compact()
+    same_as_fresh()
+    assert head_entry()["unique_keys"] == ["word", "doc_id"]
+    assert not _has_exchange(s.lookup("apple"))
+    assert _rows(s.lookup("apple")) == [("d1", 2)]
+
+    # a raw partitioned append with no publish: visible at once, and the
+    # listing no longer matches the flagged head, so it re-aggregates
+    (
+        with_letter(build_postings(docs(("d1", "apple"))))
+        .write.mode("append")
+        .partitionBy("letter")
+        .parquet(path)
+    )
+    assert _rows(s.lookup("apple")) == [("d1", 3)]
+    assert _has_exchange(s.lookup("apple"))
+    same_as_fresh()
+
+    s.compact()
+    assert not _has_exchange(s.lookup("apple"))
+    s.append(docs(("d4", "apple")))
+    assert "unique_keys" not in head_entry()
+    assert _has_exchange(s.lookup("apple"))
+    assert _rows(s.lookup("apple")) == [("d1", 3), ("d4", 1)]
+    same_as_fresh()
+
+    IndexSession.build(spark, docs(("d9", "apple fig")), path, mode="overwrite")
+    same_as_fresh()
+    assert _rows(s.lookup("apple")) == [("d9", 1)]
+
+
+def test_shared_session_reads_stay_exact_under_concurrent_writes(spark, tmp_path):
+    """Reader threads share one session's resolved frame while a writer
+    appends to a compacted index: every lookup sees a whole index state
+    (one row for the doc, a count some state held, never falling), so no
+    reader serves the no-shuffle frame over appended partial counts.
+    (Only appends: a compaction swap renames the files a running live
+    read planned, which this test is not about.)"""
+    import sys
+    import threading
+
+    def docs(*pairs):
+        return spark.createDataFrame(list(pairs), "doc_id string, text string")
+
+    path = str(tmp_path / "ix")
+    s = IndexSession.build(spark, docs(("d1", "apple"), ("d2", "fig")), path)
+    s.append(docs(("d3", "fig")))
+    s.compact()  # a flagged head: readers start on the no-shuffle plan
+    seen: list[list] = [[] for _ in range(3)]
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def reader(out):
+        try:
+            while not done.is_set():
+                out.append(s.lookup("apple").collect())
+        except BaseException as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    threads = [threading.Thread(target=reader, args=(o,)) for o in seen]
+    try:
+        for t in threads:
+            t.start()
+        for _ in range(2):
+            s.append(docs(("d1", "apple")))
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for out in seen:
+        assert out, "a reader never completed a lookup"
+        counts = []
+        for rows in out:
+            assert len(rows) == 1 and rows[0].doc_id == "d1", rows
+            counts.append(rows[0].cnt)
+        assert set(counts) <= {1, 2, 3} and counts == sorted(counts), counts
+    assert [tuple(r) for r in s.lookup("apple").collect()] == [("d1", 3)]
+    s.compact()
+    assert [tuple(r) for r in s.lookup("apple").collect()] == [("d1", 3)]

@@ -35,13 +35,17 @@ EXAMPLES = [
     ("examples/schema_evolution_tour.py", []),
 ]
 
+# examples run at once; each JVM gets an equal share of the cores
+POOL = 5
+
 
 def _run_one(entry):
     script, args = entry
-    # cap each example JVM's core count so five concurrent sessions
-    # don't oversubscribe the box (the scripts default to local[ncpu])
+    # cap each example JVM's core count so the pool's concurrent
+    # sessions share the box instead of oversubscribing it (the scripts
+    # default to local[ncpu]); an explicit SPARK_GRAFT_CPUS still wins
     env = {**os.environ}
-    env.setdefault("SPARK_GRAFT_CPUS", "8")
+    env.setdefault("SPARK_GRAFT_CPUS", str(max(1, (os.cpu_count() or 1) // POOL)))
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, script), *args],
         capture_output=True,
@@ -55,7 +59,7 @@ def _run_one(entry):
 
 @pytest.fixture(scope="module")
 def example_results():
-    with ThreadPoolExecutor(max_workers=5) as pool:
+    with ThreadPoolExecutor(max_workers=POOL) as pool:
         return dict(pool.map(_run_one, EXAMPLES))
 
 

@@ -151,6 +151,24 @@ def test_train_rejects_ragged_or_null_vectors(spark):
         train_kmeans_frame(nullelem, init, iters=1)
 
 
+def test_train_rejects_vectors_longer_than_dim(spark):
+    """The broadcast argmin folds only the centroids' DIM dimensions, so
+    vectors longer than DIM get a cluster and explode to dimension
+    indexes past the centroid's end; the update step must reject them
+    with the contract's ValueError, not fail with an IndexError."""
+    from map_reduce_indexing_spark.operators.similarity import (
+        train_kmeans_frame,
+    )
+
+    init = [[float(j == d) for d in range(DIM)] for j in range(2)]
+    long_ = spark.createDataFrame(
+        [(i, [float(i % 5)] * (DIM + 2)) for i in range(8)],
+        "vec_id long, v array<double>",
+    )
+    with pytest.raises(ValueError, match="more than"):
+        train_kmeans_frame(long_, init, iters=1, assign="broadcast")
+
+
 def test_empty_cluster_keeps_previous_centroid(spark):
     # On the fixture, at least one init centroid captures <= 1 point;
     # the model and engine agree (test above). Here pin the invariant

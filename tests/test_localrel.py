@@ -76,3 +76,11 @@ def test_local_rows_df_plan_is_a_local_table_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan, plan
     assert "ExistingRDD" not in plan, plan
+
+
+def test_local_rows_df_accepts_a_generator(spark):
+    """`rows` is walked once per column; a generator must still give
+    every row to every column, not an empty frame."""
+    rows = [(j, f"w{j}") for j in range(4)]
+    got = local_rows_df(spark, (r for r in rows), "n long, w string")
+    assert [tuple(r) for r in got.collect()] == rows

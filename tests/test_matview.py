@@ -1536,6 +1536,18 @@ _DUAL_BACKEND = {
 }
 
 
+def test_dual_backend_names_are_module_tests():
+    """A renamed test would silently drop out of `_DUAL_BACKEND` and lose
+    its CAS-backend run; every listed name must be a test here."""
+    here = globals()
+    missing = sorted(
+        n
+        for n in _DUAL_BACKEND
+        if not (n.startswith("test_") and callable(here.get(n)))
+    )
+    assert not missing, missing
+
+
 def pytest_generate_tests(metafunc):
     if metafunc.function.__name__ in _DUAL_BACKEND:
         if "io_backend" not in metafunc.fixturenames:
