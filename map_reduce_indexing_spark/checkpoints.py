@@ -11,8 +11,9 @@ rebuilds the same query accumulates one orphaned copy per call (the
 r14 verdict's storage-leak finding, guide §5 "unpersist when done").
 
 ``rotating_local_checkpoint(df, site)`` checkpoints ``df`` and keeps
-only the last ``ROTATE_KEEP`` checkpoints per (application, site),
-unpersisting older generations. Why keep 2 and not 1: the frame a query
+only the last ``ROTATE_KEEP`` checkpoints per (application, site) —
+a bounded session-state kind per site (``state.py``) — unpersisting
+older generations. Why keep 2 and not 1: the frame a query
 builder returns is lazy, and a caller may legitimately build the query
 a second time before executing the first frame (plan inspection next to
 execution). One generation of slack makes that pattern safe; a caller
@@ -30,21 +31,18 @@ would pay a distributed-filesystem write per call.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 
-ROTATE_KEEP = 2
+from . import state
 
-_SITES: dict[tuple, list] = {}
-_LOCK = threading.Lock()
+ROTATE_KEEP = 2
 
 
 def _checkpoint_java_rdd(df: DataFrame):
     """The JVM RDD backing a localCheckpointed DataFrame (its analyzed
     plan is a LogicalRDD), or None when the plan is not the expected
-    shape — in which case the caller simply skips rotation for this
-    frame rather than failing the query."""
+    shape — in which case release does nothing rather than failing
+    the query."""
     try:
         return df._jdf.queryExecution().analyzed().rdd()
     except Exception:  # noqa: BLE001 — rotation is best-effort
@@ -68,18 +66,12 @@ def rotating_local_checkpoint(df: DataFrame, site: str) -> DataFrame:
     """``df.localCheckpoint(eager=True)`` with bounded per-site storage:
     the two newest checkpoints for (application, site) stay materialized,
     older ones are unpersisted."""
-    out = df.localCheckpoint(eager=True)
-    handle = _checkpoint_java_rdd(out)
-    app = df.sparkSession.sparkContext.applicationId
-    old = None
-    with _LOCK:
-        q = _SITES.setdefault((app, site), [])
-        q.append(handle)
-        if len(q) > ROTATE_KEEP:
-            old = q.pop(0)
-    if old is not None:
-        try:
-            old.unpersist(False)
-        except Exception:  # noqa: BLE001
-            pass
-    return out
+    return state.lookup(
+        df.sparkSession.sparkContext,
+        ("checkpoint", site),
+        object(),  # every call is a new checkpoint
+        None,
+        lambda: df.localCheckpoint(eager=True),
+        bound=ROTATE_KEEP,
+        on_evict=release_local_checkpoint,
+    )

@@ -44,7 +44,7 @@ volume; the statistics quantization below sidesteps both.)
 Serving follows the build-then-query lifecycle the reference applies
 to its index artifact (client.c:39 submits the build;
 helper_reduce.c:238-257 serves lookups from it): `trained_classifier`
-memoizes the weights per (application, corpus content) so the eval and
+keeps the weights per (application, corpus content) so the eval and
 filter queries score with literal weights — a map-only projection over
 the artifact — instead of retraining.
 """
@@ -52,10 +52,10 @@ the artifact — instead of retraining.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import state
 from ..localrel import local_rows_df
 from ..plans.registry import register
 from .dedup import DUCK_TOKENS_LIST
@@ -373,36 +373,19 @@ def train_classifier_from_stats(spark: SparkSession, sf_dir: str) -> list[float]
     return _solve_from_row(row)
 
 
-_TRAINED_CLASSIFIERS: dict[tuple, list[float]] = {}
-# Dedicated lock (the trained_quantizer pattern, similarity.py): training
-# is a Spark job, so it must NOT serialize behind the global session-
-# artifact lock every artifact lookup takes.
-_TRAINED_CLASSIFIERS_LOCK = threading.Lock()
-
-
 def trained_classifier(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Memoized weights per (application, corpus content): serving
-    queries score, they don't retrain. Backed by the stats ARTIFACT, so
-    even a memo miss after an append-only corpus delta pays only the
-    delta statistics, never a corpus rescan."""
-    from .indexing import _content_fingerprint
-
+    """The weights, trained once per (application, corpus content):
+    serving queries score, they don't retrain. Backed by the stats
+    ARTIFACT, so even a retrain after an append-only corpus delta pays
+    only the delta statistics, never a corpus rescan."""
     src = os.path.join(sf_dir, "documents.parquet")
-    with _TRAINED_CLASSIFIERS_LOCK:
-        key = (
-            spark.sparkContext.applicationId,
-            src,
-            _content_fingerprint(src),
-        )
-        if key not in _TRAINED_CLASSIFIERS:
-            for stale in [
-                k for k in _TRAINED_CLASSIFIERS if k[:2] == key[:2]
-            ]:
-                del _TRAINED_CLASSIFIERS[stale]
-            _TRAINED_CLASSIFIERS[key] = train_classifier_from_stats(
-                spark, sf_dir
-            )
-        return _TRAINED_CLASSIFIERS[key]
+    return state.lookup(
+        spark.sparkContext,
+        "classifier",
+        src,
+        state.content_fingerprint(src),
+        lambda: train_classifier_from_stats(spark, sf_dir),
+    )
 
 
 def _duck_clf_ctes() -> str:

@@ -229,19 +229,22 @@ def _duck_pagerank_ctes(rounds: int, damping: float) -> str:
     same expression tree the Spark side builds (decimal-summed
     contribution terms, decimal-summed dangling mass, 12-dp round per
     iteration)."""
+    # Every CTE is MATERIALIZED: round i reads round i-1 twice, and
+    # DuckDB otherwise inlines a CTE at each reference, so the chain
+    # grows as 2^rounds and exhausts memory. Same rows.
     ctes = [
-        """nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-        outw AS (SELECT src, SUM(w) AS wout FROM edges GROUP BY src),
-        e AS (SELECT edges.src, dst,
+        """nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+        outw AS MATERIALIZED (SELECT src, SUM(w) AS wout FROM edges GROUP BY src),
+        e AS MATERIALIZED (SELECT edges.src, dst,
                      CAST(w AS DOUBLE) / CAST(wout AS DOUBLE) AS p
               FROM edges JOIN outw ON edges.src = outw.src),
-        nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-        r0 AS (SELECT node, 1.0 / n AS r FROM nodes CROSS JOIN nn)"""
+        nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
+        r0 AS MATERIALIZED (SELECT node, 1.0 / n AS r FROM nodes CROSS JOIN nn)"""
     ]
     for i in range(1, rounds + 1):
         prev = f"r{i - 1}"
         ctes.append(
-            f"""r{i} AS (
+            f"""r{i} AS MATERIALIZED (
             SELECT nodes.node,
                    ROUND({1.0 - damping} / n
                          + {damping} * (dm / n)

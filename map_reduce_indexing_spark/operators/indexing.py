@@ -28,6 +28,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import state
 from ..functions.text import duckdb_tokens_sql, tokenize
 from ..plans.registry import register
 from ..sources.tables import load_table
@@ -349,60 +350,6 @@ def postings_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session-scoped persisted index: the reference's build-then-query lifecycle
 # ---------------------------------------------------------------------------
 
-_ARTIFACTS: dict[tuple, str] = {}
-# RLock, not Lock: artifact builds CHAIN — the session index and
-# positional index builds read the session tokens artifact, so a build
-# running under this lock re-enters session_artifact_path for its
-# dependency. A plain Lock self-deadlocks on that nesting; reentrancy
-# keeps the cross-thread build-once guarantee while letting one
-# thread's dependency chain through (regression-tested in
-# tests/test_tokens_artifact.py::test_index_build_chains_on_tokens_artifact).
-_ARTIFACTS_LOCK = __import__("threading").RLock()
-
-
-def _content_fingerprint(src: str) -> str:
-    """Cheap content digest of a source file: md5 over (size, mtime_ns,
-    first KB, last 64 KB). The tail covers a parquet footer — schema,
-    row-group boundaries, column min/max stats — so a same-second,
-    same-size rewrite (where an (mtime, size) key alone would serve a
-    stale artifact) fingerprints differently whenever the footer moves;
-    mtime_ns additionally covers the residual case of a >65 KB file
-    changed only in the middle with byte-identical head/footer (content
-    bytes alone cannot distinguish that without a full read). Reads at
-    most 65 KB regardless of file size.
-
-    A DIRECTORY source (a Spark-written multi-file parquet table, e.g.
-    tools/scale_bench.py's staged corpora) fingerprints as the sorted
-    RECURSIVE (relpath, size, mtime_ns) listing of its files — any
-    rewrite changes at least one entry, with no file reads at all.
-    Recursion matters: a partitionBy-written table keeps every data
-    file one level down, so a top-level-only listing would hash to a
-    near-constant digest and serve stale artifacts across corpus
-    rewrites."""
-    import hashlib
-
-    if os.path.isdir(src):
-        h = hashlib.md5()
-        for root, dirs, files in os.walk(src):
-            dirs.sort()
-            for name in sorted(files):
-                p = os.path.join(root, name)
-                st = os.stat(p)
-                rel = os.path.relpath(p, src)
-                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-        return h.hexdigest()
-
-    st = os.stat(src)
-    size = st.st_size
-    h = hashlib.md5(f"{size}:{st.st_mtime_ns}".encode())
-    with open(src, "rb") as f:
-        h.update(f.read(1024))
-        tail = min(size, 65536)
-        f.seek(size - tail)
-        h.update(f.read())
-    return h.hexdigest()
-
-
 SOURCES_FILE = "_sources.json"  # consumed-source listing (leading "_":
 # invisible to Spark scans, same convention as the vector-store sidecars)
 
@@ -444,11 +391,6 @@ def _save_sources(path: str, listing: dict[str, list[int]]) -> None:
     os.replace(tmp, os.path.join(path, SOURCES_FILE))
 
 
-# Most-recent artifact per (application, kind, source path), regardless
-# of fingerprint — the incremental path's "previous state" pointer.
-_ARTIFACT_HEADS: dict[tuple, str] = {}
-
-
 def _delta_ids_are_new(
     spark: SparkSession, old_files: list[str], new_files: list[str]
 ) -> bool:
@@ -483,14 +425,12 @@ def session_artifact_path(
     """Generic once-per-(Spark application, source content) persisted
     artifact: the reference's build-then-query lifecycle for any derived
     store (count index, positional index, bucketed embedding store).
+    `build(path)` must write the artifact at `path`.
 
-    The cache key includes a content fingerprint (path + size + a digest
-    of the source file's head and parquet footer, `_content_fingerprint`),
-    so a regenerated fixture triggers a rebuild rather than serving stale
-    data — even when the rewrite lands in the same second with the same
-    byte size; the build is lock-guarded so concurrent first calls build
-    once. `build(path)` must write the artifact at
-    `path`.
+    One session-state entry per (kind, source), versioned by the
+    source's content fingerprint (a tuple `source_file` fingerprints
+    every input), so a regenerated source rebuilds rather than serving
+    stale data, and concurrent first calls build once.
 
     Placement: `$SPARK_GRAFT_INDEX_DIR` if set (point it at shared
     storage — HDFS mount / object-store fuse — on a real cluster, the
@@ -498,106 +438,28 @@ def session_artifact_path(
     which is only readable by executors in local mode. Either way the
     directory is removed at interpreter exit.
     """
-    # source_file may be a tuple of files (r15): an artifact derived
-    # from SEVERAL fixture tables (the trade graph joins five)
-    # fingerprints every input, so a change to any of them rebuilds.
     if isinstance(source_file, (tuple, list)):
-        srcs = tuple(
+        src = tuple(
             os.path.join(os.path.realpath(sf_dir), s) for s in source_file
         )
-        src = srcs
-        fingerprint = tuple(_content_fingerprint(s) for s in srcs)
+        fingerprint = tuple(state.content_fingerprint(s) for s in src)
     else:
         src = os.path.join(os.path.realpath(sf_dir), source_file)
-        fingerprint = _content_fingerprint(src)
-    app = spark.sparkContext.applicationId
-    key = (app, kind, src, fingerprint)
-    head_key = (app, kind, src)
-    with _ARTIFACTS_LOCK:
-        path = _ARTIFACTS.get(key)
-        if path is not None and os.path.isdir(path):
-            return path
-        # Incremental maintenance (round 8): if the corpus is a
-        # directory whose change is APPEND-ONLY — every file the
-        # previous artifact consumed is byte-identical, only new data
-        # files appeared — run `delta_build(path, new_files)` over just
-        # the delta instead of re-deriving everything. The consumed
-        # listing persists as a _sources.json sidecar inside the
-        # artifact (so the comparison is against what was actually
-        # built, not an in-memory guess), and the artifact path is
-        # REUSED — consumers re-discover it with the appended rows.
-        # Any modified or removed file falls through to a full rebuild.
-        if (
-            delta_build is not None
-            and isinstance(src, str)
-            and os.path.isdir(src)
-        ):
-            prev_path = _ARTIFACT_HEADS.get(head_key)
-            if prev_path is not None and os.path.isdir(prev_path):
-                consumed = _load_sources(prev_path)
-                current = _data_listing(src)
-                if consumed is not None and all(
-                    current.get(p) == meta for p, meta in consumed.items()
-                ):
-                    new_files = sorted(set(current) - set(consumed))
-                    # The delta contract every incremental artifact
-                    # relies on — appended files hold only NEW
-                    # doc_ids — was documented but never CHECKED: a
-                    # file re-adding an existing doc_id would silently
-                    # double-count its rows in every delta-maintained
-                    # artifact (postings, tokens, signatures, lm/clf
-                    # sums). Verify it here, once for all artifacts: a
-                    # column-pruned doc_id scan of old vs new files
-                    # (broadcast the delta side — it is tiny). On
-                    # overlap, fall through to the full rebuild, which
-                    # is always correct.
-                    if new_files and not _delta_ids_are_new(
-                        spark,
-                        [os.path.join(src, p) for p in consumed],
-                        [os.path.join(src, p) for p in new_files],
-                    ):
-                        new_files = []
-                    if new_files:
-                        from ..sources.generations import (
-                            ensure_base_generation,
-                            publish_generation,
-                        )
+        fingerprint = state.content_fingerprint(src)
+    sc = spark.sparkContext
+    incremental = (
+        delta_build is not None and isinstance(src, str) and os.path.isdir(src)
+    )
 
-                        # snapshot isolation for the artifact tier:
-                        # the pre-delta state becomes pinnable, each
-                        # delta publishes a new head (read back with
-                        # session_artifact_df(..., at=)). Lock taken
-                        # and RELEASED around each manifest touch —
-                        # delta_build takes the same flock itself and
-                        # flock does not nest across fds in-process.
-                        with index_writer_lock(prev_path):
-                            ensure_base_generation(prev_path)
-                        delta_build(
-                            prev_path,
-                            [os.path.join(src, p) for p in new_files],
-                        )
-                        with index_writer_lock(prev_path):
-                            publish_generation(prev_path)
-                        _save_sources(prev_path, current)
-                        # The delta MUTATED prev_path, so every other
-                        # fingerprint entry still pointing at it is now
-                        # wrong — without this purge, a corpus that
-                        # returns to an earlier fingerprint (file
-                        # appended, then removed) would cache-hit the
-                        # old key and serve the appended rows for docs
-                        # no longer in the corpus. Entries for OTHER
-                        # paths stay: those artifacts are immutable.
-                        for stale in [
-                            k
-                            for k, v in _ARTIFACTS.items()
-                            if v == prev_path and k != key
-                        ]:
-                            del _ARTIFACTS[stale]
-                        _ARTIFACTS[key] = prev_path
-                        # drop the cached discovered read: its file
-                        # listing predates the appended rows
-                        _ARTIFACT_DFS.pop((app, prev_path), None)
-                        return prev_path
+    def refresh() -> str:
+        prev = state.entries(sc, "artifact").get((kind, src))
+        if (
+            incremental
+            and prev is not None
+            and os.path.isdir(prev[1])
+            and _delta_refresh(spark, src, prev[1], delta_build)
+        ):
+            return prev[1]
         import atexit
         import shutil
         import tempfile
@@ -617,22 +479,57 @@ def session_artifact_path(
         # when the listing is identical before and after the build —
         # otherwise leave no sidecar, and the next fingerprint change
         # takes the (always-correct) full rebuild.
-        listing = (
-            _data_listing(src)
-            if delta_build is not None
-            and isinstance(src, str)
-            and os.path.isdir(src)
-            else None
-        )
+        listing = _data_listing(src) if incremental else None
         build(path)
         if listing is not None and _data_listing(src) == listing:
             _save_sources(path, listing)
-        _ARTIFACTS[key] = path
-        _ARTIFACT_HEADS[head_key] = path
-    return path
+        return path
+
+    return state.lookup(
+        sc, "artifact", (kind, src), fingerprint, refresh, valid=os.path.isdir
+    )
 
 
-_ARTIFACT_DFS: dict[tuple, DataFrame] = {}
+def _delta_refresh(spark: SparkSession, src: str, path: str, delta_build) -> bool:
+    """Incremental maintenance: if the directory source `src` changed
+    APPEND-ONLY since the artifact at `path` was built, run
+    `delta_build(path, new_files)` over just the delta, publish it as a
+    new generation and return True; else False (full rebuild)."""
+    # Every file the artifact consumed must be byte-identical, only new
+    # data files may appear. The consumed listing persists as a
+    # _sources.json sidecar inside the artifact, so the comparison is
+    # against what was actually built, not an in-memory guess.
+    consumed = _load_sources(path)
+    current = _data_listing(src)
+    if consumed is None or any(
+        current.get(p) != meta for p, meta in consumed.items()
+    ):
+        return False
+    new_files = sorted(set(current) - set(consumed))
+    # The delta contract every incremental artifact relies on — appended
+    # files hold only NEW doc_ids — is checked here, once for all
+    # artifacts: a file re-adding an existing doc_id would double-count
+    # its rows, so an overlap takes the full rebuild, always correct.
+    if not new_files or not _delta_ids_are_new(
+        spark,
+        [os.path.join(src, p) for p in consumed],
+        [os.path.join(src, p) for p in new_files],
+    ):
+        return False
+    from ..sources.generations import ensure_base_generation, publish_generation
+
+    # snapshot isolation for the artifact tier: the pre-delta state
+    # becomes pinnable, each delta publishes a new head (read back with
+    # session_artifact_df(..., at=)). Lock taken and RELEASED around each
+    # manifest touch — delta_build takes the same flock itself and flock
+    # does not nest across fds in-process.
+    with index_writer_lock(path):
+        ensure_base_generation(path)
+    delta_build(path, [os.path.join(src, p) for p in new_files])
+    with index_writer_lock(path):
+        publish_generation(path)
+    _save_sources(path, current)
+    return True
 
 
 def session_artifact_df(
@@ -647,31 +544,31 @@ def session_artifact_df(
     """`session_artifact_path` + a cached partition-discovered read.
 
     Hive partition discovery + schema inference over a many-partition
-    artifact costs ~0.5 s of driver time PER `spark.read.parquet` call;
-    since the artifact is immutable for the life of its cache key
-    (incremental delta appends invalidate the cached read), the
-    discovered DataFrame (a logical plan) is reused across queries —
-    each lookup pays only its pruned scan.
+    artifact costs ~0.5 s of driver time PER `spark.read.parquet` call,
+    so the discovered DataFrame (a logical plan) is a session-state
+    entry per artifact, versioned by its manifest identity and directory
+    stat: a delta publishes a new manifest and a compaction swaps the
+    directory, so either re-discovers the file listing.
 
     `at=` pins a published GENERATION of the artifact (snapshot
     isolation, sources/generations.py): incremental delta appends
     publish one per delta, so a multi-query session can keep reading
-    the exact pre-append row set while the corpus grows underneath it.
-    Pinned reads bypass the live-read cache (each generation is its
-    own immutable file list)."""
+    the exact pre-append row set while the corpus grows underneath it."""
+    from ..sources.generations import _manifest_identity, read_generation
+
     path = session_artifact_path(
         spark, sf_dir, kind, source_file, build, delta_build
     )
     if at is not None:
-        from ..sources.generations import read_generation
-
         return read_generation(spark, path, at=at)
-    key = (spark.sparkContext.applicationId, path)
-    df = _ARTIFACT_DFS.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _ARTIFACT_DFS[key] = df
-    return df
+    st = os.stat(path)
+    return state.lookup(
+        spark.sparkContext,
+        "artifact_read",
+        path,
+        (_manifest_identity(path), st.st_ino, st.st_mtime_ns),
+        lambda: spark.read.parquet(path),
+    )
 
 
 def session_index_path(spark: SparkSession, sf_dir: str) -> str:

@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import state
 from ..localrel import local_rows_df
 from ..plans.registry import register
 from ..sources.tables import load_table
@@ -1560,38 +1561,29 @@ def _init_centroids() -> list[list[float]]:
 ASSIGN_LITERAL_MAX_K = 32
 
 
-# Centroid-matrix broadcasts, memoized per (application, centroid
-# content) with a small LRU: repeated serving calls with the same
-# trained model reuse ONE broadcast instead of shipping a new one per
-# call, and a training loop's per-round models (different content each
-# round) get unpersisted as they age out instead of accumulating on
-# driver and executors for the application's lifetime (the r8 leak:
-# KMEANS_ITERS rounds x every train/sweep call). Eviction uses
-# unpersist(), not destroy(): a stale lazy plan that re-executes after
-# eviction re-ships the broadcast from the driver instead of failing.
-_ASSIGN_BC_MAX = 4
-_ASSIGN_BC: dict = __import__("collections").OrderedDict()
-_ASSIGN_BC_LOCK = __import__("threading").Lock()
+# Centroid-matrix broadcasts, one per model content in a bounded
+# session-state kind: repeated serving calls with the same trained model
+# reuse ONE broadcast instead of shipping a new one per call, and a
+# training loop's per-round models get unpersisted as they age out
+# instead of accumulating on driver and executors for the application's
+# lifetime. Eviction uses unpersist(), not destroy(): a stale lazy plan
+# that re-executes after eviction re-ships the broadcast from the driver
+# instead of failing.
+CENTROID_BC_KEEP = 4
 
 
 def _centroid_broadcast(sc, cents, cmat, c2):
     import hashlib
 
-    key = (
-        sc.applicationId,
+    return state.lookup(
+        sc,
+        "centroid_broadcast",
         hashlib.md5(repr(cents).encode()).hexdigest(),
+        None,
+        lambda: sc.broadcast((cmat, c2)),
+        bound=CENTROID_BC_KEEP,
+        on_evict=lambda bc: bc.unpersist(),
     )
-    with _ASSIGN_BC_LOCK:
-        bc = _ASSIGN_BC.get(key)
-        if bc is not None:
-            _ASSIGN_BC.move_to_end(key)
-            return bc
-        bc = sc.broadcast((cmat, c2))
-        _ASSIGN_BC[key] = bc
-        while len(_ASSIGN_BC) > _ASSIGN_BC_MAX:
-            _, old = _ASSIGN_BC.popitem(last=False)
-            old.unpersist()
-        return bc
 
 
 def assign_nearest(
@@ -2252,40 +2244,22 @@ def q_ann_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRAINED_QUANTIZERS: dict[tuple[str, str, str], list[list[float]]] = {}
-_TRAINED_QUANTIZERS_LOCK = __import__("threading").Lock()
-
-
 def trained_quantizer(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """Memoized `train_kmeans` per (application, corpus content) — the
+    """`train_kmeans` once per (application, corpus content) — the
     session-artifact discipline applied to a model small enough to
     live in process memory instead of parquet: serving queries
     (ann_ivf_trained_topk, trained VectorStore builds) read the model,
     they don't retrain it. `ann_kmeans_train` itself calls train_kmeans
     directly — it IS the training benchmark, and memoizing it would
     make the bench measure a dictionary lookup."""
-    from .indexing import _content_fingerprint
-
     src = os.path.join(sf_dir, "embeddings.parquet")
-    # Check-and-train under a DEDICATED lock: an unguarded
-    # read-then-write let two threads both run the full 3-round
-    # k-means (duplicate Spark jobs, same model). NOT the global
-    # _ARTIFACTS_LOCK — training is a multi-job Spark run, and holding
-    # the lock every session-artifact lookup takes would serialize
-    # the whole engine behind it (train_kmeans touches no session
-    # artifacts, so there is no nesting to stay re-entrant for).
-    with _TRAINED_QUANTIZERS_LOCK:
-        key = (spark.sparkContext.applicationId, src, _content_fingerprint(src))
-        if key not in _TRAINED_QUANTIZERS:
-            # A changed corpus means the old fingerprint's model will
-            # never be served again — drop it so the memo stays O(live
-            # corpora), not O(every corpus state ever trained).
-            for stale in [
-                k for k in _TRAINED_QUANTIZERS if k[:2] == key[:2]
-            ]:
-                del _TRAINED_QUANTIZERS[stale]
-            _TRAINED_QUANTIZERS[key] = train_kmeans(spark, sf_dir)
-        return _TRAINED_QUANTIZERS[key]
+    return state.lookup(
+        spark.sparkContext,
+        "quantizer",
+        src,
+        state.content_fingerprint(src),
+        lambda: train_kmeans(spark, sf_dir),
+    )
 
 
 @register(
@@ -2379,8 +2353,6 @@ SEMANTIC_COSINE = 0.35
 # provably drop below half the quadratic).
 HOT_CELL_MIN = 50_000  # cell rows before the lever engages
 _SUBB_POWER_SEEDS = (HYPERPLANES[0], HYPERPLANES[1])  # fixed g1, g2
-_HOT_CELLS: dict[tuple[str, str, str], list[int]] = {}
-_HOT_CELLS_LOCK = __import__("threading").Lock()
 
 
 def _cold_pair_scores(cold: DataFrame, threshold: float) -> DataFrame:
@@ -2408,7 +2380,7 @@ def _cold_pair_scores(cold: DataFrame, threshold: float) -> DataFrame:
 
     thr = float(threshold)
 
-    def score(pdf: pd.DataFrame):
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         empty = pd.DataFrame(
             {
@@ -2696,8 +2668,6 @@ def semantic_cell_pairs(
     "equality-pinned in tests/test_semantic_dedup.py.",
 )
 def q_dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .indexing import _content_fingerprint
-
     cents = trained_quantizer(spark, sf_dir)  # memoized: serve, don't retrain
     # Per-vector norm computed ONCE on the assigned frame, not per pair:
     # cosine = dot/(nrm_a*nrm_b) runs one fold per candidate instead of
@@ -2716,23 +2686,27 @@ def q_dedup_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..checkpoints import rotating_local_checkpoint
 
     e = rotating_local_checkpoint(e, "similarity.semantic_pairs.assigned")
-    # Hot-cell detection memoized per (app, corpus content) like the
+    # Hot cells are a session-state entry per corpus content, like the
     # quantizer itself: the counting job runs once, repeat calls plan
     # the same branches without re-counting.
     src = os.path.join(sf_dir, "embeddings.parquet")
-    with _HOT_CELLS_LOCK:
-        key = (spark.sparkContext.applicationId, src, _content_fingerprint(src))
-        if key not in _HOT_CELLS:
-            for stale in [k for k in _HOT_CELLS if k[:2] == key[:2]]:
-                del _HOT_CELLS[stale]
-            counts = e.groupBy("cell").agg(F.count(F.lit(1)).alias("cell_n"))
-            _HOT_CELLS[key] = [
-                r.cell
-                for r in counts.filter(
-                    F.col("cell_n") >= HOT_CELL_MIN
-                ).collect()
-            ]
-        hot_cells = _HOT_CELLS[key]
+
+    def count_hot_cells() -> list[int]:
+        counts = e.groupBy("cell").agg(F.count(F.lit(1)).alias("cell_n"))
+        return [
+            r.cell
+            for r in counts.filter(
+                F.col("cell_n") >= HOT_CELL_MIN
+            ).collect()
+        ]
+
+    hot_cells = state.lookup(
+        spark.sparkContext,
+        "hot_cells",
+        src,
+        state.content_fingerprint(src),
+        count_hot_cells,
+    )
     return semantic_cell_pairs(
         e, SEMANTIC_COSINE, hot_cells=hot_cells
     )
@@ -2835,28 +2809,16 @@ def q_ann_pca_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PCA_MODELS: dict[tuple, tuple] = {}
-_PCA_MODELS_LOCK = __import__("threading").Lock()
-
-
 def pca_components(spark: SparkSession, sf_dir: str, k: int = PCA_K):
     """(components, eigenvalues, mean): the top-k principal axes of the
     embedding table — numpy eigh over the covariance assembled from the
-    ann_pca_train statistics (a bounded ~2k-row model fetch), memoized
-    per (application, corpus content) like trained_quantizer. Signs are
-    canonicalized (largest-|component| coordinate positive) so the
-    model is deterministic across LAPACK builds."""
+    ann_pca_train statistics (a bounded ~2k-row model fetch), computed
+    once per (application, corpus content, k) like trained_quantizer.
+    Signs are canonicalized (largest-|component| coordinate positive)
+    so the model is deterministic across LAPACK builds."""
     import numpy as np
 
-    from .indexing import _content_fingerprint
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    with _PCA_MODELS_LOCK:
-        key = (spark.sparkContext.applicationId, src, _content_fingerprint(src), k)
-        if key in _PCA_MODELS:
-            return _PCA_MODELS[key]
-        for stale in [kk for kk in _PCA_MODELS if kk[:2] == key[:2]]:
-            del _PCA_MODELS[stale]
+    def fit():
         rows = q_ann_pca_train(spark, sf_dir).collect()
         n = None
         s1 = np.zeros(DIM)
@@ -2876,9 +2838,16 @@ def pca_components(spark: SparkSession, sf_dir: str, k: int = PCA_K):
         for c in comps:  # deterministic sign
             if c[int(np.argmax(np.abs(c)))] < 0:
                 c *= -1.0
-        model = (comps, evals[order], mean)
-        _PCA_MODELS[key] = model
-        return model
+        return comps, evals[order], mean
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    return state.lookup(
+        spark.sparkContext,
+        "pca",
+        src,
+        (state.content_fingerprint(src), k),
+        fit,
+    )
 
 
 def pca_project(df: DataFrame, comps, mean, vec_col: str = "v", out_col: str = "pv") -> DataFrame:

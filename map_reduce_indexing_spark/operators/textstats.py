@@ -863,7 +863,6 @@ def compact_lm_counts(spark: SparkSession, sf_dir: str) -> None:
     _sources.json consumed-listing sidecar rides the swap so later
     corpus appends still take the delta path."""
     from .indexing import (
-        _ARTIFACT_DFS,
         _load_sources,
         _save_sources,
         compact_artifact,
@@ -894,7 +893,6 @@ def compact_lm_counts(spark: SparkSession, sf_dir: str) -> None:
             _save_sources(staging, listing)
 
     compact_artifact(spark, path, rewrite)
-    _ARTIFACT_DFS.pop((spark.sparkContext.applicationId, path), None)
 
 
 @register(

@@ -174,10 +174,10 @@ def compact_tokenized_docs(spark: SparkSession, sf_dir: str) -> None:
     through indexing.compact_artifact (locked read -> staged rewrite ->
     crash-safe swap); the _sources.json consumed-listing sidecar rides
     the swap like the vector store's model sidecars, so later corpus
-    appends still take the delta path; the cached discovered read is
-    dropped because the path's file listing changed."""
+    appends still take the delta path. The swap changes the artifact's
+    directory stat, so the next `tokenized_docs` re-discovers the
+    folded file listing."""
     from .indexing import (
-        _ARTIFACT_DFS,
         _load_sources,
         _save_sources,
         compact_artifact,
@@ -203,7 +203,6 @@ def compact_tokenized_docs(spark: SparkSession, sf_dir: str) -> None:
             _save_sources(staging, listing)
 
     compact_artifact(spark, path, rewrite)
-    _ARTIFACT_DFS.pop((spark.sparkContext.applicationId, path), None)
 
 
 def token_rows(spark: SparkSession, sf_dir: str, out_col: str = "w") -> DataFrame:

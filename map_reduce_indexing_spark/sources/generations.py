@@ -86,6 +86,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import state
 from ..localrel import local_rows_df
 from .commitio import MANIFEST_NAME as GEN_FILE  # noqa: E402 — one name
 GEN_DIR = "_gen"  # underscore: invisible to Spark directory scans
@@ -2414,39 +2415,30 @@ def _read_reconciled(
     return out
 
 
-# Resolved-read-plan memo (r14): the LAZY DataFrame a (path, at, where,
-# merge_schema) read resolves to, keyed on the manifest file's identity
-# (st_ino, st_size, st_mtime_ns — the atomic rename-save makes every
-# commit a new inode, so any publish/fold/vacuum/rename invalidates).
-# This caches NO data and NO results: the plan still scans the parquet
-# inputs on every execution; only the driver-side resolution work
-# (manifest parse, stats pruning, per-file reader construction — the
-# Delta/Iceberg "snapshot state" that real clients cache per version)
-# is reused within one session. Same memo family as trained_quantizer /
-# session_artifact_df: bounded, content-fingerprint-keyed, session-local.
-_READ_GEN_MEMO = __import__("collections").OrderedDict()
-_READ_GEN_MEMO_MAX = 256
-_READ_GEN_LOCK = __import__("threading").Lock()
+PLAN_MEMO_KEEP = 256  # resolved read plans kept per application
 
 
-def _plan_memo_lookup(key):
-    """Shared get half of the resolved-plan memo (r15 — factored out of
-    read_generation / generation_changes so the memo discipline lives
-    in one place; ADVICE r14)."""
-    with _READ_GEN_LOCK:
-        hit = _READ_GEN_MEMO.get(key)
-        if hit is not None:
-            _READ_GEN_MEMO.move_to_end(key)
-        return hit
-
-
-def _plan_memo_store(key, df):
-    """Shared put half: insert + LRU-evict past the bound."""
-    with _READ_GEN_LOCK:
-        _READ_GEN_MEMO[key] = df
-        while len(_READ_GEN_MEMO) > _READ_GEN_MEMO_MAX:
-            _READ_GEN_MEMO.popitem(last=False)
-    return df
+def _plan_memo(spark: SparkSession, path: str, args: tuple, resolve):
+    """The resolved LAZY DataFrame of one read of `path` (`args` name
+    it), as a session-state entry versioned by the manifest file's
+    identity: any commit saves a new manifest inode and re-resolves."""
+    # Only driver-side resolution is reused (manifest parse, stats
+    # pruning, per-file reader construction — the snapshot state
+    # Delta/Iceberg clients cache per version); the plan still scans its
+    # inputs on every execution. The DV broadcast threshold is part of
+    # the version: a changed threshold is a different plan shape. Stores
+    # without a manifest mutate without a commit, so they are not kept.
+    ident = _manifest_identity(path)
+    if ident is None:
+        return resolve()
+    return state.lookup(
+        spark.sparkContext,
+        "plan",
+        (os.path.abspath(path),) + args,
+        (ident, DV_BROADCAST_MAX_ROWS),
+        resolve,
+        bound=PLAN_MEMO_KEEP,
+    )
 
 
 def _manifest_identity(path: str):
@@ -2467,28 +2459,15 @@ def read_generation(
     where=None,
     merge_schema: bool = False,
 ) -> DataFrame:
-    ident = _manifest_identity(path)
-    key = None
-    if ident is not None:
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            repr(at),
-            repr(where),
-            bool(merge_schema),
-            ident,
-            # plan-shape tunable consulted at resolve time (broadcast vs
-            # shuffle anti-join for DV sidecars): a changed threshold is
-            # a different plan, so it is part of the plan's identity
-            DV_BROADCAST_MAX_ROWS,
-        )
-        hit = _plan_memo_lookup(key)
-        if hit is not None:
-            return hit
-    df = _read_generation_impl(spark, path, at, where, merge_schema)
-    if key is not None:
-        _plan_memo_store(key, df)
-    return df
+    """A DataFrame over exactly generation `at`'s files (head when None),
+    resolved once per manifest state (`_plan_memo`); the semantics are
+    `_read_generation_impl`'s."""
+    return _plan_memo(
+        spark,
+        path,
+        ("read", repr(at), repr(where), bool(merge_schema)),
+        lambda: _read_generation_impl(spark, path, at, where, merge_schema),
+    )
 
 
 def _read_generation_impl(
@@ -2597,33 +2576,17 @@ def generation_diff(
     key_cols: tuple[str, ...] = (),
     where=None,
 ) -> DataFrame:
-    """Memoizing wrapper over :func:`_generation_diff_impl` — the same
-    resolved-plan memo discipline as read_generation / generation_changes
-    (r15): the delta plan for a (since, until, keys, where) span is
-    deterministic given the manifest file's identity, so repeat calls
-    (the nightly incremental-dedup span, a pipeline's resume span)
-    reuse the LAZY frame instead of re-walking the manifest and
-    re-building the delta reader. No data and no results cached; any
-    commit is a new manifest inode and re-resolves."""
-    ident = _manifest_identity(path)
-    if ident is None:
-        return _generation_diff_impl(spark, path, since, until, key_cols, where)
-    key = (
-        "diff",
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        repr(since),
-        repr(until),
-        tuple(key_cols),
-        repr(where),
-        ident,
-        DV_BROADCAST_MAX_ROWS,
-    )
-    hit = _plan_memo_lookup(key)
-    if hit is not None:
-        return hit
-    return _plan_memo_store(
-        key, _generation_diff_impl(spark, path, since, until, key_cols, where)
+    """Rows added between two generations, resolved once per manifest
+    state (`_plan_memo`): repeat calls (the nightly incremental-dedup
+    span, a pipeline's resume span) reuse the lazy frame. Semantics:
+    `_generation_diff_impl`."""
+    return _plan_memo(
+        spark,
+        path,
+        ("diff", repr(since), repr(until), tuple(key_cols), repr(where)),
+        lambda: _generation_diff_impl(
+            spark, path, since, until, key_cols, where
+        ),
     )
 
 
@@ -2775,36 +2738,22 @@ def generation_changes(
     key_cols: tuple[str, ...] = (),
     compare_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Memoizing wrapper over :func:`_generation_changes_impl` — the
-    same resolved-plan memo discipline as read_generation (r14): the
-    CDF plan for a (since, until, keys) span is deterministic given
-    the manifest file's identity, so repeat calls within a session
-    reuse the LAZY frame instead of re-walking the manifest and
-    re-building the two restricted readers + full-outer join. No data
-    and no results are cached; any commit is a new manifest inode and
-    re-resolves."""
-    ident = _manifest_identity(path)
-    if ident is None:
-        return _generation_changes_impl(
-            spark, path, since, until, key_cols, compare_cols
-        )
-    key = (
-        "changes",
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        repr(since),
-        repr(until),
-        tuple(key_cols),
-        tuple(compare_cols),
-        ident,
-        DV_BROADCAST_MAX_ROWS,
-    )
-    hit = _plan_memo_lookup(key)
-    if hit is not None:
-        return hit
-    return _plan_memo_store(
-        key,
-        _generation_changes_impl(
+    """Row-level change feed between two generations, resolved once per
+    manifest state (`_plan_memo`): repeat calls reuse the lazy frame
+    instead of re-walking the manifest and rebuilding the two restricted
+    readers and the full-outer join. Semantics:
+    `_generation_changes_impl`."""
+    return _plan_memo(
+        spark,
+        path,
+        (
+            "changes",
+            repr(since),
+            repr(until),
+            tuple(key_cols),
+            tuple(compare_cols),
+        ),
+        lambda: _generation_changes_impl(
             spark, path, since, until, key_cols, compare_cols
         ),
     )

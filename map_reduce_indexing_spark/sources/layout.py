@@ -33,6 +33,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from .. import state
 from .tables import load_table
 
 
@@ -158,8 +159,6 @@ def write_zorder_clustered(
 # ---------------------------------------------------------------------------
 
 N_BUCKETS = 8
-_BUCKETED_TABLES: dict = {}
-_BUCKETED_LOCK = __import__("threading").Lock()
 
 
 def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -179,26 +178,18 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     classic Hive/Spark bucketed-warehouse design. (The session
     artifacts' letter/cell partitioning is the same idea keyed for
     pruning; bucketing keys for distribution.)"""
-    from ..operators.indexing import _content_fingerprint
-
-    # The memo key AND the table names carry a content fingerprint of
-    # both source files (session_artifact_path's keying discipline): a
-    # corpus regenerated at the same path mid-application rebuilds
-    # instead of serving stale buckets, and two applications sharing a
-    # warehouse can only ever DROP/replace a table whose name encodes
-    # the SAME corpus content (never clobber a live different one).
+    # The session-state version AND the table names carry a content
+    # fingerprint of both source files: a corpus regenerated at the same
+    # path mid-application rebuilds instead of serving stale buckets, and
+    # two applications sharing a warehouse can only ever DROP/replace a
+    # table whose name encodes the SAME corpus content (never clobber a
+    # live different one).
     fps = tuple(
-        _content_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
+        state.content_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
         for t in ("orders", "lineitem")
     )
-    with _BUCKETED_LOCK:
-        key = (spark.sparkContext.applicationId, sf_dir, fps)
-        if key in _BUCKETED_TABLES:
-            return _BUCKETED_TABLES[key]
-        for stale_key in [
-            k for k in _BUCKETED_TABLES if k[:2] == key[:2] and k != key
-        ]:
-            del _BUCKETED_TABLES[stale_key]
+
+    def write_tables() -> tuple[str, str]:
         import hashlib
 
         # md5, not hash(): PYTHONHASHSEED randomizes hash() per process,
@@ -235,5 +226,8 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
-        _BUCKETED_TABLES[key] = names
         return names
+
+    return state.lookup(
+        spark.sparkContext, "bucketed_tables", sf_dir, fps, write_tables
+    )

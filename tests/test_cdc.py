@@ -123,11 +123,20 @@ def test_incremental_agg_scans_delta_not_history(spark):
 
 
 def test_incremental_agg_base_artifact_is_reused(spark):
-    from map_reduce_indexing_spark.operators import indexing
+    from map_reduce_indexing_spark import state
     from map_reduce_indexing_spark.operators.cdc import q_cdc_incremental_agg
 
+    def base_entries():
+        return {
+            (k, version, path)
+            for k, (version, path) in state.entries(
+                spark.sparkContext, "artifact"
+            ).items()
+            if k[0] == "user_stats_base"
+        }
+
     q_cdc_incremental_agg(spark, SF_DIR).count()
-    keys_before = {k for k in indexing._ARTIFACTS if k[1] == "user_stats_base"}
+    keys_before = base_entries()
     q_cdc_incremental_agg(spark, SF_DIR).count()
-    keys_after = {k for k in indexing._ARTIFACTS if k[1] == "user_stats_base"}
+    keys_after = base_entries()
     assert keys_before == keys_after and len(keys_after) == 1

@@ -200,30 +200,22 @@ def test_centroid_broadcast_memoized_and_bounded(spark):
     """Round 9 (ADVICE): repeated assignment with the same model must
     reuse ONE broadcast; distinct models age out of the LRU (and get
     unpersisted) instead of accumulating for the application's life."""
+    from map_reduce_indexing_spark import state
     from map_reduce_indexing_spark.operators.similarity import (
-        _ASSIGN_BC,
-        _ASSIGN_BC_MAX,
+        CENTROID_BC_KEEP,
         _centroid_broadcast,
     )
 
     import numpy as np
 
     sc = spark.sparkContext
-    before = dict(_ASSIGN_BC)
-    try:
-        _ASSIGN_BC.clear()
-        cents = [[float(j + d) for d in range(4)] for j in range(3)]
-        cmat = np.asarray(cents)
-        c2 = np.asarray([float(sum(x * x for x in c)) for c in cents])
-        b1 = _centroid_broadcast(sc, cents, cmat, c2)
-        b2 = _centroid_broadcast(sc, cents, cmat, c2)
-        assert b1 is b2  # same model -> same broadcast object
-        for j in range(_ASSIGN_BC_MAX + 2):  # distinct models roll the LRU
-            c = [[float(j)] * 4]
-            _centroid_broadcast(
-                sc, c, np.asarray(c), np.asarray([4.0 * j * j])
-            )
-        assert len(_ASSIGN_BC) == _ASSIGN_BC_MAX
-    finally:
-        _ASSIGN_BC.clear()
-        _ASSIGN_BC.update(before)
+    cents = [[float(j + d) for d in range(4)] for j in range(3)]
+    cmat = np.asarray(cents)
+    c2 = np.asarray([float(sum(x * x for x in c)) for c in cents])
+    b1 = _centroid_broadcast(sc, cents, cmat, c2)
+    b2 = _centroid_broadcast(sc, cents, cmat, c2)
+    assert b1 is b2  # same model -> same broadcast object
+    for j in range(CENTROID_BC_KEEP + 2):  # distinct models roll the LRU
+        c = [[float(j)] * 4]
+        _centroid_broadcast(sc, c, np.asarray(c), np.asarray([4.0 * j * j]))
+    assert len(state.entries(sc, "centroid_broadcast")) == CENTROID_BC_KEEP

@@ -11,6 +11,8 @@ the SAME memoized model ann_ivf_trained_topk serves.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import functions as F
 
 from map_reduce_indexing_spark.operators.dedup import spark_cosine
@@ -44,7 +46,14 @@ def _exhaustive(spark):
 
 
 def test_emits_real_pairs_with_consistent_cells(spark):
-    rows = _pairs(spark).collect()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        rows = _pairs(spark).collect()
+    # the grouped-map scorer declares its pandas return type, so Spark
+    # never falls back to guessing the UDF eval type from the hints
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
     assert rows, "fixture-calibrated threshold must yield real pairs"
     cell = {
         r.vec_id: r.cell

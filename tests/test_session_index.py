@@ -200,7 +200,12 @@ def test_failed_artifact_build_is_not_cached(spark):
             spark, SF_DIR, "crashkind", "documents.parquet", flaky_build
         )
     # nothing cached for the failed build
-    assert not any(k[1] == "crashkind" for k in indexing._ARTIFACTS)
+    from map_reduce_indexing_spark import state
+
+    assert not any(
+        k[0] == "crashkind"
+        for k in state.entries(spark.sparkContext, "artifact")
+    )
     path = indexing.session_artifact_path(
         spark, SF_DIR, "crashkind", "documents.parquet", flaky_build
     )
@@ -217,23 +222,21 @@ def test_content_fingerprint_sees_nested_rewrites(tmp_path):
     import os
     import time
 
-    from map_reduce_indexing_spark.operators.indexing import (
-        _content_fingerprint,
-    )
+    from map_reduce_indexing_spark.state import content_fingerprint
 
     src = tmp_path / "documents.parquet"
     part = src / "lang=en"
     part.mkdir(parents=True)
     f = part / "part-000.parquet"
     f.write_bytes(b"v1-bytes")
-    fp1 = _content_fingerprint(str(src))
+    fp1 = content_fingerprint(str(src))
     # same top-level listing, nested file rewritten (size changes)
     f.write_bytes(b"v2-bytes-longer")
-    fp2 = _content_fingerprint(str(src))
+    fp2 = content_fingerprint(str(src))
     assert fp1 != fp2
     # same-size same-path rewrite still caught via mtime_ns
     time.sleep(0.01)
     f.write_bytes(b"v3-bytes-longer")
     os.utime(f)
-    fp3 = _content_fingerprint(str(src))
+    fp3 = content_fingerprint(str(src))
     assert fp2 != fp3

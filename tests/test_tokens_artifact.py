@@ -119,8 +119,8 @@ def test_token_rows_drop_empty_docs(spark):
 def test_index_build_chains_on_tokens_artifact(spark):
     """Since round 7 the session index builds FROM the tokens artifact
     (one corpus tokenization per session across all artifacts). The
-    nested session_artifact_path call must not self-deadlock (the
-    artifacts lock is reentrant), and the chained postings must equal
+    nested session_artifact_path call must not deadlock (each artifact
+    builds under its own entry lock), and the chained postings must equal
     the direct build path."""
     from map_reduce_indexing_spark.operators.indexing import (
         _artifact_postings,
