@@ -36,6 +36,8 @@ from .operators.indexing import (
     write_index,
 )
 from .operators.search import search_and, search_not, search_or, term_lookup
+from .sources import commitio
+from .sources.artifacts import _data_listing
 from .sources.catalog import (  # noqa: F401 — public surface
     attach_catalog,
     load_catalog,
@@ -197,25 +199,24 @@ class IndexSession:
         re-aggregates; call `compact()` to fold them in. The write
         holds the index writer lock, so an append issued while a
         compaction is mid-swap WAITS and lands on the compacted copy
-        instead of being dropped by it (indexing.index_writer_lock)."""
+        instead of being dropped by it (commitio.IO.writer_lock)."""
         docs = (
             read_corpus_dir(self.spark, corpus)
             if isinstance(corpus, str)
             else corpus
         )
-        from .operators.indexing import _recover_index_locked, index_writer_lock
 
         from .sources.generations import (
             ensure_base_generation,
             publish_generation,
         )
 
-        with index_writer_lock(self.index_path):
+        with commitio.IO.writer_lock(self.index_path):
             # Heal a crashed compaction FIRST: appending while the live
             # path is missing would recreate it with only the delta and
             # permanently orphan the full index stranded at <path>.old
             # (recover_index's path-missing guard would never fire again).
-            _recover_index_locked(self.index_path)
+            commitio.IO.recover(self.index_path)
             # snapshot isolation: the pre-append state becomes pinnable
             # before the first mutation, and every append publishes a
             # new head generation (sources/generations.py)
@@ -334,7 +335,6 @@ class IndexSession:
         append-duplicate-key-then-compact-before-refresh case)."""
         import os as _os
 
-        from .operators.indexing import index_writer_lock
         from .operators.matview import (
             create_matview,
             read_matview,
@@ -344,7 +344,7 @@ class IndexSession:
 
         view = self.index_path.rstrip("/") + "_letter_stats"
         if not _os.path.isfile(_os.path.join(view, "_matview.json")):
-            with index_writer_lock(self.index_path):
+            with commitio.IO.writer_lock(self.index_path):
                 ensure_base_generation(self.index_path)
             create_matview(
                 self.spark,
@@ -383,7 +383,6 @@ class IndexSession:
         listing; any other index (no manifest, appended files, a
         deletion vector, another writer's rewrite) keeps the
         `groupBy(word, doc_id, letter).sum(cnt)`."""
-        from .operators.indexing import _data_listing, recover_index
         from .sources.generations import _manifest_identity
 
         def state() -> tuple:
@@ -392,7 +391,7 @@ class IndexSession:
                 _data_listing(self.index_path),
             )
 
-        recover_index(self.index_path)
+        commitio.recover_index(self.index_path)
         key = state()
         if self._resolved is not None and self._resolved[0] == key:
             return self._resolved[1]

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..plans.registry import register
+from ..sources.artifacts import session_artifact_df
 from ..sources.tables import load_table
 
 # Merge key = user_id * 13: the fixtures keep |users| = |customers|/10
@@ -285,7 +286,7 @@ def _user_stats_agg(ev: DataFrame) -> DataFrame:
     doc="Incremental aggregate maintenance — the materialized-view "
     "pattern: per-user lifetime stats kept as a persisted base "
     "artifact (events before 2024-01-21, built once per session via "
-    "session_artifact_path, indexing.py:201), then MERGED with the "
+    "session_artifact_df, sources/artifacts.py), then MERGED with the "
     "delta's partial aggregate by key. Count/decimal-sum/max are "
     "mergeable monoids, so the merge provably equals the full "
     "recompute the oracle runs — while scanning only |delta| + "
@@ -295,8 +296,6 @@ def _user_stats_agg(ev: DataFrame) -> DataFrame:
     "applies continuously.",
 )
 def q_cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .indexing import session_artifact_path
-
     cutoff = F.lit(INCR_CUTOFF).cast("timestamp")
 
     def build(path: str) -> None:
@@ -316,10 +315,9 @@ def q_cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # write task. AQE coalesces genuinely-small outputs on its own.
         _user_stats_agg(base_ev).write.mode("overwrite").parquet(path)
 
-    base_path = session_artifact_path(
+    base = session_artifact_df(
         spark, sf_dir, "user_stats_base", "events.parquet", build
     )
-    base = spark.read.parquet(base_path)
     delta = _user_stats_agg(
         load_table(spark, sf_dir, "events").filter(F.col("ts") >= cutoff)
     )

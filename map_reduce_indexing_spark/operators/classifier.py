@@ -60,7 +60,7 @@ from ..localrel import local_rows_df
 from ..plans.registry import register
 from .dedup import DUCK_TOKENS_LIST
 from .textstats import _vote
-from .tokens import tokenized_docs
+from .tokens import CorpusArtifact, corpus_artifact, tokenized_docs, write_parquet
 
 CLF_L2 = 0.0009765625  # ridge lambda, 2^-10: exact in binary AND decimal
 # Statistic terms are quantized to integers — floor(term * 1e6) — and
@@ -308,35 +308,18 @@ def train_classifier(spark: SparkSession, sf_dir: str) -> list[float]:
 # ---------------------------------------------------------------------------
 
 
-def _clf_stats_spec(spark: SparkSession, sf_dir: str):
-    from .indexing import _recover_index_locked, index_writer_lock
-
-    def build(path: str) -> None:
-        clf_features(spark, sf_dir).agg(*_stats_agg_exprs()).write.parquet(
-            path
-        )
-
-    def delta_build(path: str, new_files: list[str]) -> None:
-        # The sufficient statistics are integer-quantized SUMS, so they
-        # form a mergeable summary: stats(corpus + delta) =
-        # stats(corpus) + stats(delta) EXACTLY (per-row floor
-        # quantization happens before the sum, and integer addition is
-        # associative/commutative) — which means an append-only corpus
-        # delta appends one partial row computed from the DELTA DOCS
-        # only (O(delta) work) and the retrained weights are
-        # bit-identical to a from-scratch fit. The lm_counts lifecycle
-        # (textstats.py) applied to the model-training tier.
-        from .tokens import _null_fill, build_tokenized_docs
-
-        docs = spark.read.parquet(*new_files)
-        partial = _features_from_tokens(
-            build_tokenized_docs(_null_fill(docs))
-        ).agg(*_stats_agg_exprs())
-        with index_writer_lock(path):
-            _recover_index_locked(path)
-            partial.write.mode("append").parquet(path)
-
-    return build, delta_build
+# The sufficient statistics are integer-quantized SUMS, so they form a
+# mergeable summary: stats(corpus + delta) = stats(corpus) + stats(delta)
+# EXACTLY (per-row floor quantization happens before the sum, and
+# integer addition is associative/commutative). A corpus delta therefore
+# appends one partial row computed from the delta docs only, and the
+# retrained weights are bit-identical to a from-scratch fit — the
+# LM_COUNTS lifecycle (textstats.py) applied to the model-training tier.
+CLF_STATS = CorpusArtifact(
+    "session_clf_stats",
+    lambda tokenized: _features_from_tokens(tokenized).agg(*_stats_agg_exprs()),
+    write_parquet,
+)
 
 
 def clf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,17 +328,7 @@ def clf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus content). Consumers merge by summing per column
     (train_classifier_from_stats); no compaction tier is needed — the
     artifact holds ONE ~22-column row per append."""
-    from .indexing import session_artifact_df
-
-    build, delta_build = _clf_stats_spec(spark, sf_dir)
-    return session_artifact_df(
-        spark,
-        sf_dir,
-        "session_clf_stats",
-        "documents.parquet",
-        build,
-        delta_build=delta_build,
-    )
+    return corpus_artifact(spark, sf_dir, CLF_STATS)
 
 
 def train_classifier_from_stats(spark: SparkSession, sf_dir: str) -> list[float]:

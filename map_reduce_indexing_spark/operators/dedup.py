@@ -29,7 +29,19 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.text import duckdb_tokens_sql
 from ..plans.registry import register
+from ..sources.artifacts import session_artifact_path
 from ..sources.tables import load_table
+from .tokens import (
+    CorpusArtifact,
+    _null_fill,
+    build_tokenized_docs,
+    corpus_artifact,
+    gram_expr,
+    gram_rows,
+    token_rows,
+    tokenized_docs,
+    write_parquet,
+)
 
 # ---- shared deterministic constants (inlined into BOTH engines) -----------
 
@@ -110,7 +122,6 @@ def shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(tokens^2) per doc, ~8x slower measured at sf0.1. A stored array
     column has no such trap — element access is plain memory access.)
     """
-    from .tokens import gram_rows  # function-local: tokens imports dedup
 
     return gram_rows(spark, sf_dir, SHINGLE_K, distinct=True, out_col="s")
 
@@ -281,10 +292,22 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    spark: SparkSession, sf_dir: str, shingles: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, sig array<bigint>[K_MINHASH]).
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sig array<bigint>[K_MINHASH]) of the corpus, computed
+    directly (`session_signatures` serves the persisted artifact)."""
+    return signatures_from_shingles(shingle_rows(spark, sf_dir))
+
+
+def shingles_from_tokens(tokenized: DataFrame) -> DataFrame:
+    """(doc_id, s): distinct word shingles of a `build_tokenized_docs`
+    frame — `shingle_rows` over any tokenized frame."""
+    return tokenized.select(
+        "doc_id", F.explode(F.expr(gram_expr(SHINGLE_K, True))).alias("s")
+    )
+
+
+def signatures_from_shingles(shingles: DataFrame) -> DataFrame:
+    """(doc_id, sig array<bigint>[K_MINHASH]) of a (doc_id, s) frame.
 
     Physical shape: explode distinct shingles, hash each ONCE (md5 is the
     expensive part), then one hash-aggregate computing all K permutation
@@ -293,14 +316,8 @@ def minhash_signatures(
     Catalyst's projection collapse inlines the hash array into every
     permutation lambda, recomputing md5 K times in interpreted HOFs —
     ~20x slower, measured.) Shuffle volume: docs x K longs, minimal.
-
-    `shingles` lets a composed pipeline (dedup_clusters) pass an
-    already-checkpointed shingle frame so the tokenize+shingle lineage
-    runs once, not once per consumer.
     """
-    exploded = (
-        shingles if shingles is not None else shingle_rows(spark, sf_dir)
-    ).withColumn("h", F.expr(spark_hash("s")))
+    exploded = shingles.withColumn("h", F.expr(spark_hash("s")))
     mins = [
         F.min(F.expr(f"({a}L * h + {b}L) % {P}")).alias(f"m{i}")
         for i, (a, b) in enumerate(PERMS)
@@ -311,53 +328,31 @@ def minhash_signatures(
     )
 
 
+# A signature row is keyed by its doc_id, so a corpus delta appends
+# exactly the delta docs' signatures (tokenize + shingle + hash over the
+# delta only).
+SIGNATURES = CorpusArtifact(
+    "session_minhash_sigs",
+    lambda tokenized: signatures_from_shingles(shingles_from_tokens(tokenized)),
+    write_parquet,
+)
+
+
 def session_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig): the MinHash signature table as a session artifact —
-    built ONCE per (Spark application, corpus content) via the same
-    machinery as the tokens artifact and the inverted index
-    (indexing.session_artifact_df), then served as a cached parquet
-    read to every dedup consumer (lsh_pairs, clusters, estimate,
-    recall_eval). Before this, each consumer re-ran the shingle+hash+
-    min pipeline — and a consumer referencing the signatures from
-    several subtrees (dedup_minhash_estimate: candidates + both join
-    sides) re-ran it once PER SUBTREE, since exchange reuse does not
-    fire across differently-pruned sides. At 100 TB the signature pass
-    is a full-corpus job; every dedup run after the first should read
-    docs x K longs instead. The flagship `dedup_minhash_signatures`
-    query keeps the direct pipeline — it exists to measure the build."""
-    from .indexing import session_artifact_df
-
-    def build(path: str) -> None:
-        minhash_signatures(spark, sf_dir).write.parquet(path)
-
-    def delta_build(path: str, new_files: list[str]) -> None:
-        # Incremental maintenance (round 8): a signature row is keyed
-        # by its doc_id, so an append-only corpus delta appends exactly
-        # the delta docs' signatures — tokenize + shingle + hash runs
-        # over the delta only (same new-doc_ids contract and flock
-        # discipline as the index delta).
-        from .indexing import _recover_index_locked, index_writer_lock
-        from .tokens import _null_fill, build_tokenized_docs, gram_expr
-
-        docs = spark.read.parquet(*new_files)
-        shingles = build_tokenized_docs(_null_fill(docs)).select(
-            "doc_id",
-            F.explode(F.expr(gram_expr(SHINGLE_K, True))).alias("s"),
-        )
-        with index_writer_lock(path):
-            _recover_index_locked(path)
-            minhash_signatures(spark, sf_dir, shingles=shingles).write.mode(
-                "append"
-            ).parquet(path)
-
-    return session_artifact_df(
-        spark,
-        sf_dir,
-        "session_minhash_sigs",
-        "documents.parquet",
-        build,
-        delta_build=delta_build,
-    )
+    built ONCE per (Spark application, corpus content) through the
+    corpus-artifact lifecycle (tokens.corpus_artifact), then served as
+    a cached parquet read to every dedup consumer (lsh_pairs, clusters,
+    estimate, recall_eval). Before this, each consumer re-ran the
+    shingle+hash+min pipeline — and a consumer referencing the
+    signatures from several subtrees (dedup_minhash_estimate:
+    candidates + both join sides) re-ran it once PER SUBTREE, since
+    exchange reuse does not fire across differently-pruned sides. At
+    100 TB the signature pass is a full-corpus job; every dedup run
+    after the first should read docs x K longs instead. The flagship
+    `dedup_minhash_signatures` query keeps the direct pipeline — it
+    exists to measure the build."""
+    return corpus_artifact(spark, sf_dir, SIGNATURES)
 
 
 DUCK_MINHASH_SIG = f"""
@@ -473,7 +468,6 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one doc_id shuffle (vs interpreted array lambdas: ~5x slower).
     Token occurrences come from the session tokens artifact (repeats
     weigh, so this is the non-distinct explode), not a corpus re-scan."""
-    from .tokens import token_rows  # function-local: tokens imports dedup
 
     e = token_rows(spark, sf_dir, out_col="t").withColumn(
         "h", F.expr(spark_hash("t"))
@@ -689,7 +683,6 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     + array_distinct, zero Exchange, zero Generate. Replaces the
     explode + groupBy(doc_id).collect_set shape, which shuffled every
     doc's full shingle set just to reassemble rows that already existed."""
-    from .tokens import gram_expr, tokenized_docs
 
     sets = tokenized_docs(spark, sf_dir).select(
         "doc_id", F.expr(f"array_distinct({gram_expr(SHINGLE_K)})").alias("sh")
@@ -1141,7 +1134,6 @@ DUCK_PASSAGE_GRAMS = f"""
 def _passage_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, g): per-doc DISTINCT word {PASSAGE_K}-grams, a per-row
     comprehension over the tokens artifact (tokens.gram_rows)."""
-    from .tokens import gram_rows
 
     return gram_rows(spark, sf_dir, PASSAGE_K, distinct=True, out_col="g")
 
@@ -1211,8 +1203,6 @@ def q_dedup_common_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     "passages; here it flows through the shuffled equi-join.",
 )
 def q_dedup_boilerplate_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tokens import gram_expr, tokenized_docs
-
     g = _passage_grams(spark, sf_dir)
     common = (
         g.groupBy("g")
@@ -1396,7 +1386,6 @@ def documents_incremental_store(spark: SparkSession, sf_dir: str) -> str:
     query consumes the span via generation_diff, so the demo exercises
     the real store plumbing, not a filter re-derivation."""
     from ..sources.generations import publish_generation
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -1455,14 +1444,12 @@ def _sig_bands(sig: DataFrame) -> DataFrame:
 )
 def q_dedup_incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.generations import generation_diff
-    from .tokens import _null_fill, build_tokenized_docs, gram_expr
 
     store = documents_incremental_store(spark, sf_dir)
     batch = generation_diff(spark, store, since=1, until=2)
-    shingles = build_tokenized_docs(_null_fill(batch)).select(
-        "doc_id", F.explode(F.expr(gram_expr(SHINGLE_K, True))).alias("s")
+    delta_bands = _sig_bands(
+        SIGNATURES.derive(build_tokenized_docs(_null_fill(batch)))
     )
-    delta_bands = _sig_bands(minhash_signatures(spark, sf_dir, shingles=shingles))
     corpus_bands = _sig_bands(session_signatures(spark, sf_dir))
     pairs = corpus_bands.alias("a").join(
         F.broadcast(delta_bands.alias("b")),
@@ -1489,8 +1476,6 @@ def docs_pipeline_demo(spark: SparkSession, sf_dir: str) -> str:
     one full transform."""
     from ..sources.generations import publish_generation
     from ..sources.pipeline import run_incremental_pipeline
-    from .indexing import session_artifact_path
-    from .tokens import _null_fill, build_tokenized_docs
 
     def transform(df: DataFrame) -> DataFrame:
         return build_tokenized_docs(_null_fill(df)).select(

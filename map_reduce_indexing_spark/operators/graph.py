@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources.artifacts import session_artifact_df
 from ..sources.tables import load_table
 from ..plans.registry import register
 
@@ -203,12 +204,12 @@ def session_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers every input table, so any fixture change rebuilds. Values
     identical by construction: the artifact is trade_edges()'s own
     rows round-tripped through parquet (BIGINT/strings, exact)."""
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
+        # one file: grouped by (source, dest) nation, so <= 25 x 25 rows at any scale
         trade_edges(spark, sf_dir).coalesce(1).write.parquet(path)
 
-    p = session_artifact_path(
+    return session_artifact_df(
         spark,
         sf_dir,
         "trade_edges",
@@ -221,7 +222,6 @@ def session_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         build,
     )
-    return spark.read.parquet(p)
 
 
 def _duck_pagerank_ctes(rounds: int, damping: float) -> str:

@@ -23,15 +23,14 @@ token count; AQE skew handling covers the residual imbalance.
 
 from __future__ import annotations
 
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import state
 from ..functions.text import duckdb_tokens_sql, tokenize
 from ..plans.registry import register
+from ..sources import commitio
+from ..sources.artifacts import compact_artifact, read_live
 from ..sources.tables import load_table
+from .tokens import CorpusArtifact, corpus_artifact, corpus_artifact_path
 
 
 def build_postings(docs: DataFrame, doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -130,55 +129,8 @@ def read_index(spark: SparkSession, path: str) -> DataFrame:
     serves its queries from that frame; it skips its re-aggregation
     only when the head is `compact_index`'s output (`unique_keys`),
     has no deletion vector, and lists exactly the live files."""
-    from ..sources.generations import _dv_anti, load_manifest
-
-    recover_index(path)
-    df = spark.read.parquet(path)
-    m = load_manifest(path)
-    g = (m or {}).get("gens", {}).get(str((m or {}).get("head", 0)))
-    dv = (g or {}).get("dv")
-    if dv:
-        side = spark.read.parquet(os.path.join(path, dv["file"]))
-        # Manifest-exact vector size: a small sidecar broadcasts (no
-        # exchange of the index scan); only a vector past the guard
-        # degrades to a shuffle-hash anti-join.
-        df = _dv_anti(df, side, int(dv.get("rows") or 0))
-    return df
-
-
-@contextmanager
-def index_writer_lock(path: str):
-    """Serialize WRITERS of one index directory: a blocking exclusive
-    flock on a sibling `<path>.lock` file (sibling, not inside — the
-    compaction swap replaces the directory itself).
-
-    Closes the compact-vs-append race: an `append()` landing between
-    compaction's read and its swap would be silently dropped, and two
-    concurrent compactors would clobber each other's renames. Every
-    mutation (`IndexSession.append`, `compact_index`, and the acting
-    branch of `recover_index`) enters here first, so a concurrent
-    writer BLOCKS until the holder finishes — the interleaving above
-    becomes append-after-compact, and no postings are lost
-    (tests/test_session_index.py proves both properties).
-
-    flock scope is one host / one shared POSIX filesystem — exactly the
-    single-node reality of the reference's ./index (whose appends were
-    unlocked, SURVEY.md §2.12). On an object store the same role is
-    played by the metastore's table lock / atomic pointer swap. Each
-    call opens its own fd, so the lock also serializes threads within
-    one process (flock treats separate open file descriptions
-    independently). Both scopes are tested: thread-pair interleavings
-    in tests/test_api.py / test_session_index.py, and the cross-
-    process guarantee (a holder in another interpreter blocks this
-    session's append, and vice versa) in
-    test_api.test_writer_lock_excludes_across_processes. Readers never
-    enter: reads are safe against the swap via `recover_index`
-    self-healing.
-    """
-    from ..sources.commitio import IO
-
-    with IO.writer_lock(path):
-        yield
+    commitio.recover_index(path)
+    return read_live(spark, path)
 
 
 def compact_index(spark: SparkSession, path: str) -> None:
@@ -189,9 +141,10 @@ def compact_index(spark: SparkSession, path: str) -> None:
     foreachBatch) accumulates one partial-count row per (word, doc)
     PER APPEND — reads stay correct only if they re-aggregate, and file
     counts grow without bound. Compaction is the standard log-structured
-    fix. The whole read-merge-swap runs under `index_writer_lock`, so
-    appends issued mid-compaction wait and land on the compacted copy
-    instead of vanishing in the swap. The rewrite stages to a sibling
+    fix. The whole read-merge-swap runs under the writer lock
+    (`commitio.IO.writer_lock`), so appends issued mid-compaction wait
+    and land on the compacted copy instead of vanishing in the swap
+    (`sources.artifacts.compact_artifact`). The rewrite stages to a sibling
     directory, renames the live index ASIDE, moves staging into place,
     then deletes the old copy. A crash at any point leaves a complete
     copy ON DISK — the new one at `path`, or the old one at `path` or
@@ -219,130 +172,11 @@ def compact_index(spark: SparkSession, path: str) -> None:
     )
 
 
-# Probed ONCE at import: os.umask is process-global and read-by-set,
-# so probing it per call would open a recurring race window. Linux
-# exposes the value race-free in /proc/self/status (Umask:, kernel
-# 4.7+); only when that is unavailable fall back to the set-probe —
-# and probe RESTRICTIVE (0o077): if another thread creates a file
-# inside the window, it comes out over-protected, never
-# world-permissive (the old os.umask(0) probe briefly made the whole
-# process world-writable-by-default).
-def _read_umask() -> int:
-    try:
-        with open("/proc/self/status") as fh:
-            for line in fh:
-                if line.startswith("Umask:"):
-                    return int(line.split()[1], 8)
-    except OSError:
-        pass
-    prev = os.umask(0o077)
-    os.umask(prev)
-    return prev
-
-
-_UMASK = _read_umask()
-
-
-def _chmod_staging(staging: str) -> None:
-    """mkdtemp creates 0700 directories; a staged swap then publishes
-    that mode as the live store/index, making an artifact built on
-    shared storage unreadable to every other user/process. Re-apply the
-    umask (what a plain mkdir would have produced) before the swap."""
-    os.chmod(staging, 0o777 & ~_UMASK)
-
-
-def compact_artifact(
-    spark: SparkSession,
-    path: str,
-    rewrite,
-    df_source=None,
-    entry_extra: dict | None = None,
-) -> None:
-    """The locked read -> rewrite -> staged-swap engine behind every
-    persisted artifact's compaction (count index above, bucketed
-    vector store in operators/similarity.py). `rewrite(df, staging)`
-    writes the compacted form of the artifact's current contents to
-    the staging directory; crash-safety and locking semantics are
-    exactly `compact_index`'s docstring — this IS that code, factored
-    so each artifact only supplies its merge/layout step.
-
-    `df_source(spark) -> DataFrame` overrides the input read (called
-    under the lock). The default is the live directory scan — the
-    index artifacts' semantic, where an append's rows are visible the
-    moment they land; generation-store rewrites pass a precise
-    head-listing read instead (generations.optimize_store), so a
-    crashed optimistic placement can never be folded into the
-    compacted store.
-
-    `entry_extra` merges caller metadata into the head generation the
-    compaction publishes (`carry_generations`); e.g. `compact_index`
-    records the rewrite's unique keys."""
-    import tempfile
-
-    from ..sources.commitio import IO
-    from ..sources.generations import carry_generations
-
-    with index_writer_lock(path):
-        _recover_index_locked(path)
-        if df_source is not None:
-            df = df_source(spark)
-        else:
-            # live directory scan, DV-aware: a head deletion vector
-            # (delete_docs/delete_ids mode='dv') must not survive the
-            # fold — the rewrite reads the LOGICAL rows so its output
-            # files are clean and the new entry carries no vector
-            from ..sources.generations import _dv_anti, load_manifest
-
-            df = spark.read.parquet(path)
-            m0 = load_manifest(path)
-            g0 = (m0 or {}).get("gens", {}).get(
-                str((m0 or {}).get("head", 0))
-            )
-            dv = (g0 or {}).get("dv")
-            if dv:
-                side = spark.read.parquet(os.path.join(path, dv["file"]))
-                df = _dv_anti(df, side, int(dv.get("rows") or 0))
-        staging = tempfile.mkdtemp(
-            prefix="mri_compact_", dir=os.path.dirname(path) or "."
-        )
-        _chmod_staging(staging)
-        rewrite(df, staging)
-        # Snapshot support: relocate pinned generations into staging
-        # (hardlinks; live path untouched) and stage the post-swap
-        # manifest so data + generations commit atomically. No-op for
-        # stores that never published a generation. The session is
-        # passed through so a bulk rewrite's stats/bloom rebuild runs
-        # as one Spark job over the staged file list.
-        carry_generations(path, staging, spark=spark, entry_extra=entry_extra)
-        IO.publish_swap(path, staging)
-
-
-def recover_index(path: str) -> None:
-    """Heal a crashed swap: if the backend reports crash residue (a
-    stranded `.old` copy under POSIX, a swap journal under CAS),
-    restore/complete it. The heal itself takes the writer lock
-    (re-checking under it), so a reader racing a LIVE rewriter's swap
-    window blocks instead of interfering; the no-op fast path stays
-    lock-free."""
-    from ..sources.commitio import IO
-
-    if IO.needs_recovery(path):
-        with index_writer_lock(path):
-            _recover_index_locked(path)
-
-
-def _recover_index_locked(path: str) -> None:
-    from ..sources.commitio import IO
-
-    IO.recover(path)
-
-
 def postings_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Postings computed from the corpus — the BUILD path. Used by the
     `index_postings` flagship query (which measures the reference's
-    whole map/shuffle/reduce pipeline) and by `session_index_path` to
-    materialize the artifact; every other index/search query reads the
-    persisted artifact via `indexed_postings`."""
+    whole map/shuffle/reduce pipeline); every other index/search query
+    reads the persisted artifact via `indexed_postings`."""
     return build_postings(load_table(spark, sf_dir, "documents"))
 
 
@@ -350,225 +184,25 @@ def postings_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session-scoped persisted index: the reference's build-then-query lifecycle
 # ---------------------------------------------------------------------------
 
-SOURCES_FILE = "_sources.json"  # consumed-source listing (leading "_":
-# invisible to Spark scans, same convention as the vector-store sidecars)
 
-
-def _data_listing(src: str) -> dict[str, list[int]]:
-    """{relpath: [size, mtime_ns]} of a directory source's DATA files.
-    Hidden files (_SUCCESS, .crc) are excluded on both sides of the
-    delta comparison: Spark readers ignore them, and an append-mode
-    write refreshes _SUCCESS's mtime — which must not demote an
-    append-only corpus growth to a full rebuild."""
-    out: dict[str, list[int]] = {}
-    for root, dirs, files in os.walk(src):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        for name in sorted(files):
-            if name.startswith(("_", ".")):
-                continue
-            p = os.path.join(root, name)
-            st = os.stat(p)
-            out[os.path.relpath(p, src)] = [st.st_size, st.st_mtime_ns]
-    return out
-
-
-def _load_sources(path: str) -> dict[str, list[int]] | None:
-    import json
-
-    p = os.path.join(path, SOURCES_FILE)
-    if os.path.isfile(p):
-        with open(p) as f:
-            return json.load(f)
-    return None
-
-
-def _save_sources(path: str, listing: dict[str, list[int]]) -> None:
-    import json
-
-    tmp = os.path.join(path, SOURCES_FILE) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(listing, f)
-    os.replace(tmp, os.path.join(path, SOURCES_FILE))
-
-
-def _delta_ids_are_new(
-    spark: SparkSession, old_files: list[str], new_files: list[str]
-) -> bool:
-    """True iff the appended files' doc_ids are disjoint from the
-    already-consumed files' — the append-only delta contract. One
-    column-pruned doc_id scan per side, the delta side broadcast
-    (it is delta-sized); corpora without a doc_id column have no
-    per-doc contract to check."""
-    if not old_files:
-        return True
-    new_df = spark.read.parquet(*new_files)
-    if "doc_id" not in new_df.columns:
-        return True
-    overlap = (
-        spark.read.parquet(*old_files)
-        .select("doc_id")
-        .join(F.broadcast(new_df.select("doc_id").distinct()), "doc_id")
-        .limit(1)
-        .count()
-    )
-    return overlap == 0
-
-
-def session_artifact_path(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str,
-    source_file: str,
-    build,
-    delta_build=None,
-) -> str:
-    """Generic once-per-(Spark application, source content) persisted
-    artifact: the reference's build-then-query lifecycle for any derived
-    store (count index, positional index, bucketed embedding store).
-    `build(path)` must write the artifact at `path`.
-
-    One session-state entry per (kind, source), versioned by the
-    source's content fingerprint (a tuple `source_file` fingerprints
-    every input), so a regenerated source rebuilds rather than serving
-    stale data, and concurrent first calls build once.
-
-    Placement: `$SPARK_GRAFT_INDEX_DIR` if set (point it at shared
-    storage — HDFS mount / object-store fuse — on a real cluster, the
-    reference's shared ./index location), else a driver-local tempdir,
-    which is only readable by executors in local mode. Either way the
-    directory is removed at interpreter exit.
-    """
-    if isinstance(source_file, (tuple, list)):
-        src = tuple(
-            os.path.join(os.path.realpath(sf_dir), s) for s in source_file
-        )
-        fingerprint = tuple(state.content_fingerprint(s) for s in src)
-    else:
-        src = os.path.join(os.path.realpath(sf_dir), source_file)
-        fingerprint = state.content_fingerprint(src)
-    sc = spark.sparkContext
-    incremental = (
-        delta_build is not None and isinstance(src, str) and os.path.isdir(src)
-    )
-
-    def refresh() -> str:
-        prev = state.entries(sc, "artifact").get((kind, src))
-        if (
-            incremental
-            and prev is not None
-            and os.path.isdir(prev[1])
-            and _delta_refresh(spark, src, prev[1], delta_build)
-        ):
-            return prev[1]
-        import atexit
-        import shutil
-        import tempfile
-
-        base = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-        if base:
-            os.makedirs(base, exist_ok=True)
-        workdir = tempfile.mkdtemp(prefix=f"mri_{kind}_", dir=base)
-        atexit.register(shutil.rmtree, workdir, True)
-        path = os.path.join(workdir, kind)
-        # Snapshot the consumed listing BEFORE the build runs: a file
-        # dropped into the corpus DURING the Spark job may or may not
-        # have entered the job's input, so recording the post-build
-        # listing could skip its docs forever (consumed-but-unread),
-        # while recording the pre-build one could duplicate them
-        # (read-and-also-delta'd). Resolution: save the sidecar ONLY
-        # when the listing is identical before and after the build —
-        # otherwise leave no sidecar, and the next fingerprint change
-        # takes the (always-correct) full rebuild.
-        listing = _data_listing(src) if incremental else None
-        build(path)
-        if listing is not None and _data_listing(src) == listing:
-            _save_sources(path, listing)
-        return path
-
-    return state.lookup(
-        sc, "artifact", (kind, src), fingerprint, refresh, valid=os.path.isdir
+def postings_from_tokens(tokenized: DataFrame) -> DataFrame:
+    """Postings (word, doc_id, cnt) of a `tokens.build_tokenized_docs`
+    frame. explode(ws) == tokenize() (property-tested in
+    tests/test_tokens_artifact.py / test_tokenizer.py), so this equals
+    `build_postings` over the same documents."""
+    return (
+        tokenized.select("doc_id", F.explode("ws").alias("word"))
+        .groupBy("word", "doc_id")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def _delta_refresh(spark: SparkSession, src: str, path: str, delta_build) -> bool:
-    """Incremental maintenance: if the directory source `src` changed
-    APPEND-ONLY since the artifact at `path` was built, run
-    `delta_build(path, new_files)` over just the delta, publish it as a
-    new generation and return True; else False (full rebuild)."""
-    # Every file the artifact consumed must be byte-identical, only new
-    # data files may appear. The consumed listing persists as a
-    # _sources.json sidecar inside the artifact, so the comparison is
-    # against what was actually built, not an in-memory guess.
-    consumed = _load_sources(path)
-    current = _data_listing(src)
-    if consumed is None or any(
-        current.get(p) != meta for p, meta in consumed.items()
-    ):
-        return False
-    new_files = sorted(set(current) - set(consumed))
-    # The delta contract every incremental artifact relies on — appended
-    # files hold only NEW doc_ids — is checked here, once for all
-    # artifacts: a file re-adding an existing doc_id would double-count
-    # its rows, so an overlap takes the full rebuild, always correct.
-    if not new_files or not _delta_ids_are_new(
-        spark,
-        [os.path.join(src, p) for p in consumed],
-        [os.path.join(src, p) for p in new_files],
-    ):
-        return False
-    from ..sources.generations import ensure_base_generation, publish_generation
-
-    # snapshot isolation for the artifact tier: the pre-delta state
-    # becomes pinnable, each delta publishes a new head (read back with
-    # session_artifact_df(..., at=)). Lock taken and RELEASED around each
-    # manifest touch — delta_build takes the same flock itself and flock
-    # does not nest across fds in-process.
-    with index_writer_lock(path):
-        ensure_base_generation(path)
-    delta_build(path, [os.path.join(src, p) for p in new_files])
-    with index_writer_lock(path):
-        publish_generation(path)
-    _save_sources(path, current)
-    return True
-
-
-def session_artifact_df(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str,
-    source_file: str,
-    build,
-    delta_build=None,
-    at: int | None = None,
-) -> DataFrame:
-    """`session_artifact_path` + a cached partition-discovered read.
-
-    Hive partition discovery + schema inference over a many-partition
-    artifact costs ~0.5 s of driver time PER `spark.read.parquet` call,
-    so the discovered DataFrame (a logical plan) is a session-state
-    entry per artifact, versioned by its manifest identity and directory
-    stat: a delta publishes a new manifest and a compaction swaps the
-    directory, so either re-discovers the file listing.
-
-    `at=` pins a published GENERATION of the artifact (snapshot
-    isolation, sources/generations.py): incremental delta appends
-    publish one per delta, so a multi-query session can keep reading
-    the exact pre-append row set while the corpus grows underneath it."""
-    from ..sources.generations import _manifest_identity, read_generation
-
-    path = session_artifact_path(
-        spark, sf_dir, kind, source_file, build, delta_build
-    )
-    if at is not None:
-        return read_generation(spark, path, at=at)
-    st = os.stat(path)
-    return state.lookup(
-        spark.sparkContext,
-        "artifact_read",
-        path,
-        (_manifest_identity(path), st.st_ino, st.st_mtime_ns),
-        lambda: spark.read.parquet(path),
-    )
+# An append-only corpus delta contributes postings keyed by NEW doc_ids,
+# and groupBy(word, doc_id) never merges rows across documents, so
+# appending the delta's own postings is exactly the full rebuild — the
+# reference's append sink (helper_reduce.c:241). The letter layout is
+# unchanged, so consumer pruning is unchanged.
+SESSION_INDEX = CorpusArtifact("session_index", postings_from_tokens, write_index)
 
 
 def session_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -579,59 +213,16 @@ def session_index_path(spark: SparkSession, sf_dir: str) -> str:
     The reference's lifecycle is build-then-query: client.c:39 submits
     an indexing job whose artifact is ./index/a..z, and every later
     lookup scans those files (helper_reduce.c:238-257) — it does not
-    re-tokenize the corpus per query. This cache reproduces that: the
+    re-tokenize the corpus per query. This artifact reproduces that: the
     first index/search query in a session pays the one tokenize +
     aggregate + write build; every later one is a partition-pruned scan
     of the persisted artifact. At 100 TB this is the difference between
     a full corpus pass per query and reading 1/26th of an index.
 
-    Caching / invalidation / placement semantics: `session_artifact_path`.
+    Lifecycle (build chained on the tokens artifact, corpus deltas
+    appended): `tokens.corpus_artifact_path`.
     """
-    return session_artifact_path(
-        spark,
-        sf_dir,
-        "session_index",
-        "documents.parquet",
-        lambda path: write_index(_artifact_postings(spark, sf_dir), path),
-        delta_build=_index_delta_build(spark),
-    )
-
-
-def _index_delta_build(spark: SparkSession):
-    """Incremental maintenance for the session index (round 8): an
-    append-only corpus delta contributes postings rows keyed by NEW
-    doc_ids, so appending the delta's own aggregation is EXACTLY the
-    full rebuild's output (groupBy(word, doc_id) never merges rows
-    across documents) — the reference's append-sink lifecycle
-    (helper_reduce.c:241) with the same new-doc_ids contract as
-    IndexSession.append. The delta is tokenized directly (it is tiny);
-    the letter layout is unchanged, so consumer pruning is unchanged."""
-
-    def delta(path: str, new_files: list[str]) -> None:
-        docs = spark.read.parquet(*new_files)
-        with index_writer_lock(path):
-            _recover_index_locked(path)
-            write_index(build_postings(docs), path, mode="append")
-
-    return delta
-
-
-def _artifact_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Postings derived from the session tokens artifact rather than a
-    fresh corpus tokenization — since round 7 the index build CHAINS on
-    the tokens artifact, so one session tokenizes the corpus exactly
-    once no matter which mix of index/search/text/dedup queries runs
-    (explode(ws) == tokenize(), property-tested in
-    tests/test_tokens_artifact.py / test_tokenizer.py). The flagship
-    `index_postings` query keeps the direct `postings_for` path — it
-    exists to measure the reference's whole pipeline from raw text."""
-    from .tokens import token_rows  # function-local: tokens imports this module
-
-    return (
-        token_rows(spark, sf_dir, out_col="word")
-        .groupBy("word", "doc_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return corpus_artifact_path(spark, sf_dir, SESSION_INDEX)
 
 
 def indexed_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,14 +232,7 @@ def indexed_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, so `letter = 'x'` predicates prune 25/26 of the files before
     any row is read, and the within-file word sort gives min/max zone
     maps that skip row groups inside the partition."""
-    return session_artifact_df(
-        spark,
-        sf_dir,
-        "session_index",
-        "documents.parquet",
-        lambda path: write_index(_artifact_postings(spark, sf_dir), path),
-        delta_build=_index_delta_build(spark),
-    )
+    return corpus_artifact(spark, sf_dir, SESSION_INDEX)
 
 
 # ---------------------------------------------------------------------------

@@ -78,7 +78,7 @@ homomorphic aggregates, which is exactly what makes it exact:
   underscore-prefixed, invisible to a plain read of the view root)
   plus a `_matview.json` sidecar (base path, pinned base generation,
   spec), written via staged `os.replace` swap under
-  `index_writer_lock(view_path)` — a crash leaves the old view + old
+  `commitio.IO.writer_lock(view_path)` — a crash leaves the old view + old
   sidecar (the pinned generation is re-consumable because generations
   are immutable and retained), a torn state is impossible.
 
@@ -119,6 +119,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import commitio
 from ..sources.generations import (
     diff_plan,
     generation_diff,
@@ -441,17 +442,14 @@ def _write_view(
     import contextlib
     import tempfile
 
-    from ..sources.commitio import IO
-    from .indexing import _chmod_staging, index_writer_lock
-
     guard = (
-        contextlib.nullcontext() if locked else index_writer_lock(view_path)
+        contextlib.nullcontext() if locked else commitio.IO.writer_lock(view_path)
     )
     with guard:
         staging = tempfile.mkdtemp(
             prefix="mri_matview_", dir=os.path.dirname(view_path) or "."
         )
-        _chmod_staging(staging)
+        commitio.chmod_staging(staging)
         df.write.mode("overwrite").parquet(staging)
         for name, sup in (supports or {}).items():
             dst = os.path.join(staging, f"_support_{name}")
@@ -469,7 +467,7 @@ def _write_view(
                         os.path.join(src_dir, f)
                     ):
                         continue
-                    IO.link_or_copy(
+                    commitio.IO.link_or_copy(
                         os.path.join(src_dir, f), os.path.join(dst, f)
                     )
                 delta.write.mode("append").parquet(dst)
@@ -477,7 +475,7 @@ def _write_view(
                 sup.write.mode("overwrite").parquet(dst)
         with open(os.path.join(staging, MATVIEW_FILE), "w") as fh:
             json.dump(sidecar, fh)
-        IO.publish_swap(view_path, staging)
+        commitio.IO.publish_swap(view_path, staging)
 
 
 def create_matview(
@@ -593,9 +591,8 @@ def refresh_matview(spark: SparkSession, view_path: str) -> dict:
     span would each merge the delta into the other's already-merged
     result — double counting. Serialized, the second refresher sees
     the advanced pin and no-ops (tests/test_matview.py)."""
-    from .indexing import index_writer_lock
 
-    with index_writer_lock(view_path):
+    with commitio.IO.writer_lock(view_path):
         return _refresh_locked(spark, view_path)
 
 
@@ -1251,9 +1248,8 @@ def drop_matview(view_path: str) -> None:
     import shutil
 
     from ..sources.generations import drop_tag
-    from .indexing import index_writer_lock
 
-    with index_writer_lock(view_path):
+    with commitio.IO.writer_lock(view_path):
         try:
             spec = _load_spec(view_path)
         except OSError:

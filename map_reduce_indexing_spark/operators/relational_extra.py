@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..localrel import local_rows_df
 from ..plans.registry import register
+from ..sources.artifacts import session_artifact_path
 from ..sources.tables import load_table, register_views
 from .relational import dec, dsum, sql_dec, sql_dsum
 
@@ -661,7 +662,6 @@ def orders_snapshot_store(spark: SparkSession, sf_dir: str) -> str:
     plan_generation_scan)."""
     from ..sources.generations import publish_generation
     from ..sources.layout import write_range_clustered
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         write_range_clustered(
@@ -734,7 +734,6 @@ def orders_matview_demo(spark: SparkSession, sf_dir: str) -> str:
     the full-table aggregate, so the external hash match certifies
     incremental == full recompute."""
     from ..sources.generations import publish_generation
-    from .indexing import session_artifact_path
     from .matview import create_matview, refresh_matview
 
     def build(path: str) -> None:
@@ -817,7 +816,6 @@ def orders_matview_distinct_demo(spark: SparkSession, sf_dir: str) -> str:
     BOTH exported queries: the view read at its own grain and the
     rollup routed to the coarser month grain."""
     from ..sources.generations import publish_generation
-    from .indexing import session_artifact_path
     from .matview import create_matview, refresh_matview
 
     def build(path: str) -> None:
@@ -943,7 +941,6 @@ def lineitem_orders_join_matview_demo(spark: SparkSession, sf_dir: str) -> str:
     certifies the telescoping delta rule end-to-end
     (operators/matview.py:create_matview_join)."""
     from ..sources.generations import publish_generation
-    from .indexing import session_artifact_path
     from .matview import create_matview_join, refresh_matview
 
     def build(path: str) -> None:
@@ -1015,7 +1012,6 @@ def orders_delete_demo(spark: SparkSession, sf_dir: str) -> str:
         read_generation,
     )
     from ..sources.layout import write_range_clustered
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         base = _os.path.join(path, "base")
@@ -1102,7 +1098,6 @@ def orders_upsert_demo(spark: SparkSession, sf_dir: str) -> str:
         publish_generation,
         upsert_rows,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         base = _os.path.join(path, "base")
@@ -1225,7 +1220,6 @@ def orders_savepoint_demo(spark: SparkSession, sf_dir: str) -> str:
     hash match proves the named pin still serves exactly the
     pre-append snapshot while the store's head has moved on."""
     from ..sources.generations import publish_generation, tag_generation
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         base = _os.path.join(path, "base")
@@ -1372,7 +1366,6 @@ def orders_changes_demo(spark: SparkSession, sf_dir: str) -> str:
     generation_diff would refuse; generation_changes reconciles the
     span row-by-row instead."""
     from ..sources.generations import publish_generation
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         base = _os.path.join(path, "base")
@@ -1521,7 +1514,6 @@ def orders_gated_store(spark: SparkSession, sf_dir: str) -> str:
     import datetime
 
     from ..sources.expectations import append_with_expectations
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         append_with_expectations(
@@ -1665,7 +1657,6 @@ def orders_hist_demo(spark: SparkSession, sf_dir: str) -> str:
     import datetime
 
     from ..sources.generations import delete_rows, publish_generation
-    from .indexing import session_artifact_path
     from .matview import create_matview, refresh_matview
 
     def build(path: str) -> None:
@@ -1819,7 +1810,6 @@ def orders_readmit_demo(spark: SparkSession, sf_dir: str) -> str:
         append_with_expectations,
         readmit,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         exp = {"price_cap": [("price_dec", "<=", _EXPECT_PRICE_CAP)]}
@@ -2009,7 +1999,6 @@ def orders_concurrent_append_demo(spark: SparkSession, sf_dir: str) -> str:
         load_manifest,
         append_rows,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         base = _os.path.join(path, "base")
@@ -2100,7 +2089,6 @@ def orders_schema_evolution_demo(spark: SparkSession, sf_dir: str) -> str:
         read_generation,
         store_schema,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         base = load_table(spark, sf_dir, "orders")
@@ -2184,7 +2172,6 @@ def orders_travel_demo(spark: SparkSession, sf_dir: str) -> str:
     row-level DELETE of the over-cap rows. Built once per
     (application, corpus content)."""
     from ..sources.generations import append_rows, delete_rows
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")
@@ -2256,7 +2243,6 @@ def orders_maintenance_demo(spark: SparkSession, sf_dir: str) -> str:
         load_manifest,
         set_compaction_policy,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")
@@ -2350,7 +2336,6 @@ def orders_relayout_demo(spark: SparkSession, sf_dir: str) -> str:
         plan_generation_scan,
         read_generation,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")
@@ -2437,7 +2422,6 @@ def orders_dv_demo(spark: SparkSession, sf_dir: str) -> str:
         generation_row_count,
         load_manifest,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")
@@ -2519,7 +2503,6 @@ def orders_cdf_feed_demo(spark: SparkSession, sf_dir: str) -> str:
         delete_rows_dv,
         upsert_rows,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         src = _os.path.join(path, "src")
@@ -2622,7 +2605,6 @@ def orders_rename_demo(spark: SparkSession, sf_dir: str) -> str:
         rename_columns,
         store_schema,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")
@@ -2702,7 +2684,6 @@ def orders_dv_merge_demo(spark: SparkSession, sf_dir: str) -> str:
     positions, new images append) and a pure-update batch (no
     inserts)."""
     from ..sources.generations import append_rows, upsert_rows
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")
@@ -2767,7 +2748,6 @@ def orders_zorder_demo(spark: SparkSession, sf_dir: str) -> str:
         optimize_store,
         plan_generation_scan,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")
@@ -2848,7 +2828,6 @@ def orders_dropcol_demo(spark: SparkSession, sf_dir: str) -> str:
         read_generation,
         store_schema,
     )
-    from .indexing import session_artifact_path
 
     def build(path: str) -> None:
         store = _os.path.join(path, "store")

@@ -24,7 +24,13 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..checkpoints import rotating_local_checkpoint
 from ..plans.registry import register
-from .indexing import POSTINGS_SQL, indexed_postings
+from .indexing import POSTINGS_SQL, indexed_postings, write_letter_partitioned
+from .tokens import (
+    CorpusArtifact,
+    corpus_artifact,
+    gram_rows,
+    tokenized_docs,
+)
 
 # Fixed probe terms for registered queries — present in the synthetic
 # documents fixture vocabulary at every sf.
@@ -215,61 +221,36 @@ def positional_postings(docs: DataFrame) -> DataFrame:
     ).select("word", "doc_id", "pos")
 
 
+def positions_from_tokens(tokenized: DataFrame) -> DataFrame:
+    """(word, doc_id, pos, letter) of a `tokens.build_tokenized_docs`
+    frame. posexplode of the stored token array == POSITIONAL_TOKENS'
+    dense ordinals (both enumerate the filtered token sequence), so
+    the positional build chains on the session tokens artifact instead
+    of re-tokenizing."""
+    return tokenized.select(
+        "doc_id", F.posexplode("ws").alias("pos", "word")
+    ).withColumn("letter", F.substring("word", 1, 1))
+
+
+def write_positional(df: DataFrame, path: str, mode: str) -> None:
+    # Range-partitioned parallel writers + in-file sort + bounded file
+    # sizes — layout semantics in write_letter_partitioned.
+    write_letter_partitioned(
+        df, path, sort_cols=("letter", "word", "doc_id", "pos"), mode=mode
+    )
+
+
+# Positional rows are keyed by doc_id, so a corpus delta appends exactly
+# the rows a full rebuild would add.
+POS_INDEX = CorpusArtifact("pos_index", positions_from_tokens, write_positional)
+
+
 def indexed_positional_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional postings (word, doc_id, pos, letter) served from a
     persisted letter-partitioned positional index — built once per
     session alongside the count index, so phrase/proximity lookups are
     partition-pruned scans instead of a corpus re-tokenize per query."""
-    from .indexing import session_artifact_df, write_letter_partitioned
-    from .tokens import tokenized_docs
-
-    def build(path: str) -> None:
-        # posexplode of the stored token array == POSITIONAL_TOKENS'
-        # dense ordinals (both enumerate the filtered token sequence),
-        # so the positional build chains on the session tokens artifact
-        # instead of re-tokenizing — one corpus tokenization per
-        # session across ALL artifact builds.
-        pp = tokenized_docs(spark, sf_dir).select(
-            "doc_id", F.posexplode("ws").alias("pos", "word")
-        )
-        # Range-partitioned parallel writers + in-file sort + bounded
-        # file sizes — layout semantics in write_letter_partitioned.
-        write_letter_partitioned(
-            pp.withColumn("letter", F.substring("word", 1, 1)),
-            path,
-            sort_cols=("letter", "word", "doc_id", "pos"),
-        )
-
-    def delta_build(path: str, new_files: list[str]) -> None:
-        # Incremental maintenance (round 8): positional rows are keyed
-        # by NEW doc_ids, so appending the delta's own posexplode is
-        # exactly the full rebuild's output — same argument and flock
-        # discipline as indexing._index_delta_build. The delta is
-        # tokenized directly (it is tiny).
-        from ..operators.tokens import _null_fill, build_tokenized_docs
-        from .indexing import _recover_index_locked, index_writer_lock
-
-        docs = spark.read.parquet(*new_files)
-        pp = build_tokenized_docs(_null_fill(docs)).select(
-            "doc_id", F.posexplode("ws").alias("pos", "word")
-        )
-        with index_writer_lock(path):
-            _recover_index_locked(path)
-            write_letter_partitioned(
-                pp.withColumn("letter", F.substring("word", 1, 1)),
-                path,
-                sort_cols=("letter", "word", "doc_id", "pos"),
-                mode="append",
-            )
-
-    return session_artifact_df(
-        spark,
-        sf_dir,
-        "pos_index",
-        "documents.parquet",
-        build,
-        delta_build=delta_build,
-    )
+    return corpus_artifact(spark, sf_dir, POS_INDEX)
 
 
 @register(
@@ -370,8 +351,6 @@ def q_search_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engines so the libm ln folding compares exactly.",
 )
 def q_search_tfidf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tokens import tokenized_docs
-
     p = indexed_postings(spark, sf_dir)
     # n_docs from the tokens artifact's stored scalar, not a distinct
     # over the whole index (see q_search_bm25_rank for the equivalence
@@ -421,8 +400,6 @@ def q_search_tfidf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "letter partition for a 50-doc answer.",
 )
 def q_search_doc_tf_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tokens import tokenized_docs
-
     # Linear run-length over the sorted token array, in stacked
     # projections (multi-references keep CollapseProject from inlining
     # the non-cheap arrays): `ends` holds each run's last index, so run
@@ -489,12 +466,10 @@ BM25_B = 0.75
     "order-safe); rounded to 6 dp so libm ln folds compare exactly.",
 )
 def q_search_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tokens import tokenized_docs
-
     p = indexed_postings(spark, sf_dir)
     # Doc lengths and corpus stats come from the tokens artifact's
     # stored n_norm_tokens scalar, not a full-postings scan + shuffle:
-    # postings chain on that artifact (indexing._artifact_postings), so
+    # postings chain on that artifact (indexing.SESSION_INDEX), so
     # sum(cnt) per doc == n_norm_tokens and "docs with postings" ==
     # "docs with n_norm_tokens > 0" BY CONSTRUCTION (equality is
     # property-tested). A 100-TB index is vastly larger than its
@@ -591,8 +566,6 @@ def q_search_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "then the same map-side-combined groupBy as the unigram index.",
 )
 def q_index_bigram_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tokens import gram_rows
-
     return (
         gram_rows(spark, sf_dir, 2, out_col="bigram")
         .groupBy("bigram")
@@ -664,8 +637,6 @@ _SIM_DEC = "decimal(28,12)"
     "every term is in ~80% of docs).",
 )
 def q_search_related_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .tokens import tokenized_docs
-
     p = indexed_postings(spark, sf_dir).select("word", "doc_id", "cnt")
     n = (
         tokenized_docs(spark, sf_dir)

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import state
 from ..localrel import local_rows_df
 from ..plans.registry import register
+from ..sources import commitio
+from ..sources.artifacts import compact_artifact, session_artifact_df
 from ..sources.tables import load_table
 from .dedup import (
     EMB_DIM,
@@ -96,8 +98,7 @@ def lsh_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hive-partitioned by the 8-bit hyperplane bucket. A `bucket = q`
     predicate prunes to ~1/256th of the files — the 'persist partitioned
     by bucket' posture the module docstring promises, materialized.
-    Caching semantics: `operators.indexing.session_artifact_df`."""
-    from .indexing import session_artifact_df
+    Caching semantics: `sources.artifacts.session_artifact_df`."""
 
     def build(path: str) -> None:
         (
@@ -118,7 +119,6 @@ def ivf_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v, cell) partitioned by the IVF coarse-quantization
     cell — one Hive partition per centroid, so probing n cells reads n
     partitions."""
-    from .indexing import session_artifact_df
 
     def build(path: str) -> None:
         (
@@ -317,7 +317,6 @@ def build_vector_store(
     instead of 512 B of floats); raw vectors are touched only for the
     shortlist re-rank. Overwrites; enters the writer lock so a
     concurrent maintainer of the same path serializes."""
-    from .indexing import _chmod_staging, index_writer_lock
 
     if layout not in _LAYOUT_COLS:
         raise ValueError(
@@ -347,7 +346,7 @@ def build_vector_store(
         )
     col = _LAYOUT_COLS[layout]
     books = (codebooks or PQ_CODEBOOKS) if pq else None
-    with index_writer_lock(path):
+    with commitio.IO.writer_lock(path):
         if centroids is None and not pq:
             _write_vector_store(vectors, path, mode="overwrite", col=col)
         else:
@@ -363,7 +362,7 @@ def build_vector_store(
             staging = tempfile.mkdtemp(
                 prefix="mri_build_", dir=os.path.dirname(path) or "."
             )
-            _chmod_staging(staging)
+            commitio.chmod_staging(staging)
             _write_vector_store(
                 vectors,
                 staging,
@@ -398,10 +397,9 @@ def append_vectors(spark: SparkSession, vectors: DataFrame, path: str) -> None:
     operators/cdc.py — not the store's). The routing key is computed
     with the STORE's layout (inferred from its partition directories),
     so an append can never mix bucket and cell partitions."""
-    from .indexing import _recover_index_locked, index_writer_lock
 
-    with index_writer_lock(path):
-        _recover_index_locked(path)  # heal a crashed compactor first
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)  # heal a crashed compactor first
         # Fail-fast layout guard, same as the streaming ingest: a raw
         # top-level bucket=* append beside a checkpointed
         # batch=<id>/bucket=* store makes Spark's partition discovery
@@ -451,7 +449,7 @@ def compact_vector_store(
     """Fold the appended partials back to one compact file per
     partition (bucket or cell — inferred): read -> repartition ->
     staged rewrite -> locked swap. Locking/crash-safety semantics:
-    indexing.compact_artifact (shared with the count index).
+    artifacts.compact_artifact (shared with the count index).
 
     `retrain=True` (IVF layouts only) additionally RE-TRAINS the
     quantizer from the store's CURRENT vectors before re-laying-out —
@@ -470,7 +468,6 @@ def compact_vector_store(
     atomically with the data. All under the same writer flock +
     staged swap, so a crash mid-retrain leaves the old store (and old
     models) intact."""
-    from .indexing import compact_artifact
 
     # drop("batch") folds a checkpointed streaming-ingest layout
     # (batch=<id>/bucket=*) into the flat form; a no-op on flat stores.
@@ -533,9 +530,8 @@ def compact_vector_store(
 def read_vector_store(spark: SparkSession, path: str) -> DataFrame:
     """(vec_id, v, bucket) — self-healing read (restores a stranded
     compaction like the index's read path)."""
-    from .indexing import recover_index
 
-    recover_index(path)
+    commitio.recover_index(path)
     return spark.read.parquet(path)
 
 
@@ -1248,7 +1244,6 @@ def pq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats per row becomes PQ_M small ints (4 bits each in a real
     bit-packed layout); candidates are scored from codes alone.
     Partitioned by cell so a probe reads one Hive partition."""
-    from .indexing import session_artifact_df
 
     def build(path: str) -> None:
         (
@@ -2882,7 +2877,6 @@ def labeled_ivf_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     riding the same cell partitions — the layout filtered ANN wants,
     where the predicate applies during the pruned partition scan
     instead of joining a separate metadata table afterwards."""
-    from .indexing import session_artifact_df
 
     def build(path: str) -> None:
         (

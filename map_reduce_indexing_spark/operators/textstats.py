@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.registry import register
+from ..sources.artifacts import compact_artifact
 from ..sources.tables import load_table
 from .dedup import (
     DUCK_TOKENS_LIST,
@@ -23,7 +24,15 @@ from .dedup import (
     duck_shingles,
     shingle_rows,
 )
-from .tokens import BPE_ISH, gram_expr, gram_rows, token_rows, tokenized_docs
+from .tokens import (
+    BPE_ISH,
+    CorpusArtifact,
+    corpus_artifact,
+    corpus_artifact_path,
+    gram_expr,
+    gram_rows,
+    tokenized_docs,
+)
 
 # Stopword sets for the language-ID vote. [a-z]-only (the tokenizer's
 # alphabet). Deterministic priority order breaks ties: en > es > de > fr.
@@ -762,8 +771,6 @@ def _lm_count_rows(tokenized: DataFrame) -> DataFrame:
     """(k, g, c) n-gram counts of one tokenized frame — the single
     shared derivation for the full build AND the delta partials, so an
     incremental artifact can never drift from a from-scratch one."""
-    from .tokens import gram_expr
-
     ug = (
         tokenized.select(F.explode("ws").alias("g"))
         .groupBy("g")
@@ -779,36 +786,18 @@ def _lm_count_rows(tokenized: DataFrame) -> DataFrame:
     return ug.unionAll(bg)
 
 
-def _lm_counts_spec(spark: SparkSession, sf_dir: str):
-    from .indexing import _recover_index_locked, index_writer_lock
-    from .tokens import tokenized_docs as _toks
+def _write_lm_counts(df: DataFrame, path: str, mode: str) -> None:
+    df.write.mode(mode).partitionBy("k").parquet(path)
 
-    def build(path: str) -> None:
-        _lm_count_rows(_toks(spark, sf_dir)).write.partitionBy("k").parquet(
-            path
-        )
 
-    def delta_build(path: str, new_files: list[str]) -> None:
-        # Incremental maintenance (round 8, second half): counts are a
-        # MERGEABLE summary — C(corpus + delta) = C(corpus) + C(delta)
-        # per gram — so an append-only corpus delta appends the DELTA
-        # DOCS' partial counts (O(delta) work: tokenize + aggregate the
-        # new files only) and the merge is deferred to read time
-        # (`lm_slice` sums per gram) and to compaction
-        # (`compact_lm_counts` folds partials back to one row per
-        # gram). Same flock + crash-recovery discipline as the index
-        # delta; the reference analogue is the same log-structured
-        # append (helper_reduce.c:241) applied to the model tier — the
-        # one artifact whose rows are NOT keyed by doc_id.
-        from .tokens import _null_fill, build_tokenized_docs
-
-        docs = spark.read.parquet(*new_files)
-        partial = _lm_count_rows(build_tokenized_docs(_null_fill(docs)))
-        with index_writer_lock(path):
-            _recover_index_locked(path)
-            partial.write.mode("append").partitionBy("k").parquet(path)
-
-    return build, delta_build
+# Counts are a MERGEABLE summary — C(corpus + delta) = C(corpus) +
+# C(delta) per gram — so a corpus delta appends the delta docs' partial
+# counts (O(delta) work) and the merge is deferred to read time
+# (`lm_slice` sums per gram) and to compaction (`compact_lm_counts`
+# folds partials back to one row per gram): the reference's
+# log-structured append (helper_reduce.c:241) applied to the model tier,
+# the one corpus artifact whose rows are NOT keyed by doc_id.
+LM_COUNTS = CorpusArtifact("session_lm_counts", _lm_count_rows, _write_lm_counts)
 
 
 def lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,22 +811,12 @@ def lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     build-then-query lifecycle (helper_reduce.c:238-257) applied to
     the language-model tier.
 
-    RAW artifact rows: after an incremental corpus append (delta_build
+    RAW artifact rows: after an incremental corpus append (LM_COUNTS
     above) a gram may carry several partial-count rows. Consumers go
     through `lm_slice`, which merges; only code that can prove the
     artifact is compact (or that tolerates partials) reads this
     directly."""
-    from .indexing import session_artifact_df
-
-    build, delta_build = _lm_counts_spec(spark, sf_dir)
-    return session_artifact_df(
-        spark,
-        sf_dir,
-        "session_lm_counts",
-        "documents.parquet",
-        build,
-        delta_build=delta_build,
-    )
+    return corpus_artifact(spark, sf_dir, LM_COUNTS)
 
 
 def lm_slice(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -859,40 +838,18 @@ def lm_slice(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 def compact_lm_counts(spark: SparkSession, sf_dir: str) -> None:
     """Fold per-delta partial-count files back to one row per (k, g) —
     the merge half of the model tier's log-structured lifecycle, via
-    the locked staged-swap machinery (indexing.compact_artifact); the
-    _sources.json consumed-listing sidecar rides the swap so later
-    corpus appends still take the delta path."""
-    from .indexing import (
-        _load_sources,
-        _save_sources,
-        compact_artifact,
-        session_artifact_path,
-    )
-
-    build, delta_build = _lm_counts_spec(spark, sf_dir)
-    path = session_artifact_path(
+    the locked staged swap (`compact_artifact`, which carries the
+    consumed listing so later corpus appends still take the delta
+    path)."""
+    compact_artifact(
         spark,
-        sf_dir,
-        "session_lm_counts",
-        "documents.parquet",
-        build,
-        delta_build,
+        corpus_artifact_path(spark, sf_dir, LM_COUNTS),
+        lambda df, staging: _write_lm_counts(
+            df.groupBy("k", "g").agg(F.sum("c").alias("c")).select("k", "g", "c"),
+            staging,
+            "overwrite",
+        ),
     )
-
-    def rewrite(df, staging: str) -> None:
-        (
-            df.groupBy("k", "g")
-            .agg(F.sum("c").alias("c"))
-            .select("k", "g", "c")
-            .write.mode("overwrite")
-            .partitionBy("k")
-            .parquet(staging)
-        )
-        listing = _load_sources(path)
-        if listing is not None:
-            _save_sources(staging, listing)
-
-    compact_artifact(spark, path, rewrite)
 
 
 @register(

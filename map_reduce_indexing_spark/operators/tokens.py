@@ -34,16 +34,26 @@ text tier from one full corpus pass PER QUERY into one tokenization
 pass total plus N column-pruned artifact scans — a query that needs
 only `n_punct` reads one bigint column, not the text.
 
-Caching / invalidation / placement semantics: `indexing.
-session_artifact_df` (content-fingerprinted per Spark application;
-`$SPARK_GRAFT_INDEX_DIR` points it at shared storage on a cluster).
+`corpus_artifact` below is the lifecycle every corpus-derived artifact
+shares; caching / invalidation / placement semantics are
+`sources.artifacts.session_artifact_path`'s (content-fingerprinted per
+Spark application; `$SPARK_GRAFT_INDEX_DIR` points it at shared storage
+on a cluster).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import spark_tokens_expr
+from ..sources.artifacts import (
+    compact_artifact,
+    read_artifact,
+    session_artifact_path,
+)
+from ..sources.tables import load_table
 
 # BPE-ish segmentation: letter runs | digit runs | single symbol.
 # Shared with the DuckDB oracles in textstats.py.
@@ -61,6 +71,8 @@ def build_tokenized_docs(docs: DataFrame) -> DataFrame:
     a non-cheap (HOF) expression, so the tokenizer runs ONCE per row
     (plan-pinned in tests/test_tokens_artifact.py; the inline form ran
     it twice)."""
+    from .dedup import spark_tokens_expr  # dedup imports this module
+
     lower = F.lower(F.col("text"))
     tokenized = docs.select(
         "doc_id",
@@ -103,106 +115,104 @@ def _null_fill(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text", "lang", "source")
 
 
+class CorpusArtifact(NamedTuple):
+    """One corpus-derived session artifact, declared once: `kind` names
+    its directory, `derive(tokenized) -> DataFrame` maps rows of
+    `build_tokenized_docs` to the artifact's rows, and
+    `write(df, path, mode)` persists them ("overwrite" for the full
+    build, "append" for a corpus delta). `corpus_artifact` runs both."""
+
+    kind: str
+    derive: Callable[[DataFrame], DataFrame]
+    write: Callable[[DataFrame, str, str], None]
+
+
+def write_parquet(df: DataFrame, path: str, mode: str) -> None:
+    df.write.mode(mode).parquet(path)
+
+
+TOKENS = CorpusArtifact("session_tokens", lambda tokenized: tokenized, write_parquet)
+
+
+def _tokenize(docs: DataFrame) -> DataFrame:
+    return build_tokenized_docs(_null_fill(docs))
+
+
+def corpus_artifact_path(
+    spark: SparkSession, sf_dir: str, art: CorpusArtifact
+) -> str:
+    """The one lifecycle of every corpus-derived artifact (tokens,
+    session index, positional index, MinHash signatures, LM counts,
+    classifier statistics), built once per (Spark application, corpus
+    content) by `sources.artifacts.session_artifact_path`.
+
+    Full build: `derive` over the session tokens artifact, so one
+    session tokenizes the corpus once whichever artifacts it builds
+    (the tokens artifact itself derives from the raw tokenization).
+
+    Delta: when the corpus is a directory parquet table that grew
+    append-only (new data files; every consumed file byte-identical;
+    new doc_ids only), `derive` runs over the tokenization of ONLY the
+    new files and its rows are appended under the writer lock — the
+    reference's log-structured append (helper_reduce.c:241). That is
+    exactly the full rebuild for artifacts keyed by doc_id; the
+    mergeable summaries (LM counts, classifier statistics) append
+    partial rows their readers sum. A modified or removed file takes
+    the full rebuild."""
+
+    def build(path: str) -> None:
+        if art is TOKENS:
+            tokenized = _tokenize(load_table(spark, sf_dir, "documents"))
+        else:
+            tokenized = tokenized_docs(spark, sf_dir)
+        art.write(art.derive(tokenized), path, "overwrite")
+
+    def delta(path: str, new_files: list[str]) -> None:
+        tokenized = _tokenize(spark.read.parquet(*new_files))
+        art.write(art.derive(tokenized), path, "append")
+
+    return session_artifact_path(
+        spark, sf_dir, art.kind, "documents.parquet", build, delta
+    )
+
+
+def corpus_artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    art: CorpusArtifact,
+    at: int | None = None,
+) -> DataFrame:
+    """`corpus_artifact_path` served as a cached partition-discovered
+    read; `at=` pins a published generation (each delta publishes one,
+    so e.g. a classifier can train on snapshot S of the tokens while
+    corpus ingest continues)."""
+    return read_artifact(spark, corpus_artifact_path(spark, sf_dir, art), at=at)
+
+
 def tokenized_docs(
     spark: SparkSession, sf_dir: str, at: int | None = None
 ) -> DataFrame:
-    """The artifact, built once per (Spark application, corpus content)
-    and served as a cached partition-discovered read.
-
-    INCREMENTAL maintenance (round 8): when the corpus is a directory
-    parquet table that grew append-only (new data files; every
-    previously-consumed file byte-identical), the delta path tokenizes
-    ONLY the new files and appends them to the existing artifact under
-    the index writer flock — the same log-structured append story as
-    the letter index (reference helper_reduce.c:241), applied to the
-    base artifact 13+ text/dedup queries chain on. A modified or
-    removed file still triggers the full fingerprint rebuild.
-    Downstream artifacts (lm_counts, minhash signatures, the session
-    index) key on the corpus fingerprint and rebuild FROM this
-    artifact, so a 1-doc corpus append re-tokenizes 1 doc, then
-    re-aggregates counts — never re-runs the regex passes over old
-    text.
-
-    `at=` (round 9) pins a published generation — each delta append
-    publishes one, so e.g. a classifier can train on snapshot S of
-    the tokens while corpus ingest continues (snapshot isolation,
-    sources/generations.py)."""
-    from ..sources.tables import load_table
-    from .indexing import (
-        _recover_index_locked,
-        index_writer_lock,
-        session_artifact_df,
-    )
-
-    build, delta_build = _tokens_artifact_spec(spark, sf_dir)
-    return session_artifact_df(
-        spark,
-        sf_dir,
-        "session_tokens",
-        "documents.parquet",
-        build,
-        delta_build=delta_build,
-        at=at,
-    )
-
-
-def _tokens_artifact_spec(spark: SparkSession, sf_dir: str):
-    from ..sources.tables import load_table
-    from .indexing import _recover_index_locked, index_writer_lock
-
-    def build(path: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        build_tokenized_docs(_null_fill(docs)).write.parquet(path)
-
-    def delta_build(path: str, new_files: list[str]) -> None:
-        # Only the delta files enter the tokenize job (plan-verified in
-        # tests/test_tokens_incremental.py via the scan's file count).
-        docs = spark.read.parquet(*new_files)
-        with index_writer_lock(path):
-            _recover_index_locked(path)
-            build_tokenized_docs(_null_fill(docs)).write.mode(
-                "append"
-            ).parquet(path)
-
-    return build, delta_build
+    """The tokens artifact (`corpus_artifact`): a 1-doc corpus append
+    tokenizes 1 doc, and the artifacts chained on it append that doc's
+    derivation — never re-running the regex passes over old text."""
+    return corpus_artifact(spark, sf_dir, TOKENS, at=at)
 
 
 def compact_tokenized_docs(spark: SparkSession, sf_dir: str) -> None:
     """Fold the per-delta appended files back to a compact artifact —
-    the log-structured merge half of the tokens tier's lifecycle (the
-    index tier's compact_index, applied to the base artifact). Runs
-    through indexing.compact_artifact (locked read -> staged rewrite ->
-    crash-safe swap); the _sources.json consumed-listing sidecar rides
-    the swap like the vector store's model sidecars, so later corpus
-    appends still take the delta path. The swap changes the artifact's
+    the log-structured merge half of the tokens tier's lifecycle,
+    through `compact_artifact` (locked read -> staged rewrite ->
+    crash-safe swap, consumed listing carried, so later corpus appends
+    still take the delta path). The swap changes the artifact's
     directory stat, so the next `tokenized_docs` re-discovers the
     folded file listing."""
-    from .indexing import (
-        _load_sources,
-        _save_sources,
-        compact_artifact,
-        session_artifact_path,
-    )
-
-    build, delta_build = _tokens_artifact_spec(spark, sf_dir)
-    path = session_artifact_path(
+    compact_artifact(
         spark,
-        sf_dir,
-        "session_tokens",
-        "documents.parquet",
-        build,
-        delta_build,
+        corpus_artifact_path(spark, sf_dir, TOKENS),
+        lambda df, staging: df.repartition(
+            spark.sparkContext.defaultParallelism
+        ).write.mode("overwrite").parquet(staging),
     )
-
-    def rewrite(df, staging: str) -> None:
-        df.repartition(spark.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        listing = _load_sources(path)
-        if listing is not None:
-            _save_sources(staging, listing)
-
-    compact_artifact(spark, path, rewrite)
 
 
 def token_rows(spark: SparkSession, sf_dir: str, out_col: str = "w") -> DataFrame:

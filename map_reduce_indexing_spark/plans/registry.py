@@ -55,105 +55,29 @@ def register(
 
 
 # The external verifier checks the FIRST 50 entries of queries() in order,
-# so the window below is chosen to cover every operator tier — indexing,
-# search, relational (joins/aggs/windows/sets/scalars), as-of, all dedup,
-# ANN, text analysis, multimodal, and streaming. Everything after slot 50
-# is still oracle-checked locally (pytest + tools/check_contract.py), just
-# outside the external window.
+# so this window covers every operator tier — indexing, search,
+# relational, as-of, dedup, ANN, text analysis, multimodal, lakehouse
+# and streaming. Rotation rule: a query leaves the window after several
+# stable rounds only when another window query (or a stricter consumer
+# of the same machinery) keeps its semantics externally checked, and its
+# slot goes to a query that was never external before. Everything after
+# slot 50 is still oracle-checked locally (pytest and
+# tools/check_contract.py); the rotation history is in git and the
+# VERDICT files.
 PRIORITY_WINDOW = [
-    # reference pipeline + implied search surface
     "index_postings",
     "index_corpus_stats",
     "index_letter_histogram",
     "search_term_lookup",
-    # (r10 rotation: search_proximity retired after 3 stable rounds —
-    # the positional artifact stays pytest+sweep-checked and the
-    # boolean/ranked search family keeps term_lookup, topk_per_term,
-    # and related_docs external; its slot carries the round-10
-    # join-IVM flagship)
     "search_topk_per_term",
-    # (r9 rotation: index_heavy_hitters retired after 4 stable rounds —
-    # the Misra-Gries machinery keeps its stricter external consumer in
-    # stream_heavy_hitters, which shares recount_candidates and adds
-    # state-store mergeability; batch candidates stay sweep-checked)
-    # r8 third batch: search_related_docs promoted — sparse-vector
-    # similarity from the posting self-join had never been external;
-    # search_bm25_rank retired after 7 stable rounds (index-served
-    # ranking stays external via search_topk_per_term + related_docs'
-    # TF-IDF scoring through the same postings+idf path) and
-    # search_doc_tf_vector after 8 (TF accounting stays pinned by the
-    # tokens-artifact equivalence tests + the sweep; its slot goes to
-    # the round's new trainer class, text_classifier_train below)
-    # (r13 rotation: search_related_docs retired after 5 stable rounds
-    # — posting-join TF-IDF similarity stays sweep-checked and the
-    # search family keeps term_lookup + topk_per_term external; sparse
-    # similarity arithmetic also rides the dedup/ANN tiers. Its slot
-    # carries round 12's partition evolution, judge-green in r12 but
-    # never external.)
     "rel_partition_evolution",
-    # relational: agg + join family (r6 rotation: rel_q3 retired — scan+
-    # agg and multi-join stay covered by rel_q1/rel_q5; rel_join_outer
-    # retired — semi/anti/theta/asof keep the join family external)
     "rel_q1_pricing_summary",
-    # (r10 third batch: rel_q5_local_supplier retired after 9 stable
-    # rounds — multi-join aggregation keeps rel_q1 (scan+agg),
-    # rel_join_semi/asof, and the exchange-free rel_bucketed_join_agg
-    # external; q5 stays sweep-checked. Its slot carries the round's
-    # admission gate, rel_expectations_quarantine below.)
-    # (r13 rotation: rel_join_semi retired after 12 stable rounds —
-    # the join family keeps rel_join_asof external, and semi/anti
-    # semantics ride every DML path (upsert_rows' left-anti survivor
-    # join, the DV anti-join, generation_diff's key fallback), all
-    # driver-checked. Its slot carries round 12's merge-on-read
-    # DELETE, judge-green in r12 but never external.)
     "rel_delete_dv",
-    # (r10 rotation: rel_join_anti and rel_theta_join_bands retired
-    # after 9 stable rounds — the join family keeps semi/asof/q5
-    # external; anti-join semantics also ride every generation_diff
-    # consumer. Their slots carry the lakehouse CDF + metadata reads.)
     "rel_join_asof",
-    # (rel_cdc_scd2 rotated out in the r9 second batch — SCD2
-    # semantics stay external via stream_scd2_temporal_join and the
-    # CDC family via rel_cdc_merge_upsert; see round9 second-batch
-    # test. Its slot carries the manifest-skipping scan.)
-    "rel_snapshot_pruned_scan",  # r9 second batch: manifest-level file skipping
-    # (r10 third batch: rel_cdc_merge_upsert retired after 2 external
-    # rounds — its MERGE semantics gained a STRICTER store-level
-    # consumer in rel_upsert_rows (bloom-pruned key probing + staged
-    # swap + CDF emission), promoted earlier this round; the batch
-    # MERGE query stays sweep-checked. Its slot carries the round's
-    # maintainable-histogram flagship below. rel_expectations_audit
-    # stays just OUTSIDE the window — exported and sweep-checked; the
-    # quarantine row is the gate's stricter external signal.)
-    # (r10 rotation: rel_attribution_first_touch retired after 4
-    # stable rounds — event-flow keeps retention_cohorts + the
-    # streaming funnel external; its slot carries row-level DELETE)
-    # (r11 rotation: rel_retention_cohorts retired after 4 stable
-    # rounds — event-flow keeps stream_funnel external and the
-    # distribution family rel_profile_drift; cohorts stay sweep-
-    # checked. Its slot carries the repair loop's close: quarantined
-    # rows fixed and re-gated back into the store, never external
-    # before despite being judge-verified in r10.)
+    "rel_snapshot_pruned_scan",
     "rel_expectations_readmit",
-    # relational: distribution stats + grouping (r8 second batch:
-    # rel_approx_distinct retired after 7 stable rounds — approx
-    # distribution stats keep rel_percentiles external; its slot goes
-    # to the round's new algorithm class, rel_pagerank_trade)
-    # (r9 rotation: rel_percentiles retired after 4+ stable rounds —
-    # distribution statistics keep an external row via the newly
-    # promoted rel_profile_drift, whose PSI bins are quantile-shaped
-    # over the same order-date domain)
-    "rel_profile_drift",  # r9: PSI drift monitor had never been external
-    # (rel_grouping_sets rotated out in the r9 second batch after 8
-    # stable rounds — the A7 family stays sweep-checked and the wide
-    # agg tier keeps rel_q1 external. Its slot carries incremental
-    # view maintenance.)
-    "rel_matview_refresh",  # r9 second batch: incremental materialized aggregate
-    # r10 rotation: the lakehouse tier completes its external surface —
-    # judge-verified-but-never-external rows promoted (rollup routing,
-    # row-level CDF, the delta-files-only diff scan, the metadata-only
-    # COUNT(*)) plus the round's two new store operations (join-IVM
-    # matviews, predicate DELETE)
+    "rel_profile_drift",
+    "rel_matview_refresh",
     "rel_matview_rollup_route",
     "rel_generation_changes",
     "rel_generation_diff_scan",
@@ -161,228 +85,35 @@ PRIORITY_WINDOW = [
     "rel_matview_join_refresh",
     "rel_delete_rows",
     "rel_upsert_rows",
-    # r10 third batch: the round's third wave goes external — the
-    # publish-time admission gate (quarantine split + the
-    # metadata-served audit), the maintainable histogram serving
-    # percentiles through an append-then-DELETE lifecycle, the
-    # incremental batch dedup, and the chained store-to-store pipeline
     "rel_expectations_quarantine",
     "rel_matview_hist_quantile",
-    # r9 third batch: the lakehouse tier's remaining flagships go
-    # external — distinct-count IVM (support-table maintenance, the
-    # non-distributive aggregate), bloom-sidecar point lookup, and the
-    # named-tag pinned read.
-    # (r13 rotation: rel_matview_distinct retired after 4 stable
-    # rounds — distinct-count IVM stays sweep-checked and the matview
-    # family keeps refresh/join_refresh/rollup_route/hist_quantile
-    # external. Its slot carries round 12's column-retirement rewrite,
-    # judge-green in r12 but never external.)
     "rel_drop_columns",
     "rel_bloom_point_lookup",
-    # (r12 rotation: rel_savepoint_pinned_read retired after 3 stable
-    # rounds — pinned snapshot reads keep external cover via
-    # rel_snapshot_pruned_scan and every @1 time-travel reference in
-    # the newly promoted rel_store_sql_travel; savepoints stay
-    # sweep-checked. Its slot carries round 12's schema evolution
-    # flagship: an evolved store read whose external hash pins the
-    # null-fill and widening reconciliation.)
     "rel_schema_evolution",
-    # iterative graph analytics (round 8: damped power iteration over
-    # the trade graph — the crawl-graph quality-prior class, never
-    # external before because it didn't exist)
     "rel_pagerank_trade",
-    # relational: windows, sets, scalar/json surface (r6 rotation:
-    # rel_window_lag_gap retired — rank_parts + range_frame keep the
-    # window family external; offset windows stay pytest+sweep-checked.
-    # r8 rotation: rel_window_rank_parts retired after 7 stable rounds —
-    # rank windows stay external via search_topk_per_term and
-    # rel_retention_cohorts; range_frame carries the frame family)
-    # (r12 rotation: rel_window_range_frame retired after 6 stable
-    # rounds — window frames stay sweep-checked and the window family
-    # keeps search_topk_per_term + rel_matview_hist_quantile's
-    # three-window serving plan external. Its slot carries the SQL
-    # catalog surface: spark.sql over registered store views with
-    # inline @generation time travel, the analyst gap the r11 verdict
-    # ranked missing #3.)
     "rel_store_sql_travel",
-    # (r9 rotation: rel_set_ops retired after 4+ stable rounds; set
-    # semantics stay sweep-checked. Its slot goes to the write-time
-    # layout tier: the exchange-free bucketed join had never been
-    # external and is the round-8 flagship distribution mechanic)
     "rel_bucketed_join_agg",
-    # r8 third batch: rel_scalar_functions retired after 7 stable
-    # rounds — the scalar/json surface keeps rel_json_parse external;
-    # its slot goes to the second graph-analytics class
     "rel_triangles_trade",
-    # (r9 rotation: rel_json_parse retired after 4+ stable rounds —
-    # the scalar/json surface stays sweep-checked; its slot goes to the
-    # round-9 scale fix text_lm_resample, below with the text tier)
-    # (r10 rotation: rel_anomaly_daily retired after 4 stable rounds —
-    # the time-series family keeps retention_cohorts and the
-    # distribution family rel_profile_drift external)
-    # dedup family + LSH calibration eval (r7 rotation: dedup_fuzzy_names
-    # promoted — blocked-Levenshtein had never been external;
-    # dedup_ngram_jaccard retired — the quadratic calibration baseline's
-    # statistic stays externally covered via dedup_lsh_recall_eval)
-    # (r10 third batch: dedup_exact_kept retired after 9 stable rounds
-    # — exact content-hash dedup stays sweep-checked and the dedup
-    # tier keeps six external rows including the new incremental one)
-    # (r11 rotation: dedup_fuzzy_names retired after 4 stable rounds —
-    # blocked-Levenshtein stays sweep-checked; the dedup tier keeps
-    # four external rows. Its slot carries round 11's store flagship:
-    # optimistic concurrent appends under the object-store CAS
-    # backend — two lock-free writers land on one store, the external
-    # hash proving nothing was lost or doubled.)
     "rel_concurrent_append",
-    # (r9 rotation: dedup_minhash_signatures retired after 8 stable
-    # rounds — signature arithmetic stays externally exercised through
-    # dedup_lsh_recall_eval's candidate path; its slot goes to the
-    # LOSSLESS exact-Jaccard tier, never external before)
     "dedup_jaccard_prefix_pairs",
-    # (r10 rotation: dedup_common_passages retired after 3 stable
-    # rounds — gram-keyed lossless dedup keeps its external row via
-    # dedup_jaccard_prefix_pairs, and the passage query stays
-    # sweep-checked)
     "dedup_lsh_recall_eval",
-    # (r9 rotation: dedup_simhash retired after 7+ stable rounds —
-    # pigeonhole-banded Hamming stays externally covered by
-    # multimodal_dedup_pairs' dHash bands in the sweep and the simhash
-    # statistic by pytest; its slot goes to quality-aware cluster
-    # resolution, the curation composition that had never been external)
     "dedup_cluster_keep_best",
-    # r8 third batch: dedup_semantic_pairs promoted — the train-then-
-    # dedup composition (learned-cell blocking) is the strictly
-    # stronger consumer of the same exact-verify cosine arithmetic, so
-    # dedup_embedding_pairs (7 stable rounds) retires to the sweep
-    # (r11 rotation: dedup_semantic_pairs retired after 3 stable
-    # rounds — learned-cell blocking keeps its exact-verify cosine
-    # arithmetic externally exercised via ann_filtered_topk's pruned
-    # cell scans and the recall evals; the SemDeDup composition stays
-    # sweep-checked. Its slot carries the filtered ANN row, judge-
-    # verified in r10 but never external.)
     "ann_filtered_topk",
-    # r10 third batch: incremental corpus dedup — the nightly-batch
-    # form (generation-diff delta vs the maintained signature
-    # artifact) had never existed before this round
     "dedup_incremental_lsh_pairs",
-    # similarity search + accuracy eval (r6 rotation: ann_lsh_topk
-    # retired in favor of the PQ compression tier — its bucket-pruning
-    # plan assertion stays in tests/test_session_index.py; r7 third
-    # batch: ann_kmeans_train promoted — the trained coarse quantizer
-    # is a new algorithm class (iterative refinement); exact brute-force
-    # cosine stays external via ann_knn_batch_numpy + the recall evals)
-    # r8 rotation: ann_ivf_trained_topk promoted — the train-then-serve
-    # composition (Lloyd training + cell-pruned serving in one query)
-    # subsumes ann_kmeans_train's external signal, so the pure training
-    # report retires to the sweep after 1 external round
-    # (r11 rotation: ann_ivf_trained_topk retired after 3 stable
-    # rounds — the train-then-serve composition keeps external cover
-    # via ann_ivf_pq_topk (trained coarse quantizer + PQ) and
-    # ann_kmeans_train_k64. Its slot carries the exactly-once gated
-    # streaming ingest, promoted after the round-11 replay-idempotency
-    # fix per the r10 verdict's explicit direction.)
     "stream_gated_ingest",
     "ann_ivf_pq_topk",
-    # (r9 rotation: ann_recall_eval retired after 4 stable rounds —
-    # accuracy evaluation keeps dedup_lsh_recall_eval external and the
-    # PQ recall bar lives in pytest; two trainer rows take the slots:
-    # the large-k broadcast assignment path and the trained PQ
-    # codebooks, both round-8 flagships never externally verified)
     "ann_kmeans_train_k64",
-    # (r12 rotation: ann_pq_train retired after 3 stable rounds — PQ
-    # codebook training keeps its stricter external consumer in
-    # ann_ivf_pq_topk, which trains AND serves through the same
-    # codebooks; the pure training report stays sweep-checked. Its
-    # slot carries the scheduled-maintenance lifecycle: ONE
-    # api.maintain_store call folding a policy-tripped store and
-    # vacuuming planted crash residue, never external before.)
     "rel_store_maintenance",
-    # event-flow analytics (r5 rotation: replaced dedup_exact,
-    # dedup_simhash_pairs, rel_approx_percentiles — each family keeps
-    # another in-window representative)
-    # (r9 rotation: rel_funnel retired — funnel semantics keep their
-    # STRICTER external consumer in the newly promoted stream_funnel,
-    # whose exact-under-disorder state machine is oracle-checked
-    # against the same batch funnel logic)
-    # r9 third batch: streaming x matview — the continuous aggregate
     "stream_continuous_agg",
     "stream_funnel",
-    # text analysis (r7 rotation: text_pmi_windowed promoted — the
-    # flagship production PMI now reads the tokens artifact and
-    # deserves a driver row; text_langid retired — its statistic stays
-    # external-adjacent via the langid_eval confusion matrix in the
-    # sweep, and the tier keeps two rows)
-    # r8 rotation: text_decontaminate promoted — train/eval overlap
-    # removal is a flagship LLM-pipeline op that had never been
-    # external; text_quality retired after 3 stable rounds (quality
-    # scoring stays sweep + artifact-equivalence covered)
     "text_decontaminate",
-    # r7 third batch: text_shuffle_shards promoted — the training-export
-    # permutation class had never been external; text_token_counts
-    # retired after 6 stable rounds (token counting stays covered by the
-    # tokens-artifact equivalence tests + sweep, and the tier keeps
-    # quality/pmi/shuffle_shards external)
-    # (r10 third batch: text_shuffle_shards retired after 3 stable
-    # rounds — the training-export permutation stays pinned by the
-    # export-manifest pytest tier + sweep; its slot goes to the
-    # chained incremental ETL pipeline, the strictly wider store
-    # composition)
     "text_incremental_pipeline",
-    # r8 third batch: the round's two remaining trainer classes go
-    # external — the model-based quality filter (one-pass sufficient
-    # statistics + exact shared-expression solve) and BPE tokenizer
-    # training (vocab-sized merge rounds)
     "text_classifier_train",
     "text_bpe_merges",
-    # r9: text_lm_resample promoted — the round's headline scale fix
-    # (broadcast percentile cutpoints + map-only decile assignment
-    # replacing the global NTILE window) deserves external verification
-    # (r13 rotation: text_lm_resample retired after 4 stable rounds —
-    # the broadcast-cutpoint resample plan stays sweep-checked and the
-    # text tier keeps four external rows. Its slot carries round 13's
-    # metadata-only column rename, whose external hash pins that
-    # pre-rename files serve their history under the new name.)
     "rel_schema_rename",
-    # multimodal (r8 rotation: the binary metadata-parsing tier had
-    # held one external row for 4 rounds — audio_meta joins embed;
-    # r8 third batch: multimodal_embed retires — the declared-stub
-    # projection was the window's weakest signal, §2.10's UDF surface
-    # stays external via ann_knn_batch_numpy + stream_stateful_user_
-    # stats, and the multimodal tier keeps audio_meta)
     "multimodal_audio_meta",
-    # streaming (r7 rotation: stream_scd2_temporal_join promoted — the
-    # r5-built SCD2 temporal join had never been external;
-    # stream_tumbling_counts retired after 6 stable rounds — windowed
-    # aggregation stays covered by cdc_upsert/stateful, and tumbling
-    # remains a bench headliner + sweep row)
-    # r8 rotation: stream_session_windows promoted (watermarked gap
-    # sessionization had never been external); stream_cdc_upsert
-    # retired — upsert semantics stay external via the newly-promoted
-    # rel_cdc_merge_upsert
-    # (r10 rotation: stream_scd2_temporal_join retired after 3 stable
-    # rounds — the streaming family keeps five external rows
-    # (continuous_agg, funnel, session_windows, stateful, heavy
-    # hitters) and SCD2 semantics stay sweep-checked; its slot goes to
-    # the round's third store verb, rel_upsert_rows)
-    # (r11 rotation: stream_session_windows retired after 3 stable
-    # rounds — watermarked sessionization stays sweep-checked and the
-    # streaming family keeps six external rows. Its slot carries the
-    # auto-compacted streaming ingest: the manifest-recorded
-    # small-file policy firing optimize_store at publish time, round
-    # 11's second store flagship.)
     "stream_autocompact_ingest",
-    # (r13 rotation: stream_stateful_user_stats retired after 6 stable
-    # rounds — the applyInPandasWithState family keeps its stricter
-    # consumer stream_heavy_hitters external. Its slot carries round
-    # 13's change-feed subscription: bookmark-resumed, exactly-once
-    # CDF consumption over a store, the r12 verdict's missing #1.)
     "stream_store_cdf",
-    # r8 third batch: stream_heavy_hitters promoted (mergeable MG
-    # summaries in applyInPandasWithState — same state API family as
-    # stateful_user_stats, the stricter consumer); the checkpointed
-    # index sink retires to its extensive pytest tier (crash replay,
-    # flock interleaving) with the batch index family keeping S4
-    # external via index_postings/index_letter_histogram
     "stream_heavy_hitters",
 ]
 

@@ -37,6 +37,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import commitio
 from .generations import generation_at_timestamp, read_generation
 
 # view names must be catalog-safe: keep it to identifier characters
@@ -117,8 +118,6 @@ def save_catalog(catalog_path: str, stores: dict[str, str]) -> dict:
     mapping."""
     import json
 
-    from .commitio import IO
-
     for name in stores:
         if not _NAME_RE.match(name):
             raise ValueError(f"store name {name!r} must be a SQL identifier")
@@ -137,7 +136,7 @@ def save_catalog(catalog_path: str, stores: dict[str, str]) -> dict:
         else:
             cur[name] = os.path.abspath(p)
     doc["stores"] = cur
-    IO.save_json_atomic(catalog_path, doc)
+    commitio.IO.save_json_atomic(catalog_path, doc)
     return cur
 
 

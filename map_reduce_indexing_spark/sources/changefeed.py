@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import local_rows_df
+from . import commitio
 from .generations import (
     drop_tag,
     generation_changes,
@@ -248,12 +249,11 @@ def run_changes_feed(
         )
     if not key_cols:
         raise ValueError("run_changes_feed requires key_cols")
-    from ..operators.indexing import _recover_index_locked, index_writer_lock
     from .generations import _data_files, reachable_files
 
     os.makedirs(dst_path, exist_ok=True)
-    with index_writer_lock(dst_path):
-        _recover_index_locked(dst_path)
+    with commitio.IO.writer_lock(dst_path):
+        commitio.IO.recover(dst_path)
         # orphan sweep — the pipeline runner's crash-window close
         # (pipeline.py): a run that crashed between its append and its
         # publish left unpublished files AND an unadvanced bookmark;

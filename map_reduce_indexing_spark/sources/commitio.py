@@ -1,7 +1,7 @@
 """The commit-protocol seam: every primitive the artifact tier's
 durability story stands on, behind one interface.
 
-The generations/matview/index tier needs exactly four storage
+The generations/matview/index tier needs exactly five storage
 primitives (and nothing else):
 
 1. `writer_lock(path)` — mutual exclusion among WRITERS of one store
@@ -17,6 +17,10 @@ primitives (and nothing else):
    only "dst has src's bytes", cheapness wants metadata-only.
 5. `save_json_atomic(path, obj)` — all-or-nothing manifest/sidecar
    replacement (readers see the old or the new JSON, never a torn one).
+
+Two module functions sit on top of the backend: `recover_index(path)`
+(lock-free probe, then heal under the writer lock) and
+`chmod_staging(staging)` (the mode a staged swap publishes).
 
 `PosixStoreIO` is the single-host / shared-POSIX-filesystem backend —
 flock, hardlink, `os.replace` — which is also exactly the reference's
@@ -80,8 +84,29 @@ class PosixStoreIO:
     def writer_lock(self, path: str):
         """Blocking exclusive flock on a sibling `<path>.lock` file
         (sibling, not inside — publish_swap replaces the directory
-        itself). Each entry opens its own fd, so the lock also
-        serializes threads within one process."""
+        itself).
+
+        Closes the compact-vs-append race: an append landing between a
+        compaction's read and its swap would be silently dropped, and
+        two concurrent compactors would clobber each other's renames.
+        Every mutation (`IndexSession.append`, `compact_index`, the
+        acting branch of `recover_index`) enters here first, so a
+        concurrent writer BLOCKS until the holder finishes — the
+        interleaving becomes append-after-compact and no postings are
+        lost (tests/test_session_index.py, tests/test_api.py).
+
+        flock scope is one host / one shared POSIX filesystem — the
+        single-node reality of the reference's ./index (whose appends
+        were unlocked, SURVEY.md §2.12); on an object store the lease
+        in `CASStoreIO.writer_lock` plays this role. Each entry opens
+        its own fd, so the lock also serializes threads within one
+        process (flock treats separate open file descriptions
+        independently). Both scopes are tested: thread interleavings
+        in tests/test_api.py / test_session_index.py, and the
+        cross-process guarantee in
+        test_api.test_writer_lock_excludes_across_processes. Readers
+        never enter: they are safe against the swap via
+        `recover_index` self-healing."""
         import fcntl
 
         fd = os.open(path.rstrip("/") + ".lock", os.O_CREAT | os.O_RDWR, 0o644)
@@ -568,9 +593,10 @@ class CASStoreIO:
 # CASStoreIO is the object-store-semantics backend (select with
 # MRI_STORE_IO=cas, set_backend(), or the using_backend() context
 # manager — tests parametrize the whole lakehouse suite over both).
-# Every artifact code path late-imports this name, so a swap reaches
-# all of them. Backends interpret their own crash residue (.old dirs
-# vs .swapjournal files): switch backends only on a cleanly published
+# Callers look it up as `commitio.IO` at call time and never bind the
+# name themselves (tests/test_state_guard.py), so a swap reaches all of
+# them. Backends interpret their own crash residue (.old dirs vs
+# .swapjournal files): switch backends only on a cleanly published
 # store.
 IO = (
     CASStoreIO() if os.environ.get("MRI_STORE_IO") == "cas" else PosixStoreIO()
@@ -591,3 +617,46 @@ def using_backend(backend):
         yield backend
     finally:
         IO = prev
+
+
+def recover_index(path: str) -> None:
+    """Heal a crashed swap: if the backend reports crash residue (a
+    stranded `.old` copy under POSIX, a swap journal under CAS),
+    restore/complete it. The heal itself takes the writer lock
+    (re-checking under it), so a reader racing a LIVE rewriter's swap
+    window blocks instead of interfering; the no-op fast path stays
+    lock-free."""
+    if IO.needs_recovery(path):
+        with IO.writer_lock(path):
+            IO.recover(path)
+
+
+# Probed ONCE at import: os.umask is process-global and read-by-set,
+# so probing it per call would open a recurring race window. Linux
+# exposes the value race-free in /proc/self/status (Umask:, kernel
+# 4.7+); only when that is unavailable fall back to the set-probe —
+# and probe RESTRICTIVE (0o077): if another thread creates a file
+# inside the window, it comes out over-protected, never
+# world-permissive.
+def _read_umask() -> int:
+    try:
+        with open("/proc/self/status") as fh:
+            for line in fh:
+                if line.startswith("Umask:"):
+                    return int(line.split()[1], 8)
+    except OSError:
+        pass
+    prev = os.umask(0o077)
+    os.umask(prev)
+    return prev
+
+
+_UMASK = _read_umask()
+
+
+def chmod_staging(staging: str) -> None:
+    """mkdtemp creates 0700 directories; a staged swap then publishes
+    that mode as the live store/index, making an artifact built on
+    shared storage unreadable to every other user/process. Re-apply the
+    umask (what a plain mkdir would have produced) before the swap."""
+    os.chmod(staging, 0o777 & ~_UMASK)

@@ -72,6 +72,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import commitio
 from .generations import (
     _data_files,
     _publish,
@@ -318,11 +319,9 @@ def append_with_expectations(
     )
     check_layout(m_pre, path, partition_by)
 
-    from ..operators.indexing import _recover_index_locked, index_writer_lock
-
     os.makedirs(path, exist_ok=True)
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m = load_manifest(path)
         if _already_applied(m):
             return {"generation": int(m["head"]), "mode": mode,
@@ -485,12 +484,6 @@ def readmit(
     import shutil
     import tempfile
 
-    from ..operators.indexing import (
-        _chmod_staging,
-        _recover_index_locked,
-        index_writer_lock,
-    )
-    from .commitio import IO
     from .generations import carry_generations
 
     qpath = quarantine_path(path)
@@ -509,8 +502,8 @@ def readmit(
     fixed = pin_once(fixed)
     flags, bad, rows_in, n_bad, violations = gate_eval(fixed, expectations)
 
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         head = None
         if rows_in - n_bad > 0:
             fixed.filter(~bad).write.mode("append").parquet(path)
@@ -530,11 +523,11 @@ def readmit(
         # rewrite the quarantine to exactly the still-failing rows
         # (staged swap under its own lock; carry keeps prior
         # generations pinnable)
-        with index_writer_lock(qpath):
+        with commitio.IO.writer_lock(qpath):
             staging = tempfile.mkdtemp(
                 prefix="mri_readmit_", dir=os.path.dirname(qpath) or "."
             )
-            _chmod_staging(staging)
+            commitio.chmod_staging(staging)
             still = (
                 fixed.filter(bad)
                 .withColumn("_violations", violation_tags(flags))
@@ -550,7 +543,7 @@ def readmit(
                 ):
                     os.remove(os.path.join(staging, f))
             carry_generations(qpath, staging)
-            IO.publish_swap(qpath, staging)
+            commitio.IO.publish_swap(qpath, staging)
             if load_manifest(qpath) is None:
                 publish_generation(qpath)
     return {

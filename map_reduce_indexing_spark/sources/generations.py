@@ -88,7 +88,9 @@ from pyspark.sql import functions as F
 
 from .. import state
 from ..localrel import local_rows_df
+from . import commitio
 from .commitio import MANIFEST_NAME as GEN_FILE  # noqa: E402 — one name
+
 GEN_DIR = "_gen"  # underscore: invisible to Spark directory scans
 # File-skipping stats: per-file column [min, max] harvested from the
 # parquet FOOTER at publish time (metadata-only — no data pages read)
@@ -499,9 +501,8 @@ def generation_row_count(path: str, at: int | str | None = None) -> int:
     falls back to one footer read. The Iceberg move for the most
     common query there is — at 100 TB a dashboard's COUNT(*) should
     not launch a cluster job."""
-    from ..operators.indexing import recover_index
 
-    recover_index(path)
+    commitio.recover_index(path)
     m = load_manifest(path)
     if m is None:
         raise ValueError(f"{path!r} has no generation manifest")
@@ -550,9 +551,8 @@ def generation_column_bounds(
     bounds as bounds; numeric/temporal stats are exact. The companion
     to generation_row_count: at 100 TB, 'what date range does this
     table cover' should not launch a cluster job."""
-    from ..operators.indexing import recover_index
 
-    recover_index(path)
+    commitio.recover_index(path)
     m = load_manifest(path)
     if m is None:
         raise ValueError(f"{path!r} has no generation manifest")
@@ -781,9 +781,7 @@ def load_manifest(path: str) -> dict | None:
 
 
 def _save_manifest(path: str, manifest: dict) -> None:
-    from .commitio import IO
-
-    IO.save_json_atomic(_gen_path(path), manifest)
+    commitio.IO.save_json_atomic(_gen_path(path), manifest)
 
 
 def generation_head(path: str) -> int:
@@ -847,11 +845,10 @@ def tag_generation(path: str, name: str, at: int | None = None) -> int:
     gives an open-ended one (a week-long training run pins its input
     by name, ingest and compaction churn freely). Taken under the
     artifact's writer flock: manifest updates are read-modify-write."""
-    from ..operators.indexing import index_writer_lock
 
     if not _TAG_RE.match(name):
         raise ValueError(f"invalid tag name {name!r}")
-    with index_writer_lock(path):
+    with commitio.IO.writer_lock(path):
         m = load_manifest(path)
         if m is None:
             raise ValueError(f"{path!r} has no generation manifest")
@@ -869,9 +866,8 @@ def tag_generation(path: str, name: str, at: int | None = None) -> int:
 def drop_tag(path: str, name: str) -> None:
     """Release a tag; its generation re-enters normal TTL retention
     (pruned at the next publish once aged out, not immediately)."""
-    from ..operators.indexing import index_writer_lock
 
-    with index_writer_lock(path):
+    with commitio.IO.writer_lock(path):
         m = load_manifest(path)
         if m is not None and name in (m.get("refs") or {}):
             del m["refs"][name]
@@ -906,8 +902,6 @@ def drop_savepoint(paths: list[str], name: str) -> None:
 
 
 def _link_tree(src_root: str, rels: list[str], dst_root: str) -> None:
-    from .commitio import IO
-
     for rel in rels:
         dst = os.path.join(dst_root, rel)
         if os.path.exists(dst):
@@ -917,7 +911,7 @@ def _link_tree(src_root: str, rels: list[str], dst_root: str) -> None:
             # overwrite would race its pinned readers for nothing
             continue
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-        IO.link_or_copy(os.path.join(src_root, rel), dst)
+        commitio.IO.link_or_copy(os.path.join(src_root, rel), dst)
 
 
 def _expired(gens: dict, refs: dict | None = None) -> list[str]:
@@ -1126,17 +1120,10 @@ def drop_columns(spark: SparkSession, path: str, cols: list[str]) -> int:
     layout first). Returns the new head generation."""
     import tempfile
 
-    from ..operators.indexing import (
-        _chmod_staging,
-        _recover_index_locked,
-        index_writer_lock,
-    )
-    from .commitio import IO
-
     if not cols:
         raise ValueError("drop_columns requires at least one column")
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m = load_manifest(path)
         if m is None:
             ensure_base_generation(path)
@@ -1178,7 +1165,7 @@ def drop_columns(spark: SparkSession, path: str, cols: list[str]) -> int:
         staging = tempfile.mkdtemp(
             prefix="mri_dropcols_", dir=os.path.dirname(path) or "."
         )
-        _chmod_staging(staging)
+        commitio.chmod_staging(staging)
         w = out.write.mode("overwrite")
         if part_cols:
             w = w.partitionBy(*part_cols)
@@ -1193,7 +1180,7 @@ def drop_columns(spark: SparkSession, path: str, cols: list[str]) -> int:
             spark=spark,
             schema=out.schema.jsonValue(),
         )
-        IO.publish_swap(path, staging)
+        commitio.IO.publish_swap(path, staging)
     return generation_head(path)
 
 
@@ -1226,10 +1213,6 @@ def rename_columns(spark: SparkSession, path: str, mapping: dict[str, str]) -> i
     SURVEY.md §2.12); Iceberg RENAME COLUMN is the public shape
     (field-id indirection), reduced to a name-chain + reuse guard on
     this repo's manifest."""
-    from ..operators.indexing import (
-        _recover_index_locked,
-        index_writer_lock,
-    )
 
     if not mapping:
         raise ValueError("rename_columns requires at least one mapping")
@@ -1238,8 +1221,8 @@ def rename_columns(spark: SparkSession, path: str, mapping: dict[str, str]) -> i
             raise ValueError(f"invalid column name {new!r}")
         if old == new:
             raise ValueError(f"rename {old!r} -> {new!r} is a no-op")
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m = load_manifest(path)
         if m is None:
             ensure_base_generation(path)
@@ -1937,12 +1920,7 @@ def append_rows(
     import tempfile
     import uuid
 
-    from ..operators.indexing import (
-        _chmod_staging,
-        _recover_index_locked,
-        index_writer_lock,
-    )
-    from .commitio import IO, CommitConflict
+    from .commitio import CommitConflict
 
     entry_extra = None
     rejects = None
@@ -2017,13 +1995,13 @@ def append_rows(
     # optimistic appenders, and ensure_base_generation re-checks the
     # manifest under it (losers of this race become a no-op).
     if load_manifest(path) is None and _data_files(path):
-        with index_writer_lock(path):
-            _recover_index_locked(path)
+        with commitio.IO.writer_lock(path):
+            commitio.IO.recover(path)
             ensure_base_generation(path)
     staging = tempfile.mkdtemp(
         prefix="mri_append_", dir=os.path.dirname(path) or "."
     )
-    _chmod_staging(staging)
+    commitio.chmod_staging(staging)
     try:
         w = df.write.mode("overwrite")
         if partition_by:
@@ -2045,7 +2023,7 @@ def append_rows(
                     os.path.dirname(dst),
                     f".{os.path.basename(dst)}.{uuid.uuid4().hex}.place",
                 )
-                IO.link_or_copy(os.path.join(staging, rel), tmp)
+                commitio.IO.link_or_copy(os.path.join(staging, rel), tmp)
                 os.replace(tmp, dst)
 
         def _route_rejects(head: int) -> int:
@@ -2067,9 +2045,9 @@ def append_rows(
                 )
             return head
 
-        if not getattr(IO, "supports_cas", False):
-            with index_writer_lock(path):
-                _recover_index_locked(path)
+        if not getattr(commitio.IO, "supports_cas", False):
+            with commitio.IO.writer_lock(path):
+                commitio.IO.recover(path)
                 # authoritative guard re-check UNDER the lock (r12
                 # advice, low): the pre-staging validation read m_pre
                 # before exclusion — a writer that landed since could
@@ -2094,12 +2072,12 @@ def append_rows(
                     schema=schema_sj,
                 )
             return _route_rejects(head)
-        if IO.needs_recovery(path):
+        if commitio.IO.needs_recovery(path):
             # a rewriter crashed mid-swap: heal under the exclusive
             # lease (which also drains other appenders) before joining
-            with index_writer_lock(path):
-                _recover_index_locked(path)
-        with IO.append_lease(path):
+            with commitio.IO.writer_lock(path):
+                commitio.IO.recover(path)
+        with commitio.IO.append_lease(path):
             _place()
             last: Exception = CommitConflict("unreached")
             head = None
@@ -2273,9 +2251,8 @@ def plan_generation_scan(
     scan planner listing and footer-reading a million immutable files
     per query (Iceberg's manifest-level min/max pruning, reduced to
     its data-plane half)."""
-    from ..operators.indexing import recover_index
 
-    recover_index(path)
+    commitio.recover_index(path)
     m = load_manifest(path)
     if m is None:
         raise ValueError(
@@ -2873,16 +2850,10 @@ def delete_rows(spark: SparkSession, path: str, where) -> dict:
     sides are parquet-exact), so the report costs no extra scan."""
     import tempfile
 
-    from ..operators.indexing import (
-        _chmod_staging,
-        _recover_index_locked,
-        index_writer_lock,
-    )
-
     if not where:
         raise ValueError("delete_rows requires a non-empty predicate")
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m = load_manifest(path)
         if m is None:
             ensure_base_generation(path)
@@ -2926,7 +2897,7 @@ def delete_rows(spark: SparkSession, path: str, where) -> dict:
         staging = tempfile.mkdtemp(
             prefix="mri_delete_", dir=os.path.dirname(path) or "."
         )
-        _chmod_staging(staging)
+        commitio.chmod_staging(staging)
         # rows of the affected files that do NOT match the predicate
         # survive; a NULL predicate is not-matched (SQL DELETE
         # semantics), hence the coalesce. The shared listing reader
@@ -2962,9 +2933,8 @@ def delete_rows(spark: SparkSession, path: str, where) -> dict:
             if r not in kept_set
         )
         carry_generations(path, staging, spark=spark)
-        from .commitio import IO
 
-        IO.publish_swap(path, staging)
+        commitio.IO.publish_swap(path, staging)
         return {
             "generation": head + 1,
             "rewritten_files": len(affected),
@@ -3004,16 +2974,10 @@ def delete_rows_dv(spark: SparkSession, path: str, where) -> dict:
     import tempfile
     import uuid
 
-    from ..operators.indexing import (
-        _recover_index_locked,
-        index_writer_lock,
-    )
-    from .commitio import IO
-
     if not where:
         raise ValueError("delete_rows_dv requires a non-empty predicate")
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m = load_manifest(path)
         if m is None:
             ensure_base_generation(path)
@@ -3388,19 +3352,12 @@ def upsert_rows(
     away."""
     import tempfile
 
-    from ..operators.indexing import (
-        _chmod_staging,
-        _recover_index_locked,
-        index_writer_lock,
-    )
-    from .commitio import IO
-
     if not key_cols:
         raise ValueError("upsert_rows requires key_cols")
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m = load_manifest(path)
         if m is None:
             ensure_base_generation(path)
@@ -3498,7 +3455,7 @@ def upsert_rows(
         staging = tempfile.mkdtemp(
             prefix="mri_upsert_", dir=os.path.dirname(path) or "."
         )
-        _chmod_staging(staging)
+        commitio.chmod_staging(staging)
         part_cols = sorted({k for r in live for k in _partition_values(r)})
 
         def _write(df: DataFrame) -> None:
@@ -3539,7 +3496,7 @@ def upsert_rows(
         )
         updated = affected_rows - remaining
         carry_generations(path, staging, spark=spark)
-        IO.publish_swap(path, staging)
+        commitio.IO.publish_swap(path, staging)
         return {
             "generation": head + 1,
             "rewritten_files": len(affected),
@@ -3605,7 +3562,7 @@ def optimize_store(
     manifest (precise — a crashed optimistic placement on the live
     listing is residue for vacuum_store, never input to the rewrite);
     manifest-less artifacts keep the live directory scan."""
-    from ..operators.indexing import compact_artifact
+    from .artifacts import compact_artifact  # artifacts imports this module
 
     if zorder_by is not None:
         if cluster_by:
@@ -3753,7 +3710,6 @@ def set_compaction_policy(
     (DV_BROADCAST_MAX_ROWS): the policy keeps vectors small on a
     maintained store, the guard keeps an unmaintained one from
     OOMing."""
-    from ..operators.indexing import _recover_index_locked, index_writer_lock
 
     if max_files < 1 or n_files < 1:
         raise ValueError("max_files and n_files must be >= 1")
@@ -3761,8 +3717,8 @@ def set_compaction_policy(
         raise ValueError("max_deleted_ratio must be in (0, 1)")
     if max_dv_rows is not None and max_dv_rows < 1:
         raise ValueError("max_dv_rows must be >= 1")
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         ensure_base_generation(path)
         m = load_manifest(path)
         if m is None:
@@ -3797,7 +3753,6 @@ def maybe_autocompact(spark: SparkSession, path: str) -> int | None:
     pipelines per run); the check is one manifest read, the optimize
     is the standard staged swap — pinned readers and matview
     consumers see an ordinary rewrite span."""
-    from ..operators.indexing import _recover_index_locked, index_writer_lock
 
     m = load_manifest(path)
     pol = (m or {}).get("compact_policy")
@@ -3843,8 +3798,8 @@ def maybe_autocompact(spark: SparkSession, path: str) -> int | None:
     new_head = optimize_store(
         spark, path, pol.get("cluster_by"), n_files=int(pol["n_files"])
     )
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m2 = load_manifest(path)
         if m2 is not None and m2.get("compact_policy"):
             p2 = dict(m2["compact_policy"])
@@ -3878,8 +3833,6 @@ def vacuum_store(path: str, grace_seconds: float = 3600.0) -> dict:
     listings, which are exactly what vacuum keeps."""
     import time
 
-    from ..operators.indexing import _recover_index_locked, index_writer_lock
-
     removed = {
         "data_files": 0,
         "snapshot_dirs": 0,
@@ -3887,8 +3840,8 @@ def vacuum_store(path: str, grace_seconds: float = 3600.0) -> dict:
         "dv_sidecars": 0,
         "temp_files": 0,
     }
-    with index_writer_lock(path):
-        _recover_index_locked(path)
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
         m = load_manifest(path)
         if m is None:
             raise ValueError(
@@ -4088,9 +4041,8 @@ def generation_predicate_count(
     pushdown half of the Iceberg-manifest move (generation_row_count
     is the unpredicated case). Returns {"count", "files_total",
     "files_pruned", "files_metadata", "files_scanned"}."""
-    from ..operators.indexing import recover_index
 
-    recover_index(path)
+    commitio.recover_index(path)
     m = load_manifest(path)
     if m is None:
         raise ValueError(f"{path!r} has no generation manifest")

@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import local_rows_df
+from . import commitio
 from .generations import (
     diff_plan,
     generation_diff,
@@ -153,12 +154,11 @@ def run_incremental_pipeline(
         raise ValueError(
             f"on_first_run must be append|error, got {on_first_run!r}"
         )
-    from ..operators.indexing import _recover_index_locked, index_writer_lock
     from .generations import _data_files, reachable_files
 
     os.makedirs(dst_path, exist_ok=True)
-    with index_writer_lock(dst_path):
-        _recover_index_locked(dst_path)
+    with commitio.IO.writer_lock(dst_path):
+        commitio.IO.recover(dst_path)
         # Orphan sweep: a prior run that crashed BETWEEN its output
         # append and its publish leaves data files on the live listing
         # that no generation records — and its bookmark unadvanced, so
@@ -330,14 +330,12 @@ def run_incremental_pipeline(
             # the destination's prior generations stay pinned/readable
             import tempfile
 
-            from .commitio import IO
-            from ..operators.indexing import _chmod_staging
             from .generations import carry_generations
 
             staging = tempfile.mkdtemp(
                 prefix="mri_pipeline_", dir=os.path.dirname(dst_path) or "."
             )
-            _chmod_staging(staging)
+            commitio.chmod_staging(staging)
             w = out.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
@@ -358,7 +356,7 @@ def run_incremental_pipeline(
                 manifest_extra=top,
                 schema=out_schema,
             )
-            IO.publish_swap(dst_path, staging)
+            commitio.IO.publish_swap(dst_path, staging)
             gen = generation_head(dst_path)
         else:
             w = out.write.mode("append")
@@ -397,16 +395,14 @@ def run_incremental_pipeline(
                 # stay pinnable (same shape as readmit's rewrite).
                 import tempfile
 
-                from ..operators.indexing import _chmod_staging
-                from .commitio import IO
                 from .generations import carry_generations
 
-                with index_writer_lock(qpath):
+                with commitio.IO.writer_lock(qpath):
                     staging = tempfile.mkdtemp(
                         prefix="mri_pipeq_",
                         dir=os.path.dirname(qpath) or ".",
                     )
-                    _chmod_staging(staging)
+                    commitio.chmod_staging(staging)
                     rejects.write.mode("overwrite").parquet(staging)
                     for f in os.listdir(staging):
                         if f.startswith("_") and os.path.isfile(
@@ -414,7 +410,7 @@ def run_incremental_pipeline(
                         ):
                             os.remove(os.path.join(staging, f))
                     carry_generations(qpath, staging)
-                    IO.publish_swap(qpath, staging)
+                    commitio.IO.publish_swap(qpath, staging)
                     if load_manifest(qpath) is None:
                         publish_generation(qpath)
             else:

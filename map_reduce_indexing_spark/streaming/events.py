@@ -30,7 +30,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..operators.dedup import duck_cosine, duck_lsh_bucket, spark_cosine, spark_lsh_bucket
+from ..operators.indexing import POSTINGS_SQL, TOKENS_SQL, build_postings, with_letter
 from ..plans.registry import register
+from ..sources import commitio
+from ..sources.artifacts import session_artifact_path
 from ..sources.tables import load_table
 
 # Parquet-level schema: ts arrives as epoch-nanos long (nanosAsLong).
@@ -472,8 +475,6 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _postings_oracle() -> str:
-    from ..operators.indexing import POSTINGS_SQL
-
     return POSTINGS_SQL
 
 
@@ -496,7 +497,6 @@ def q_stream_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..operators.indexing import build_postings, with_letter
     from ..schemas import DOCUMENT
 
     # One workdir per Spark application, reused (and overwritten) across
@@ -583,7 +583,6 @@ def incremental_index_append(
 
     `max_files_per_trigger` bounds each microbatch (production knob for
     commit granularity; tests use 1 to force multi-batch runs)."""
-    from ..operators.indexing import build_postings, with_letter
     from ..schemas import DOCUMENT
 
     # Layout guard: the two modes produce different directory depths
@@ -613,8 +612,6 @@ def incremental_index_append(
     docs = reader.parquet(sf_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.indexing import _recover_index_locked, index_writer_lock
-
         postings = with_letter(build_postings(batch_df))
         # Same writer lock as IndexSession.append/compact_index: a
         # microbatch append racing a compaction's directory swap would
@@ -623,8 +620,8 @@ def incremental_index_append(
         # crashed compaction before writing, for the same reason as
         # IndexSession.append: appending into a missing live path would
         # orphan the .old copy forever.
-        with index_writer_lock(index_path):
-            _recover_index_locked(index_path)
+        with commitio.IO.writer_lock(index_path):
+            commitio.IO.recover(index_path)
             if checkpoint is not None:
                 # Per-batch layout re-check under the lock (the pre-start
                 # guard above runs once, outside the flock): a compaction
@@ -814,11 +811,6 @@ def incremental_vector_append(
     Lookups prune on `bucket` in either layout (Hive discovery handles
     the extra batch level); `compact_vector_store` folds either into
     the flat one-file-per-bucket form."""
-    from ..operators.indexing import (
-        _recover_index_locked,
-        index_writer_lock,
-        recover_index,
-    )
     from ..operators.similarity import (
         _with_bucket,
         append_vectors,
@@ -832,7 +824,7 @@ def incremental_vector_append(
     # Heal a crash-stranded store BEFORE sniffing its layout: a store
     # caught between a compactor's two renames looks like an empty path,
     # which would silently bypass both guards and default the layout.
-    recover_index(store_path)
+    commitio.recover_index(store_path)
     if os.path.isdir(store_path):
         has_flat = any(
             e.startswith(("bucket=", "cell=")) for e in os.listdir(store_path)
@@ -882,8 +874,8 @@ def incremental_vector_append(
                     ),
                 )
             bucketed = bucketed.repartition(layout_col)
-            with index_writer_lock(store_path):
-                _recover_index_locked(store_path)
+            with commitio.IO.writer_lock(store_path):
+                commitio.IO.recover(store_path)
                 # Re-check the layout PER BATCH under the lock, not just
                 # once before the stream started: the flock explicitly
                 # admits a compactor BETWEEN microbatches, and
@@ -1159,7 +1151,6 @@ def streaming_token_summaries(
 
 def _stream_hh_oracle() -> str:
     from ..operators.heavyhitters import _hh_oracle
-    from ..operators.indexing import TOKENS_SQL
 
     return _hh_oracle(TOKENS_SQL, "word")
 
@@ -1377,7 +1368,6 @@ def run_continuous_aggregate(
 
     Returns the per-batch refresh reports (delta_files per refresh —
     the delta-only claim, asserted in tests)."""
-    from ..operators.indexing import index_writer_lock
     from ..operators.matview import (
         create_matview,
         create_matview_join,
@@ -1388,7 +1378,7 @@ def run_continuous_aggregate(
     reports: list[dict] = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        with index_writer_lock(store_path):
+        with commitio.IO.writer_lock(store_path):
             ensure_base_generation(store_path)
             batch_df.write.mode("append").parquet(store_path)
             publish_generation(store_path)
@@ -1437,7 +1427,6 @@ def events_continuous_agg_demo(spark: SparkSession, sf_dir: str) -> str:
     The exported query reads the final view; its oracle aggregates the
     whole events table, so the external hash match proves four rounds
     of incremental maintenance land exactly on the full answer."""
-    from ..operators.indexing import session_artifact_path
 
     def build(path: str) -> None:
         src = os.path.join(path, "src")
@@ -1514,7 +1503,6 @@ def run_cdc_apply(
     version per key, whatever the batch partitioning — which is what
     makes the exported query's oracle (a plain window over the raw
     table) exact. Returns the per-batch upsert reports."""
-    from ..operators.indexing import index_writer_lock
     from ..sources.generations import (
         ensure_base_generation,
         publish_generation,
@@ -1547,7 +1535,7 @@ def run_cdc_apply(
             .drop("_rn")
         )
         if not os.path.isdir(store_path):
-            with index_writer_lock(store_path):
+            with commitio.IO.writer_lock(store_path):
                 newest.write.parquet(store_path)
                 publish_generation(store_path)
             reports.append(
@@ -1555,7 +1543,7 @@ def run_cdc_apply(
                  "updated_rows": 0, "stale_dropped": True}
             )
             return
-        with index_writer_lock(store_path):
+        with commitio.IO.writer_lock(store_path):
             ensure_base_generation(store_path)
         # drop candidates not strictly newer than the stored version.
         # The stored side reads ONLY the files that may hold the
@@ -1618,7 +1606,6 @@ def events_cdc_apply_demo(spark: SparkSession, sf_dir: str) -> str:
     one file per microbatch into a generations store keyed by
     user_id, ordered by (ts, event_id). The final store = each user's
     globally newest event."""
-    from ..operators.indexing import session_artifact_path
 
     def build(path: str) -> None:
         src = os.path.join(path, "src")
@@ -1841,7 +1828,6 @@ def events_gated_ingest_demo(spark: SparkSession, sf_dir: str) -> str:
     violate; expensive error events violate both). Every microbatch
     publishes one audited generation; the quarantine sibling
     accumulates the rejects."""
-    from ..operators.indexing import session_artifact_path
 
     def build(path: str) -> None:
         src = os.path.join(path, "src")
@@ -1920,7 +1906,6 @@ def events_autocompact_ingest_demo(spark: SparkSession, sf_dir: str) -> str:
     (generations.set_compaction_policy / maybe_autocompact). The
     build asserts the policy FIRED repeatedly and the head file count
     stayed bounded the whole run."""
-    from ..operators.indexing import session_artifact_path
     from ..sources.generations import load_manifest
 
     def build(path: str) -> None:

@@ -76,7 +76,7 @@ def test_append_blocks_while_writer_lock_held(spark, tmp_path):
     import threading
     import time
 
-    from map_reduce_indexing_spark.operators.indexing import index_writer_lock
+    from map_reduce_indexing_spark.sources import commitio
 
     base = spark.createDataFrame(
         [("a", "alpha beta"), ("b", "beta gamma")], "doc_id string, text string"
@@ -95,7 +95,7 @@ def test_append_blocks_while_writer_lock_held(spark, tmp_path):
         idx.append(more2)
         done.set()
 
-    with index_writer_lock(idx.index_path):
+    with commitio.IO.writer_lock(idx.index_path):
         t = threading.Thread(target=do_append)
         t.start()
         # A warmed append of 1 tiny doc completes well inside 3 s when
@@ -135,12 +135,12 @@ def test_writer_lock_excludes_across_processes(spark, tmp_path):
     same-process evidence. Here: (a) an append in THIS process blocks
     while a subprocess holds the flock and completes losslessly after
     release; (b) a subprocess cannot acquire while this process holds
-    it via index_writer_lock, and can after."""
+    it via commitio.IO.writer_lock, and can after."""
     import subprocess
     import sys
     import threading
 
-    from map_reduce_indexing_spark.operators.indexing import index_writer_lock
+    from map_reduce_indexing_spark.sources import commitio
 
     base = spark.createDataFrame(
         [("a", "alpha beta"), ("b", "beta gamma")], "doc_id string, text string"
@@ -195,7 +195,7 @@ def test_writer_lock_excludes_across_processes(spark, tmp_path):
             timeout=30,
         ).stdout.strip()
 
-    with index_writer_lock(index_path):
+    with commitio.IO.writer_lock(index_path):
         assert probe() == "BLOCKED"
     assert probe() == "ACQUIRED"
 

@@ -117,9 +117,9 @@ def test_writer_lock_excludes_threads(tmp_path):
 
 
 def test_artifact_paths_route_through_the_seam(tmp_path, monkeypatch):
-    """index_writer_lock, manifest saves, and the compaction swap all
-    call the IO instance — swap in a counting backend and watch the
-    calls arrive (the seam is real, not parallel code)."""
+    """Package writers look the backend up at call time — swap in a
+    counting backend and watch a writer's lock call arrive (the seam is
+    real, not parallel code)."""
     import map_reduce_indexing_spark.sources.commitio as C
 
     calls = []
@@ -138,14 +138,11 @@ def test_artifact_paths_route_through_the_seam(tmp_path, monkeypatch):
             return super().save_json_atomic(path, obj)
 
     monkeypatch.setattr(C, "IO", Counting())
-    from map_reduce_indexing_spark.operators.indexing import (
-        index_writer_lock,
-    )
+    from map_reduce_indexing_spark.sources.generations import drop_tag
 
     store = str(tmp_path / "s")
     os.makedirs(store)
-    with index_writer_lock(store):
-        pass
+    drop_tag(store, "t")  # a manifest writer: enters the writer lock
     assert ("lock", store) in calls
 
 

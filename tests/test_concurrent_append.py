@@ -356,7 +356,6 @@ def test_layout_guard_holds_under_append_race(spark, tmp_path, monkeypatch, cas)
     its publish."""
     import contextlib
 
-    from map_reduce_indexing_spark.operators import indexing as IX
     from map_reduce_indexing_spark.sources import commitio as C
 
     ctx = using_backend(CASStoreIO()) if cas else contextlib.nullcontext()
@@ -364,7 +363,7 @@ def test_layout_guard_holds_under_append_race(spark, tmp_path, monkeypatch, cas)
         path = str(tmp_path / "store")
         flat = spark.createDataFrame([(1, "a")], "id long, k string")
         part = spark.createDataFrame([(2, "b")], "id long, k string")
-        orig = IX._chmod_staging
+        orig = C.chmod_staging
         fired = []
 
         def hook(staging):
@@ -373,7 +372,7 @@ def test_layout_guard_holds_under_append_race(spark, tmp_path, monkeypatch, cas)
                 fired.append(1)
                 append_rows(spark, path, part, partition_by=["k"])
 
-        monkeypatch.setattr(IX, "_chmod_staging", hook)
+        monkeypatch.setattr(C, "chmod_staging", hook)
         with pytest.raises(ValueError, match="layout"):
             append_rows(spark, path, flat)
         # the store kept the winner's layout and exactly its rows
@@ -388,7 +387,7 @@ def test_schema_guard_holds_under_append_race(spark, tmp_path, monkeypatch, cas)
     not the pre-staging one."""
     import contextlib
 
-    from map_reduce_indexing_spark.operators import indexing as IX
+    from map_reduce_indexing_spark.sources import commitio as C
     from map_reduce_indexing_spark.sources.generations import (
         SchemaEvolutionError,
     )
@@ -399,7 +398,7 @@ def test_schema_guard_holds_under_append_race(spark, tmp_path, monkeypatch, cas)
         append_rows(spark, path, spark.createDataFrame([(0,)], "id long"))
         same = spark.createDataFrame([(1,)], "id long")
         wide = spark.createDataFrame([(2, "x")], "id long, extra string")
-        orig = IX._chmod_staging
+        orig = C.chmod_staging
         fired = []
 
         def hook(staging):
@@ -408,7 +407,7 @@ def test_schema_guard_holds_under_append_race(spark, tmp_path, monkeypatch, cas)
                 fired.append(1)
                 append_rows(spark, path, wide, schema_mode="evolve")
 
-        monkeypatch.setattr(IX, "_chmod_staging", hook)
+        monkeypatch.setattr(C, "chmod_staging", hook)
         # strict append raced an evolution: the fresh declared schema
         # has the extra column, so the strict batch now drifts
         with pytest.raises(SchemaEvolutionError):

@@ -161,7 +161,7 @@ def test_compact_crash_recovery(spark, tmp_path):
     missing, .old present): the next read must self-heal."""
     import os
 
-    from map_reduce_indexing_spark.operators.indexing import recover_index
+    from map_reduce_indexing_spark.sources.commitio import recover_index
 
     path = str(tmp_path / "index_crash")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")

@@ -23,16 +23,14 @@ import time
 
 from pyspark.sql import functions as F
 
-from map_reduce_indexing_spark.operators.indexing import (
-    compact_artifact,
-    index_writer_lock,
-)
 from map_reduce_indexing_spark.operators.matview import (
     create_matview_join,
     read_matview,
     refresh_matview,
     rollup_matview,
 )
+from map_reduce_indexing_spark.sources import commitio
+from map_reduce_indexing_spark.sources.artifacts import compact_artifact
 from map_reduce_indexing_spark.sources.generations import (
     create_savepoint,
     delete_rows,
@@ -138,14 +136,14 @@ def test_full_lifecycle_composition(spark, tmp_path):
         # --- "microbatches": three append+publish+refresh rounds, one
         # of which also appends the dim's missing keys (backfill term)
         for step, lo in enumerate((100, 200, 300)):
-            with index_writer_lock(fact):
+            with commitio.IO.writer_lock(fact):
                 ensure_base_generation(fact)
                 _events(spark, lo, 12).coalesce(1).write.mode(
                     "append"
                 ).parquet(fact)
                 publish_generation(fact)
             if step == 1:
-                with index_writer_lock(dim):
+                with commitio.IO.writer_lock(dim):
                     _items(spark, [4, 5]).coalesce(1).write.mode(
                         "append"
                     ).parquet(dim)

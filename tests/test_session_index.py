@@ -180,7 +180,7 @@ def test_failed_artifact_build_is_not_cached(spark):
     """A build() that crashes must leave no cache entry; the retry gets
     a FRESH directory (mkdtemp), so a partial artifact can never be
     served or appended to."""
-    from map_reduce_indexing_spark.operators import indexing
+    from map_reduce_indexing_spark.sources import artifacts
 
     calls = []
 
@@ -196,7 +196,7 @@ def test_failed_artifact_build_is_not_cached(spark):
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError):
-        indexing.session_artifact_path(
+        artifacts.session_artifact_path(
             spark, SF_DIR, "crashkind", "documents.parquet", flaky_build
         )
     # nothing cached for the failed build
@@ -206,7 +206,7 @@ def test_failed_artifact_build_is_not_cached(spark):
         k[0] == "crashkind"
         for k in state.entries(spark.sparkContext, "artifact")
     )
-    path = indexing.session_artifact_path(
+    path = artifacts.session_artifact_path(
         spark, SF_DIR, "crashkind", "documents.parquet", flaky_build
     )
     assert len(calls) == 2

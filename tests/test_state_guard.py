@@ -1,10 +1,12 @@
-"""Design guard: session state lives in one place.
+"""Design guards, checked by AST-scanning the package.
 
 Every value the engine keeps between queries belongs in
 map_reduce_indexing_spark/state.py, which owns the locking, versioning,
-bounds and application scoping. This test AST-scans the package so a
-module-level cache with its own lock, or a cache key built from
-``applicationId``, cannot quietly grow back elsewhere.
+bounds and application scoping: a module-level cache with its own lock,
+or a cache key built from ``applicationId``, cannot quietly grow back
+elsewhere. The storage tier (``sources/``) does not reach up into
+``operators/``, and only ``sources/commitio.py`` binds the ``IO``
+backend name.
 """
 
 from __future__ import annotations
@@ -19,6 +21,10 @@ PKG = os.path.dirname(map_reduce_indexing_spark.__file__)
 # The one module-level lock outside state.py: it serializes a Spark
 # conf toggle around streaming micro-batches, and guards no cached state.
 LOCK_ALLOWED = {("streaming/events.py", "_SHUFFLE_CONF_LOCK")}
+
+# The one storage-tier import of an operator module: export.py writes
+# textstats' per-document statistics, and imports them at module level.
+SOURCES_UP_ALLOWED = {("sources/export.py", "operators.textstats")}
 
 
 def _modules():
@@ -94,3 +100,63 @@ def test_application_id_only_names_workdirs():
             ):
                 found.append(f"{rel}:{node.lineno}")
     assert not found, f"applicationId used outside a workdir path: {found}"
+
+
+def _imports(rel, tree):
+    """(node, module) for every import in a module, the module dotted
+    relative to the package root ("operators.indexing")."""
+    pkg = rel.split("/")[:-1]
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                yield node, a.name.removeprefix("map_reduce_indexing_spark.")
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = pkg[: len(pkg) - (node.level - 1)]
+            else:
+                base = []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            mod = mod.removeprefix("map_reduce_indexing_spark.")
+            if node.module:
+                yield node, mod
+            else:  # `from .. import operators`
+                for a in node.names:
+                    yield node, f"{mod}.{a.name}".lstrip(".")
+
+
+def test_storage_tier_does_not_import_operators():
+    found = []
+    for rel, tree in _modules():
+        if not rel.startswith("sources/"):
+            continue
+        top = {id(n) for n in tree.body}
+        for node, mod in _imports(rel, tree):
+            if mod.split(".")[0] != "operators":
+                continue
+            if id(node) in top and (rel, mod) in SOURCES_UP_ALLOWED:
+                continue
+            found.append(f"{rel}:{node.lineno} {mod}")
+    assert not found, f"sources/ imports from operators/: {found}"
+
+
+def test_only_commitio_binds_the_backend():
+    """`using_backend` swaps the module attribute `commitio.IO`. A
+    module that binds the name itself (`from .commitio import IO`)
+    holds whatever backend was current when the binding ran, so callers
+    must look it up as `commitio.IO`."""
+    found = []
+    for rel, tree in _modules():
+        if rel == "sources/commitio.py":
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and any(
+                "IO" in (a.name, a.asname) for a in node.names
+            ):
+                found.append(f"{rel}:{node.lineno}")
+            elif (
+                isinstance(node, ast.Name)
+                and node.id == "IO"
+                and isinstance(node.ctx, ast.Store)
+            ):
+                found.append(f"{rel}:{node.lineno}")
+    assert not found, f"modules binding commitio's IO: {found}"

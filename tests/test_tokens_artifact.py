@@ -123,11 +123,11 @@ def test_index_build_chains_on_tokens_artifact(spark):
     builds under its own entry lock), and the chained postings must equal
     the direct build path."""
     from map_reduce_indexing_spark.operators.indexing import (
-        _artifact_postings,
         postings_for,
+        postings_from_tokens,
     )
 
-    chained = _artifact_postings(spark, SF_DIR)
+    chained = postings_from_tokens(tokenized_docs(spark, SF_DIR))
     direct = postings_for(spark, SF_DIR)
     diff = chained.exceptAll(direct).unionAll(direct.exceptAll(chained))
     assert diff.count() == 0

@@ -212,7 +212,7 @@ def test_append_waits_for_writer_lock(spark, tmp_path):
     stand-in), release lets it land losslessly."""
     import threading
 
-    from map_reduce_indexing_spark.operators.indexing import index_writer_lock
+    from map_reduce_indexing_spark.sources import commitio
 
     path = str(tmp_path / "vstore")
     vs = VectorStore.build(spark, _vectors(spark, 0, 50), path)
@@ -223,7 +223,7 @@ def test_append_waits_for_writer_lock(spark, tmp_path):
         vs.append(_vectors(spark, 60, 70))
         done.set()
 
-    with index_writer_lock(path):
+    with commitio.IO.writer_lock(path):
         t = threading.Thread(target=do_append)
         t.start()
         assert not done.wait(timeout=3.0), "append ran under a held lock"
