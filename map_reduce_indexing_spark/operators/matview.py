@@ -77,8 +77,8 @@ homomorphic aggregates, which is exactly what makes it exact:
   parquet directory (plus `_support_<out>/` parquet subdirs —
   underscore-prefixed, invisible to a plain read of the view root)
   plus a `_matview.json` sidecar (base path, pinned base generation,
-  spec), written via staged `os.replace` swap under
-  `commitio.IO.writer_lock(view_path)` — a crash leaves the old view + old
+  spec), written via one staged swap (`generations.staged_rewrite`)
+  under `commitio.IO.writer_lock(view_path)` — a crash leaves the old view + old
   sidecar (the pinned generation is re-consumable because generations
   are immutable and retained), a torn state is impossible.
 
@@ -125,6 +125,7 @@ from ..sources.generations import (
     generation_diff,
     generation_head,
     read_generation,
+    staged_rewrite,
 )
 
 MATVIEW_FILE = "_matview.json"
@@ -435,21 +436,13 @@ def _write_view(
     locked: bool = False,
 ) -> None:
     """Staged write + atomic swap of data, support tables, AND sidecar
-    together, under the view's writer flock (same crash story as
-    compact_artifact: old view intact until the final rename pair).
+    together, under the view's writer flock (`staged_rewrite`, the same
+    crash story as compact_artifact: old view intact until the swap).
     `locked=True` when the caller already holds the flock — the lock
     is per-fd, so re-entering from the same thread would deadlock."""
     import contextlib
-    import tempfile
 
-    guard = (
-        contextlib.nullcontext() if locked else commitio.IO.writer_lock(view_path)
-    )
-    with guard:
-        staging = tempfile.mkdtemp(
-            prefix="mri_matview_", dir=os.path.dirname(view_path) or "."
-        )
-        commitio.chmod_staging(staging)
+    def write(staging: str) -> None:
         df.write.mode("overwrite").parquet(staging)
         for name, sup in (supports or {}).items():
             dst = os.path.join(staging, f"_support_{name}")
@@ -475,7 +468,12 @@ def _write_view(
                 sup.write.mode("overwrite").parquet(dst)
         with open(os.path.join(staging, MATVIEW_FILE), "w") as fh:
             json.dump(sidecar, fh)
-        commitio.IO.publish_swap(view_path, staging)
+
+    guard = (
+        contextlib.nullcontext() if locked else commitio.IO.writer_lock(view_path)
+    )
+    with guard:
+        staged_rewrite(view_path, write, "mri_matview_")
 
 
 def create_matview(

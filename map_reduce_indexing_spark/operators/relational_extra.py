@@ -2082,7 +2082,7 @@ def orders_schema_evolution_demo(spark: SparkSession, sf_dir: str) -> str:
     generation 2 appends the odd-keyed orders under an EVOLVED schema
     (o_custkey widened int->long, o_orderpriority added) via
     schema_mode='evolve' (sources/generations.py:check_schema_
-    evolution / _read_reconciled). The build asserts the pinned read
+    evolution / _read_groups). The build asserts the pinned read
     of generation 1 keeps its pre-evolution shape."""
     from ..sources.generations import (
         append_rows,
@@ -2133,7 +2133,7 @@ def orders_schema_evolution_demo(spark: SparkSession, sf_dir: str) -> str:
     """,
     tier="relational",
     doc="SCHEMA EVOLUTION on a generations store (round 12 — "
-    "sources/generations.py:check_schema_evolution, _read_reconciled): "
+    "sources/generations.py:check_schema_evolution, _read_groups): "
     "the store's second batch ADDED a column (o_orderpriority) and "
     "WIDENED one (o_custkey int->long) under schema_mode='evolve'; "
     "the head read reconciles the mixed-schema listing — per-file "

@@ -32,6 +32,7 @@ from ..localrel import local_rows_df
 from ..plans.registry import register
 from ..sources import commitio
 from ..sources.artifacts import compact_artifact, session_artifact_df
+from ..sources.generations import staged_rewrite
 from ..sources.tables import load_table
 from .dedup import (
     EMB_DIM,
@@ -356,31 +357,21 @@ def build_vector_store(
             # store holds trained-cell partitions (or PQ codes) but no
             # sidecar — a "healthy" store that silently routes every
             # later lookup/append with the wrong model.
-            import shutil
-            import tempfile
+            def write(staging: str) -> None:
+                _write_vector_store(
+                    vectors,
+                    staging,
+                    mode="overwrite",
+                    col=col,
+                    centroids=centroids,
+                    books=books,
+                )
+                if centroids is not None:
+                    _save_quantizer(staging, centroids)
+                if books is not None:
+                    _save_codebook(staging, books)
 
-            staging = tempfile.mkdtemp(
-                prefix="mri_build_", dir=os.path.dirname(path) or "."
-            )
-            commitio.chmod_staging(staging)
-            _write_vector_store(
-                vectors,
-                staging,
-                mode="overwrite",
-                col=col,
-                centroids=centroids,
-                books=books,
-            )
-            if centroids is not None:
-                _save_quantizer(staging, centroids)
-            if books is not None:
-                _save_codebook(staging, books)
-            old = path + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(path):
-                os.replace(path, old)
-            os.replace(staging, path)
-            shutil.rmtree(old, ignore_errors=True)
+            staged_rewrite(path, write, "mri_build_", spark=spark)
 
 
 def append_vectors(spark: SparkSession, vectors: DataFrame, path: str) -> None:

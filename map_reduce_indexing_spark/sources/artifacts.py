@@ -13,7 +13,7 @@ tokens, signatures, model statistics, vector stores, relational bases):
 - `read_artifact` / `session_artifact_df` serve it as a cached
   partition-discovered read, or a pinned generation;
 - `compact_artifact` folds appended files back under the writer lock
-  with a crash-safe staged swap.
+  with a crash-safe staged swap (`generations.staged_rewrite`).
 
 Each artifact supplies only its build, delta and rewrite steps; this
 module imports nothing from `operators/`.
@@ -281,14 +281,15 @@ def compact_artifact(
     """The locked read -> rewrite -> staged-swap engine behind every
     persisted artifact's compaction. `rewrite(df, staging)` writes the
     compacted form of the artifact's current contents to the staging
-    directory; everything else — lock, recovery, staging, sidecars,
-    generations, swap — happens here.
+    directory; the lock, recovery and sidecars happen here, and
+    staging, generations and the swap in `generations.staged_rewrite`.
 
     The whole read-merge-swap runs under the writer lock, so appends
     issued mid-compaction wait and land on the compacted copy instead
     of vanishing in the swap. The swap (`commitio.IO.publish_swap`)
     leaves a complete copy on disk at every instant, and
-    `recover_index` heals a crash inside it on the next call.
+    `recover_index` heals a crash inside it on the next call; a
+    rewrite that raises leaves no staging dir behind.
 
     The input is `read_live` — the logical rows, so a head deletion
     vector does not survive the fold and the new entry carries none.
@@ -305,21 +306,19 @@ def compact_artifact(
     with commitio.IO.writer_lock(path):
         commitio.IO.recover(path)
         df = df_source(spark) if df_source is not None else read_live(spark, path)
-        staging = tempfile.mkdtemp(
-            prefix="mri_compact_", dir=os.path.dirname(path) or "."
-        )
-        commitio.chmod_staging(staging)
-        rewrite(df, staging)
         listing = _load_sources(path)
-        if listing is not None:
-            _save_sources(staging, listing)
-        # Snapshot support: relocate pinned generations into staging
-        # (hardlinks; live path untouched) and stage the post-swap
-        # manifest so data + generations commit atomically. No-op for
-        # stores that never published a generation. The session is
-        # passed through so a bulk rewrite's stats/bloom rebuild runs
-        # as one Spark job over the staged file list.
-        generations.carry_generations(
-            path, staging, spark=spark, entry_extra=entry_extra
+
+        def write(staging: str) -> None:
+            rewrite(df, staging)
+            if listing is not None:
+                _save_sources(staging, listing)
+
+        # the staged rewrite relocates pinned generations into staging
+        # and stages the post-swap manifest, so data + generations
+        # commit atomically (a no-op for stores that never published a
+        # generation); the session is passed through so a bulk
+        # rewrite's stats/bloom rebuild runs as one Spark job over the
+        # staged file list
+        generations.staged_rewrite(
+            path, write, "mri_compact_", spark=spark, entry_extra=entry_extra
         )
-        commitio.IO.publish_swap(path, staging)

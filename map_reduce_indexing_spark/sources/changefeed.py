@@ -72,6 +72,7 @@ from .generations import (
     load_manifest,
     publish_generation,
     read_generation,
+    strip_markers,
     tag_generation,
 )
 from .pipeline import _src_keys
@@ -323,14 +324,7 @@ def run_changes_feed(
                 }
             }
             batch.write.mode("append").parquet(dst_path)
-            for f in os.listdir(dst_path):
-                p = os.path.join(dst_path, f)
-                if (
-                    f.startswith("_")
-                    and os.path.isfile(p)
-                    and not f.endswith(".json")
-                ):
-                    os.remove(p)
+            strip_markers(dst_path)
             gen = publish_generation(
                 dst_path,
                 spark=spark,

@@ -22,6 +22,13 @@ Two module functions sit on top of the backend: `recover_index(path)`
 (lock-free probe, then heal under the writer lock) and
 `chmod_staging(staging)` (the mode a staged swap publishes).
 
+Staged rewrites have one composite consumer,
+`generations.staged_rewrite`: it makes the staging dir, runs
+`chmod_staging`, carries generations, calls `publish_swap`, and removes
+the staging dir when the rewrite fails before the backend owns it. No
+other package code calls `publish_swap`
+(tests/test_state_guard.py::test_one_staged_rewrite_path).
+
 `PosixStoreIO` is the single-host / shared-POSIX-filesystem backend —
 flock, hardlink, `os.replace` — which is also exactly the reference's
 deployment shape (its ./index appends weren't even locked, SURVEY.md

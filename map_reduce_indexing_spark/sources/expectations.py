@@ -81,6 +81,8 @@ from .generations import (
     publish_generation,
     reachable_files,
     read_generation,
+    staged_rewrite,
+    strip_markers,
 )
 
 QUARANTINE_SUFFIX = ".quarantine"
@@ -213,16 +215,18 @@ def pin_once(df: DataFrame, pin_batch="auto") -> DataFrame:
     return df.localCheckpoint(eager=True) if _plan_needs_pin(df) else df
 
 
-def _strip_markers(path: str) -> None:
-    # Spark leaves _SUCCESS markers on direct appends; data reads
-    # ignore underscore files, but the store keeps its listing clean.
-    for f in os.listdir(path):
-        p = os.path.join(path, f)
-        if f.startswith("_") and os.path.isfile(p) and not f.endswith(".json"):
-            try:
-                os.remove(p)
-            except OSError:
-                pass
+def replace_quarantine(qpath: str, rows: DataFrame) -> None:
+    """Make `rows` the quarantine's complete content: a staged rewrite
+    under the quarantine's own writer lock that carries its prior
+    generations, so the pre-rewrite quarantine stays pinnable."""
+    with commitio.IO.writer_lock(qpath):
+        staged_rewrite(
+            qpath,
+            lambda staging: rows.write.mode("overwrite").parquet(staging),
+            "mri_quarantine_",
+        )
+        if load_manifest(qpath) is None:
+            publish_generation(qpath)
 
 
 def append_with_expectations(
@@ -407,7 +411,7 @@ def append_with_expectations(
                     .withColumn("_src_generation", F.lit(next_gen))
                 )
                 qdf.write.mode("append").parquet(qpath)
-                _strip_markers(qpath)
+                strip_markers(qpath)
                 publish_generation(qpath, manifest_extra=_applied_extra(qm))
 
         admitted = df.filter(~bad) if n_bad else df
@@ -416,7 +420,7 @@ def append_with_expectations(
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
-            _strip_markers(path)
+            strip_markers(path)
         # the audit AND the applied-batch bookmark ride the SAME
         # manifest save that records the generation — a crash can
         # never separate the three
@@ -481,11 +485,6 @@ def readmit(
     Returns {"readmitted": n, "still_quarantined": n,
     "violations": {name: n}} — violations counted over the REPAIRED
     batch. No-op ({} counts) when the store has no quarantine."""
-    import shutil
-    import tempfile
-
-    from .generations import carry_generations
-
     qpath = quarantine_path(path)
     if not os.path.isdir(qpath):
         return {"readmitted": 0, "still_quarantined": 0, "violations": {}}
@@ -507,7 +506,7 @@ def readmit(
         head = None
         if rows_in - n_bad > 0:
             fixed.filter(~bad).write.mode("append").parquet(path)
-            _strip_markers(path)
+            strip_markers(path)
             head = publish_generation(
                 path,
                 entry_extra={
@@ -520,32 +519,15 @@ def readmit(
                     }
                 },
             )
-        # rewrite the quarantine to exactly the still-failing rows
-        # (staged swap under its own lock; carry keeps prior
-        # generations pinnable)
-        with commitio.IO.writer_lock(qpath):
-            staging = tempfile.mkdtemp(
-                prefix="mri_readmit_", dir=os.path.dirname(qpath) or "."
-            )
-            commitio.chmod_staging(staging)
-            still = (
-                fixed.filter(bad)
-                .withColumn("_violations", violation_tags(flags))
-                .withColumn(
-                    "_src_generation",
-                    F.lit(head if head is not None else 0),
-                )
-            )
-            still.write.mode("overwrite").parquet(staging)
-            for f in os.listdir(staging):
-                if f.startswith("_") and os.path.isfile(
-                    os.path.join(staging, f)
-                ):
-                    os.remove(os.path.join(staging, f))
-            carry_generations(qpath, staging)
-            commitio.IO.publish_swap(qpath, staging)
-            if load_manifest(qpath) is None:
-                publish_generation(qpath)
+        # the quarantine becomes exactly the still-failing rows
+        replace_quarantine(
+            qpath,
+            fixed.filter(bad)
+            .withColumn("_violations", violation_tags(flags))
+            .withColumn(
+                "_src_generation", F.lit(head if head is not None else 0)
+            ),
+        )
     return {
         "readmitted": rows_in - n_bad,
         "still_quarantined": n_bad,

@@ -2,7 +2,7 @@
 
 Every flock-managed artifact (count index, positional index, tokens,
 vector stores) is append-then-compact: appends add parquet files,
-compaction rewrites the directory behind a staged `os.replace` swap.
+compaction rewrites the directory behind a staged swap (`staged_rewrite`).
 That gives readers atomicity (old or new wholesale) but no way to PIN
 a version across a multi-query session — e.g. train on snapshot S
 while ingest continues, or run a two-query reconciliation that must
@@ -78,10 +78,12 @@ the reference never addressed".
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1118,23 +1120,9 @@ def drop_columns(spark: SparkSession, path: str, cols: list[str]) -> int:
     retention). Hive partition columns are refused (dropping one
     means re-laying out the store — use optimize_store with a new
     layout first). Returns the new head generation."""
-    import tempfile
-
     if not cols:
         raise ValueError("drop_columns requires at least one column")
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
-        m = load_manifest(path)
-        if m is None:
-            ensure_base_generation(path)
-            m = load_manifest(path)
-            if m is None:
-                raise ValueError(f"{path!r} has no data")
-        head = int(m["head"])
-        live = _data_files(path)
-        if set(live) != set(m["gens"][str(head)]["files"]):
-            head = _publish(path, head + 1, m)  # pin pending appends
-            m = load_manifest(path)
+    with _locked_head(path, "drop columns from") as (m, head, _live):
         g = m["gens"][str(head)]
         rels = g["files"]
         part_cols = sorted(
@@ -1162,25 +1150,20 @@ def drop_columns(spark: SparkSession, path: str, cols: list[str]) -> int:
         if len(cols) >= len(df.columns):
             raise ValueError("cannot drop every column of a store")
         out = df.drop(*cols)
-        staging = tempfile.mkdtemp(
-            prefix="mri_dropcols_", dir=os.path.dirname(path) or "."
-        )
-        commitio.chmod_staging(staging)
-        w = out.write.mode("overwrite")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(staging)
-        for f in os.listdir(staging):
-            fp = os.path.join(staging, f)
-            if f.startswith("_") and os.path.isfile(fp):
-                os.remove(fp)
-        carry_generations(
+
+        def write(staging: str) -> None:
+            w = out.write.mode("overwrite")
+            if part_cols:
+                w = w.partitionBy(*part_cols)
+            w.parquet(staging)
+
+        staged_rewrite(
             path,
-            staging,
+            write,
+            "mri_dropcols_",
             spark=spark,
             schema=out.schema.jsonValue(),
         )
-        commitio.IO.publish_swap(path, staging)
     return generation_head(path)
 
 
@@ -1193,7 +1176,7 @@ def rename_columns(spark: SparkSession, path: str, mapping: dict[str, str]) -> i
     schema with a new metadata-only generation (same listing, same
     deletion vector). Readers resolve a logical column missing from an
     old file group through the chain (`_physical_name` inside
-    `_align_to`), so pre-rename files serve their data under the new
+    `_aligned_cols`), so pre-rename files serve their data under the new
     name, cast/projected exactly like any other reconciled read;
     pinned pre-rename generations keep their old shape (their declared
     schemas still carry the old name). File-skipping stays lossless:
@@ -1221,19 +1204,7 @@ def rename_columns(spark: SparkSession, path: str, mapping: dict[str, str]) -> i
             raise ValueError(f"invalid column name {new!r}")
         if old == new:
             raise ValueError(f"rename {old!r} -> {new!r} is a no-op")
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
-        m = load_manifest(path)
-        if m is None:
-            ensure_base_generation(path)
-            m = load_manifest(path)
-            if m is None:
-                raise ValueError(f"{path!r} has no data")
-        head = int(m["head"])
-        live = _data_files(path)
-        if set(live) != set(m["gens"][str(head)]["files"]):
-            head = _publish(path, head + 1, m)  # pin pending appends
-            m = load_manifest(path)
+    with _locked_head(path, "rename") as (m, head, _live):
         declared = declared_schema(m)
         if declared is None:
             # stores predating schema tracking: adopt the current
@@ -1401,24 +1372,55 @@ def _read_listing(
     store_path: str,
 ) -> DataFrame:
     """THE generation-listing reader every verb shares: schema-group
-    reconciliation (see _read_reconciled) composed with deletion-
-    vector filtering (merge-on-read DELETE). Fast paths preserved: a
-    schema-uniform, DV-free listing is one plain basePath read —
-    byte-for-byte the pre-evolution plan."""
+    reconciliation composed with deletion-vector filtering
+    (merge-on-read DELETE), both through `_read_groups`. Fast path
+    preserved: a schema-uniform (or untracked), DV-free listing is one
+    plain basePath read — byte-for-byte the pre-evolution plan."""
     dv = g.get("dv")
-    needed = bool(dv) and any(_dv_count(g, r) > 0 for r in rels)
-    if not needed:
-        rec = _read_reconciled(spark, root, g, m, rels)
-        if rec is not None:
-            return rec
+    if dv and any(_dv_count(g, r) > 0 for r in rels):
+        side = spark.read.parquet(os.path.join(store_path, dv["file"]))
+        return _read_groups(spark, root, g, m, rels, side=side)
+    sid = g.get("schema_id")
+    stats = g.get("stats") or {}
+    if (
+        sid is None
+        or str(sid) not in (m.get("schemas") or {})
+        or {(stats.get(r) or {}).get("schema_id") for r in rels} <= {sid}
+    ):
         return spark.read.option("basePath", root).parquet(
             *[os.path.join(root, r) for r in rels]
         )
+    return _read_groups(spark, root, g, m, rels)
+
+
+def _read_groups(
+    spark: SparkSession,
+    root: str,
+    g: dict,
+    m: dict,
+    rels: list[str],
+    side: DataFrame | None = None,
+    positions: bool = False,
+) -> DataFrame:
+    """The schema-evolution read: group `rels` by the schema each file
+    was WRITTEN under (the manifest's per-file schema_id stamps — zero
+    footer opens to find out), read each group as its own parquet scan
+    under that schema, align it to generation g's DECLARED schema
+    (null-fill added columns, cast widened ones, follow renames) and
+    union by name. Group count is the number of schema VERSIONS live in
+    the listing (tiny by construction: a compaction folds everything
+    back to one), so the union adds no per-file planning cost and each
+    group's scan prunes/pushes down independently.
+
+    `side` (g's deletion-vector sidecar) drops the vector's rows from
+    every group holding deleted positions. `positions=True` instead
+    leads each row with its physical (fname, pos) — what the
+    deletion-vector verbs match against."""
     from pyspark.sql.types import StructType
 
-    side = spark.read.parquet(os.path.join(store_path, dv["file"]))
     sid = g.get("schema_id")
-    sj = (m.get("schemas") or {}).get(str(sid)) if sid is not None else None
+    schemas = m.get("schemas") or {}
+    sj = schemas.get(str(sid)) if sid is not None else None
     target = StructType.fromJson(sj) if sj else None
     stats = g.get("stats") or {}
     groups: dict[object, list[str]] = {}
@@ -1430,18 +1432,27 @@ def _read_listing(
         groups.items(), key=lambda kv: (kv[0] is None, kv[0] or 0)
     ):
         r = spark.read.option("basePath", root)
-        gsj = (
-            (m.get("schemas") or {}).get(str(fsid))
-            if fsid is not None
-            else None
-        )
+        gsj = schemas.get(str(fsid)) if fsid is not None else None
         if gsj is not None:
+            # read the group under the schema its files were WRITTEN
+            # with (no footer sampling, no first-file ordering hazard)
             r = r.schema(StructType.fromJson(gsj))
         df = r.parquet(*[os.path.join(root, f) for f in fs])
-        if any(_dv_count(g, f) > 0 for f in fs):
-            df = _dv_anti(df, side, int(dv.get("rows") or 0))
-        if target is not None:
-            df = _align_to(df, target, m.get("renames"))
+        if side is not None and any(_dv_count(g, f) > 0 for f in fs):
+            df = _dv_anti(df, side, int(g["dv"].get("rows") or 0))
+        cols = (
+            _aligned_cols(df, target, m.get("renames"))
+            if target is not None
+            else None
+        )
+        if positions:
+            df = df.select(
+                F.col("_metadata.file_name").alias("fname"),
+                F.col("_metadata.row_index").alias("pos"),
+                *(cols or df.columns),
+            )
+        elif cols is not None:
+            df = df.select(*cols)
         out = df if out is None else out.unionByName(df)
     return out
 
@@ -1781,6 +1792,30 @@ def _publish(
     return head
 
 
+@contextlib.contextmanager
+def _locked_head(path: str, verb: str):
+    """The head a locked row-level verb edits: take the writer lock,
+    heal crash residue, adopt a manifest-less store as its base
+    generation, and pin unpublished appends as a generation of their
+    own, so the verb's span is exactly one generation and the change
+    feed's "before" image is well-defined. Yields (manifest, head, live
+    data files) with the lock held."""
+    with commitio.IO.writer_lock(path):
+        commitio.IO.recover(path)
+        m = load_manifest(path)
+        if m is None:
+            ensure_base_generation(path)
+            m = load_manifest(path)
+            if m is None:
+                raise ValueError(f"{path!r} has no data to {verb}")
+        head = int(m["head"])
+        live = _data_files(path)
+        if set(live) != set(m["gens"][str(head)]["files"]):
+            head = _publish(path, head + 1, m)
+            m = load_manifest(path)
+        yield m, head, live
+
+
 def ensure_base_generation(path: str) -> int:
     """Publish the CURRENT live state as generation 1 iff no manifest
     exists — called by writers before their first mutation so the
@@ -1914,10 +1949,9 @@ def append_rows(
     `schema_mode` (round 12): "strict" (default) refuses a batch whose
     schema drifts from the store's declared schema; "evolve" accepts
     added columns and lossless widenings, recording the new schema
-    with the publish (see check_schema_evolution / _read_reconciled).
+    with the publish (see check_schema_evolution / _read_groups).
     `pin_batch` controls the gated path's single-evaluation pin (see
     expectations.pin_once)."""
-    import tempfile
     import uuid
 
     from .commitio import CommitConflict
@@ -1967,7 +2001,7 @@ def append_rows(
     # declared schema before anything is written. strict (default)
     # rejects any drift; evolve accepts added columns and lossless
     # widenings, recording the new schema with the publish (readers
-    # reconcile mixed listings — see _read_reconciled). Under a lost
+    # reconcile mixed listings — see _read_groups). Under a lost
     # CAS race the publish re-reads the manifest, but the schema
     # declaration rides this writer's batch either way; CONCURRENT
     # conflicting evolutions are a user error (last publish wins the
@@ -2007,11 +2041,7 @@ def append_rows(
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(staging)
-        rels = [
-            r
-            for r in _data_files(staging)
-            if not os.path.basename(r).startswith("_")
-        ]
+        rels = _data_files(staging)
 
         def _place() -> None:
             for rel in rels:
@@ -2239,6 +2269,73 @@ def carry_generations(
     _save_manifest(staging, staged)
 
 
+def strip_markers(path: str) -> None:
+    """Remove the `_SUCCESS`-style marker files a Spark write leaves at
+    the top of `path`. Data reads ignore underscore files either way;
+    the store keeps its listing clean. `_*.json` sidecars (the
+    manifest, `_sources.json`, `_matview.json`, model sidecars) stay,
+    so this is safe on a live store as well as on a staging dir."""
+    for f in os.listdir(path):
+        p = os.path.join(path, f)
+        if f.startswith("_") and not f.endswith(".json") and os.path.isfile(p):
+            try:
+                os.remove(p)
+            except OSError:
+                pass
+
+
+def staged_rewrite(
+    path: str,
+    write,
+    prefix: str,
+    spark: SparkSession | None = None,
+    keep=(),
+    **carry,
+) -> None:
+    """The one staged rewrite behind every verb that replaces a store
+    directory (callers hold `path`'s writer lock): `write(staging)`
+    fills a fresh sibling staging dir, Spark markers are stripped, the
+    `keep` files (live data the rewrite leaves untouched) hardlink in,
+    `carry_generations` stages the manifest (`carry` passes through to
+    it), and `commitio.IO.publish_swap` publishes data, snapshots and
+    manifest together. The live path is never touched before the swap.
+
+    If anything raises, the staging dir is removed, so a failed rewrite
+    leaves the store and its parent directory as they were — unless the
+    backend already owns it: a CAS swap that wrote its journal
+    (`needs_recovery`) replays from staging on the next `recover`."""
+    staging = tempfile.mkdtemp(prefix=prefix, dir=os.path.dirname(path) or ".")
+    try:
+        commitio.chmod_staging(staging)
+        write(staging)
+        strip_markers(staging)
+        _link_tree(path, keep, staging)
+        carry_generations(path, staging, spark=spark, **carry)
+        commitio.IO.publish_swap(path, staging)
+    except BaseException:
+        if not commitio.IO.needs_recovery(path):
+            shutil.rmtree(staging, ignore_errors=True)
+        raise
+
+
+def _bloom_loader(path: str):
+    """`_file_matches`' bloom reader for one planning pass over `path`:
+    each sidecar is read at most once; a missing one reads as None
+    (the file is kept)."""
+    cache: dict[str, bytes | None] = {}
+
+    def load(fname: str):
+        if fname not in cache:
+            try:
+                with open(os.path.join(path, BLOOM_DIR, fname), "rb") as fh:
+                    cache[fname] = fh.read()
+            except OSError:
+                cache[fname] = None
+        return cache[fname]
+
+    return load
+
+
 def plan_generation_scan(
     path: str, at: int | str | None = None, where=None
 ) -> tuple[str, list[str], int]:
@@ -2271,19 +2368,7 @@ def plan_generation_scan(
     stats = g.get("stats") or {}
     rels = g["files"]
     if where:
-        bloom_cache: dict[str, bytes | None] = {}
-
-        def bloom_load(fname: str):
-            if fname not in bloom_cache:
-                try:
-                    with open(
-                        os.path.join(path, BLOOM_DIR, fname), "rb"
-                    ) as fh:
-                        bloom_cache[fname] = fh.read()
-                except OSError:
-                    bloom_cache[fname] = None  # missing sidecar: keep
-            return bloom_cache[fname]
-
+        bloom_load = _bloom_loader(path)
         rels = [
             r
             for r in rels
@@ -2317,18 +2402,18 @@ def _physical_name(logical: str, have: list[str], renames: dict) -> str | None:
     return cur
 
 
-def _align_to(df: DataFrame, target, renames: dict | None = None) -> DataFrame:
-    """Project `df` onto the target StructType: missing columns become
-    typed NULLs (added-column evolution), present columns cast to the
-    target type (a no-op unless widened — byte/short/int->long,
-    float->double — which is lossless by the evolution rules), and a
-    column RENAMED since the file was written is served from its
-    physical (old) name via the manifest's rename chain (round 13 —
-    parquet is name-addressed, so without the projection old files
-    would silently serve NULL for the new name, losing history).
-    Columns `df` has beyond the target are dropped (they belong to a
-    NEWER schema than the generation being served — pinned reads stay
-    byte-stable)."""
+def _aligned_cols(df: DataFrame, target, renames: dict | None = None) -> list:
+    """`df`'s columns projected onto the target StructType: missing
+    columns become typed NULLs (added-column evolution), present
+    columns cast to the target type (a no-op unless widened —
+    byte/short/int->long, float->double — which is lossless by the
+    evolution rules), and a column RENAMED since the file was written
+    is served from its physical (old) name via the manifest's rename
+    chain (round 13 — parquet is name-addressed, so without the
+    projection old files would silently serve NULL for the new name,
+    losing history). Columns `df` has beyond the target are dropped
+    (they belong to a NEWER schema than the generation being served —
+    pinned reads stay byte-stable)."""
     cols = []
     for f in target.fields:
         phys = _physical_name(f.name, df.columns, renames or {})
@@ -2336,60 +2421,7 @@ def _align_to(df: DataFrame, target, renames: dict | None = None) -> DataFrame:
             cols.append(F.col(phys).cast(f.dataType).alias(f.name))
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
-
-
-def _read_reconciled(
-    spark: SparkSession, root: str, g: dict, m: dict, rels: list[str]
-) -> DataFrame | None:
-    """The schema-evolution read path: when a generation's listing
-    spans files written under DIFFERENT schemas (the manifest's
-    per-file schema_id stamps — zero footer opens to find out), read
-    each schema group as its own parquet scan and align every group to
-    the generation's DECLARED schema (null-fill added columns, cast
-    widened ones), unioned by name. Returns None when the listing is
-    schema-uniform (or untracked) — the caller's plain read is then
-    both correct and cheaper, which keeps schema-stable stores at
-    exactly their pre-evolution plan. Group count is the number of
-    schema VERSIONS live in the listing (tiny by construction: a
-    compaction folds everything back to one), so the union adds no
-    per-file planning cost and each group's scan prunes/pushes down
-    independently."""
-    from pyspark.sql.types import StructType
-
-    sid = g.get("schema_id")
-    if sid is None:
-        return None
-    stats = g.get("stats") or {}
-    groups: dict[object, list[str]] = {}
-    for rel in rels:
-        fsid = (stats.get(rel) or {}).get("schema_id")
-        groups.setdefault(fsid, []).append(rel)
-    if set(groups) <= {sid}:
-        return None
-    sj = (m.get("schemas") or {}).get(str(sid))
-    if sj is None:
-        return None
-    target = StructType.fromJson(sj)
-    out = None
-    for fsid, fs in sorted(
-        groups.items(), key=lambda kv: (kv[0] is None, kv[0] or 0)
-    ):
-        r = spark.read.option("basePath", root)
-        gsj = (
-            (m.get("schemas") or {}).get(str(fsid))
-            if fsid is not None
-            else None
-        )
-        if gsj is not None:
-            # read the group under the schema its files were WRITTEN
-            # with (no footer sampling, no first-file ordering hazard);
-            # the alignment below projects it onto the target
-            r = r.schema(StructType.fromJson(gsj))
-        df = r.parquet(*[os.path.join(root, f) for f in fs])
-        df = _align_to(df, target, m.get("renames"))
-        out = df if out is None else out.unionByName(df)
-    return out
+    return cols
 
 
 PLAN_MEMO_KEEP = 256  # resolved read plans kept per application
@@ -2702,7 +2734,9 @@ def _changed_sides(
             # (a DV'd-out row appears only on the old side, so the
             # image compare classifies it as a delete)
             df = _read_listing(spark, root, g, m, rels, path)
-        return _align_to(df, tgt, m.get("renames")) if tgt is not None else df
+        if tgt is None:
+            return df
+        return df.select(*_aligned_cols(df, tgt, m.get("renames")))
 
     return side(gb, b), side(ga, a)
 
@@ -2819,6 +2853,19 @@ def _generation_changes_impl(
     )
 
 
+def _logical_rows(path: str, g: dict, rels: list[str]) -> int:
+    """Rows `rels` serve in generation g, from metadata: the manifest's
+    per-file row counts (a footer read where one is missing) minus each
+    file's deletion-vector entries."""
+    total = 0
+    for r in rels:
+        n = ((g.get("stats") or {}).get(r) or {}).get("rows")
+        if n is None:
+            n = _file_num_rows(os.path.join(path, r))
+        total += int(n or 0) - _dv_count(g, r)
+    return total
+
+
 def delete_rows(spark: SparkSession, path: str, where) -> dict:
     """Row-level predicate DELETE as a STORE operation (retention /
     GDPR erasure): remove every row matching `where` (the
@@ -2834,8 +2881,8 @@ def delete_rows(spark: SparkSession, path: str, where) -> dict:
       A delete of one tenant/day rewrites that slice, never the store.
     - Affected files are re-read and their NON-matching rows
       rewritten (null predicate = not matched = kept, SQL semantics).
-    - The whole thing is the compact_artifact staged swap under the
-      writer flock: a crash leaves the old store (and old manifest)
+    - The whole thing is one `staged_rewrite` under the writer
+      flock: a crash leaves the old store (and old manifest)
       intact; readers pinned to prior generations are untouched
       (their snapshots are immutable hardlinks).
     - Downstream: `diff_plan` classifies the span as a rewrite, so
@@ -2848,26 +2895,9 @@ def delete_rows(spark: SparkSession, path: str, where) -> dict:
     metadata-derived (affected-file row counts from the manifest
     minus rewritten-output row counts from the staged footers; both
     sides are parquet-exact), so the report costs no extra scan."""
-    import tempfile
-
     if not where:
         raise ValueError("delete_rows requires a non-empty predicate")
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
-        m = load_manifest(path)
-        if m is None:
-            ensure_base_generation(path)
-            m = load_manifest(path)
-            if m is None:
-                raise ValueError(f"{path!r} has no data to delete from")
-        head = int(m["head"])
-        live = _data_files(path)
-        if set(live) != set(m["gens"][str(head)]["files"]):
-            # unpublished appends: pin the pre-delete state first so
-            # the delete span is exactly one generation and the CDF
-            # "before" image is well-defined
-            head = _publish(path, head + 1, m)
-            m = load_manifest(path)
+    with _locked_head(path, "delete from") as (m, head, live):
         g = m["gens"][str(head)]
         stats = g.get("stats") or {}
         affected = [
@@ -2894,10 +2924,6 @@ def delete_rows(spark: SparkSession, path: str, where) -> dict:
             set(affected) | {r for r in live if _dv_count(g, r) > 0}
         )
         kept = [r for r in live if r not in set(affected)]
-        staging = tempfile.mkdtemp(
-            prefix="mri_delete_", dir=os.path.dirname(path) or "."
-        )
-        commitio.chmod_staging(staging)
         # rows of the affected files that do NOT match the predicate
         # survive; a NULL predicate is not-matched (SQL DELETE
         # semantics), hence the coalesce. The shared listing reader
@@ -2909,37 +2935,25 @@ def delete_rows(spark: SparkSession, path: str, where) -> dict:
         part_cols = sorted(
             {k for r in affected for k in _partition_values(r)}
         )
-        writer = df.filter(keep_pred).write.mode("append")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(staging)
-        for f in os.listdir(staging):  # Spark success markers
-            if f.startswith("_") and os.path.isfile(os.path.join(staging, f)):
-                os.remove(os.path.join(staging, f))
-        _link_tree(path, kept, staging)
-        rewritten = _data_files(staging)
-        affected_rows = 0
-        for r in affected:
-            n = (stats.get(r) or {}).get("rows")
-            if n is None:
-                n = _file_num_rows(os.path.join(path, r))
-            # logical rows: physical minus any deletion-vector entries
-            # (the rewrite's input was DV-filtered)
-            affected_rows += int(n or 0) - _dv_count(g, r)
-        kept_set = set(kept)
-        out_rows = sum(
-            int(_file_num_rows(os.path.join(staging, r)) or 0)
-            for r in rewritten
-            if r not in kept_set
-        )
-        carry_generations(path, staging, spark=spark)
+        out_rows = 0
 
-        commitio.IO.publish_swap(path, staging)
+        def write(staging: str) -> None:
+            nonlocal out_rows
+            writer = df.filter(keep_pred).write.mode("append")
+            if part_cols:
+                writer = writer.partitionBy(*part_cols)
+            writer.parquet(staging)
+            out_rows = sum(
+                int(_file_num_rows(os.path.join(staging, r)) or 0)
+                for r in _data_files(staging)
+            )
+
+        staged_rewrite(path, write, "mri_delete_", spark=spark, keep=kept)
         return {
             "generation": head + 1,
             "rewritten_files": len(affected),
             "kept_files": len(kept),
-            "deleted_rows": affected_rows - out_rows,
+            "deleted_rows": _logical_rows(path, g, affected) - out_rows,
         }
 
 
@@ -2971,24 +2985,9 @@ def delete_rows_dv(spark: SparkSession, path: str, where) -> dict:
     (invariant across snapshot hardlinks/copies). Returns
     {"generation", "rewritten_files": 0, "kept_files", "deleted_rows"}.
     """
-    import tempfile
-    import uuid
-
     if not where:
         raise ValueError("delete_rows_dv requires a non-empty predicate")
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
-        m = load_manifest(path)
-        if m is None:
-            ensure_base_generation(path)
-            m = load_manifest(path)
-            if m is None:
-                raise ValueError(f"{path!r} has no data to delete from")
-        head = int(m["head"])
-        live = _data_files(path)
-        if set(live) != set(m["gens"][str(head)]["files"]):
-            head = _publish(path, head + 1, m)  # pin pending appends
-            m = load_manifest(path)
+    with _locked_head(path, "delete from") as (m, head, _live):
         g = m["gens"][str(head)]
         stats = g.get("stats") or {}
         affected = [
@@ -3009,110 +3008,82 @@ def delete_rows_dv(spark: SparkSession, path: str, where) -> dict:
         }
         if not affected:
             return report
-        # matched positions per schema group (aligned so the predicate
-        # sees the declared types; a group lacking a predicate column
-        # serves typed NULLs there — NULL never proves, rows kept)
-        from pyspark.sql.types import StructType
-
-        sid = g.get("schema_id")
-        sj = (
-            (m.get("schemas") or {}).get(str(sid))
-            if sid is not None
-            else None
-        )
-        target = StructType.fromJson(sj) if sj else None
-        groups: dict[object, list[str]] = {}
-        for rel in affected:
-            fsid = (stats.get(rel) or {}).get("schema_id")
-            groups.setdefault(fsid, []).append(rel)
+        # matched positions, read per schema group and aligned so the
+        # predicate sees the declared types (a group lacking a
+        # predicate column serves typed NULLs there — NULL never
+        # proves, rows kept)
         pred = F.coalesce(_where_column(where), F.lit(False))
-        matches = None
-        for fsid, fs in groups.items():
-            r = spark.read.option("basePath", path)
-            gsj = (
-                (m.get("schemas") or {}).get(str(fsid))
-                if fsid is not None
-                else None
-            )
-            if gsj is not None:
-                r = r.schema(StructType.fromJson(gsj))
-            df = r.parquet(*[os.path.join(path, f) for f in fs])
-            meta = [
-                F.col("_metadata.file_name").alias("fname"),
-                F.col("_metadata.row_index").alias("pos"),
-            ]
-            if target is not None:
-                renames = m.get("renames") or {}
-                data_cols = []
-                for f in target.fields:
-                    phys = _physical_name(f.name, df.columns, renames)
-                    data_cols.append(
-                        F.col(phys).cast(f.dataType).alias(f.name)
-                        if phys is not None
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                    )
-            else:
-                data_cols = [F.col(c) for c in df.columns]
-            one = df.select(*meta, *data_cols).filter(pred).select(
-                "fname", "pos"
-            )
-            matches = one if matches is None else matches.unionByName(one)
-        prev_dv = g.get("dv")
-        if prev_dv is not None:
-            prev_side = spark.read.parquet(
-                os.path.join(path, prev_dv["file"])
-            )
-            matches = matches.join(
-                _dv_side_hinted(prev_side, int(prev_dv.get("rows") or 0)),
-                ["fname", "pos"],
-                "left_anti",
-            )
-            combined = matches.unionByName(prev_side).localCheckpoint(
-                eager=True
-            )
-            n_total = combined.count()
-            n_new = n_total - int(prev_dv["rows"])
-        else:
-            combined = matches.localCheckpoint(eager=True)
-            n_total = n_new = combined.count()
-        if n_new == 0:
+        matches = (
+            _read_groups(spark, path, g, m, affected, positions=True)
+            .filter(pred)
+            .select("fname", "pos")
+        )
+        n_new, dv = _write_dv(path, g, head, matches)
+        if dv is None:
             return report
-        # self-contained sidecar for THIS generation (old generations
-        # keep referencing theirs; orphans vacuum). Land the files,
-        # then flip the manifest — the object-store publish order.
-        dv_rel = os.path.join(DV_DIR, f"g{head + 1}_{uuid.uuid4().hex[:8]}")
-        dv_abs = os.path.join(path, dv_rel)
-        combined.coalesce(_dv_write_partitions(n_total)).write.parquet(dv_abs)
-        for f in os.listdir(dv_abs):
-            fp = os.path.join(dv_abs, f)
-            if f.startswith("_") and os.path.isfile(fp):
-                os.remove(fp)
-        per_file = {
-            r["fname"]: int(r["n"])
-            for r in combined.groupBy("fname")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        total = sum(per_file.values())
         new_head = _publish(
             path,
             head + 1,
             m,
             add_files=[],  # precise: same listing as head
-            entry_extra={
-                "dv": {
-                    "file": dv_rel,
-                    "rows": total,
-                    "per_file": per_file,
-                }
-            },
+            entry_extra={"dv": dv},
         )
         return {
             "generation": new_head,
             "rewritten_files": 0,
             "kept_files": len(g["files"]),
-            "deleted_rows": int(n_new),
+            "deleted_rows": n_new,
         }
+
+
+def _write_dv(
+    path: str, g: dict, head: int, matches: DataFrame
+) -> tuple[int, dict | None]:
+    """The one deletion-vector writer: fold newly matched (fname, pos)
+    positions into a fresh self-contained sidecar for generation
+    head+1 — anti-join generation g's vector (a position deleted
+    before is not new), union it, pin and count, write, then tally the
+    per-file counts the manifest records. Old generations keep
+    referencing their own sidecars; orphans vacuum. The files land
+    before the caller's manifest publish, the object-store publish
+    order. Returns (new positions, the generation entry's `dv` value),
+    the entry None when nothing new matched (the caller's publish then
+    carries g's vector forward unchanged)."""
+    import uuid
+
+    prev_dv = g.get("dv")
+    if prev_dv is not None:
+        prev_side = matches.sparkSession.read.parquet(
+            os.path.join(path, prev_dv["file"])
+        )
+        matches = matches.join(
+            _dv_side_hinted(prev_side, int(prev_dv.get("rows") or 0)),
+            ["fname", "pos"],
+            "left_anti",
+        )
+        combined = matches.unionByName(prev_side).localCheckpoint(eager=True)
+        n_total = combined.count()
+        n_new = n_total - int(prev_dv["rows"])
+    else:
+        combined = matches.localCheckpoint(eager=True)
+        n_total = n_new = combined.count()
+    if n_new == 0:
+        return 0, None
+    dv_rel = os.path.join(DV_DIR, f"g{head + 1}_{uuid.uuid4().hex[:8]}")
+    dv_abs = os.path.join(path, dv_rel)
+    combined.coalesce(_dv_write_partitions(n_total)).write.parquet(dv_abs)
+    strip_markers(dv_abs)
+    per_file = {
+        r["fname"]: int(r["n"])
+        for r in combined.groupBy("fname")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    return n_new, {
+        "file": dv_rel,
+        "rows": sum(per_file.values()),
+        "per_file": per_file,
+    }
 
 
 # Upsert key-probing bound: when a key column has at most this many
@@ -3184,77 +3155,15 @@ def _upsert_dv(
     rewrite (vector changed), the CDF emits update pre/post images,
     pinned readers keep the pre-merge snapshot, and the next
     policy-fired fold lands everything clean."""
-    import uuid
-
-    from pyspark.sql.types import StructType
-
-    stats = g.get("stats") or {}
-    renames = m.get("renames") or {}
-    sid = g.get("schema_id")
-    sj = (m.get("schemas") or {}).get(str(sid)) if sid is not None else None
-    target = StructType.fromJson(sj) if sj else None
-    tfields = {f.name: f for f in (target.fields if target else [])}
-    prev_dv = g.get("dv")
-    prev_side = (
-        spark.read.parquet(os.path.join(path, prev_dv["file"]))
-        if prev_dv is not None
-        else None
-    )
-    groups: dict[object, list[str]] = {}
-    for rel in affected:
-        fsid = (stats.get(rel) or {}).get("schema_id")
-        groups.setdefault(fsid, []).append(rel)
-    matches = None
-    for fsid, fs in groups.items():
-        r = spark.read.option("basePath", path)
-        gsj = (
-            (m.get("schemas") or {}).get(str(fsid))
-            if fsid is not None
-            else None
-        )
-        if gsj is not None:
-            r = r.schema(StructType.fromJson(gsj))
-        df = r.parquet(*[os.path.join(path, f) for f in fs])
-        sel = [
-            F.col("_metadata.file_name").alias("fname"),
-            F.col("_metadata.row_index").alias("pos"),
-        ]
-        for k in key_cols:
-            phys = _physical_name(k, df.columns, renames)
-            if phys is None:
-                # this group predates the key column: no row can match
-                sel.append(
-                    F.lit(None)
-                    .cast(tfields[k].dataType if k in tfields else "string")
-                    .alias(k)
-                )
-            elif k in tfields:
-                sel.append(F.col(phys).cast(tfields[k].dataType).alias(k))
-            else:
-                sel.append(F.col(phys).alias(k))
-        one = (
-            df.select(*sel)
+    n_matched, dv = 0, None
+    if affected:
+        matches = (
+            _read_groups(spark, path, g, m, affected, positions=True)
+            .select("fname", "pos", *key_cols)
             .join(upd.select(*key_cols), list(key_cols), "left_semi")
             .select("fname", "pos")
         )
-        matches = one if matches is None else matches.unionByName(one)
-    combined = None
-    n_matched = 0
-    if matches is not None:
-        if prev_side is not None:
-            matches = matches.join(
-                _dv_side_hinted(prev_side, int(prev_dv.get("rows") or 0)),
-                ["fname", "pos"],
-                "left_anti",
-            )
-            combined = matches.unionByName(prev_side).localCheckpoint(
-                eager=True
-            )
-            n_total = combined.count()
-            n_matched = n_total - int(prev_dv["rows"])
-        else:
-            combined = matches.localCheckpoint(eager=True)
-            n_total = n_matched = combined.count()
+        n_matched, dv = _write_dv(path, g, head, matches)
     # land the update rows as NEW files (per-file placement is the
     # parquet writer's task-UUID names; the precise add_files listing
     # below is what publishes them — crash residue stays invisible)
@@ -3264,33 +3173,8 @@ def _upsert_dv(
     if part_cols:
         w = w.partitionBy(*part_cols)
     w.parquet(path)
-    for f in os.listdir(path):  # Spark success markers
-        p = os.path.join(path, f)
-        if f.startswith("_") and os.path.isfile(p) and not f.endswith(".json"):
-            os.remove(p)
+    strip_markers(path)
     new_rels = [r for r in _data_files(path) if r not in before]
-    entry_extra = None
-    if n_matched > 0:
-        dv_rel = os.path.join(DV_DIR, f"g{head + 1}_{uuid.uuid4().hex[:8]}")
-        dv_abs = os.path.join(path, dv_rel)
-        combined.coalesce(_dv_write_partitions(n_total)).write.parquet(dv_abs)
-        for f in os.listdir(dv_abs):
-            fp = os.path.join(dv_abs, f)
-            if f.startswith("_") and os.path.isfile(fp):
-                os.remove(fp)
-        per_file = {
-            r["fname"]: int(r["n"])
-            for r in combined.groupBy("fname")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        entry_extra = {
-            "dv": {
-                "file": dv_rel,
-                "rows": sum(per_file.values()),
-                "per_file": per_file,
-            }
-        }
     # no new matches: _publish carries any previous vector forward
     new_head = _publish(
         path,
@@ -3298,14 +3182,14 @@ def _upsert_dv(
         m,
         spark=spark,
         add_files=new_rels,
-        entry_extra=entry_extra,
+        entry_extra={"dv": dv} if dv is not None else None,
     )
     return {
         "generation": new_head,
         "rewritten_files": 0,
         "kept_files": len(live),
-        "updated_rows": int(n_matched),
-        "inserted_rows": n_upd - int(n_matched),
+        "updated_rows": n_matched,
+        "inserted_rows": n_upd - n_matched,
     }
 
 
@@ -3350,25 +3234,11 @@ def upsert_rows(
     merge-on-read DML pair. Same results, same downstream semantics;
     the next rewrite (or the policy's DV triggers) folds the vector
     away."""
-    import tempfile
-
     if not key_cols:
         raise ValueError("upsert_rows requires key_cols")
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
-        m = load_manifest(path)
-        if m is None:
-            ensure_base_generation(path)
-            m = load_manifest(path)
-            if m is None:
-                raise ValueError(f"{path!r} has no data to merge into")
-        head = int(m["head"])
-        live = _data_files(path)
-        if set(live) != set(m["gens"][str(head)]["files"]):
-            head = _publish(path, head + 1, m)  # pin pending appends
-            m = load_manifest(path)
+    with _locked_head(path, "merge into") as (m, head, live):
         sj = declared_schema(m)
         if sj is not None:
             from pyspark.sql.types import StructType
@@ -3416,19 +3286,7 @@ def upsert_rows(
         where = key_prune_where(upd, key_cols, bounds)
         g = m["gens"][str(head)]
         stats = g.get("stats") or {}
-        bloom_cache: dict[str, bytes | None] = {}
-
-        def bloom_load(fname: str):
-            if fname not in bloom_cache:
-                try:
-                    with open(
-                        os.path.join(path, BLOOM_DIR, fname), "rb"
-                    ) as fh:
-                        bloom_cache[fname] = fh.read()
-                except OSError:
-                    bloom_cache[fname] = None
-            return bloom_cache[fname]
-
+        bloom_load = _bloom_loader(path)
         affected = [
             r
             for r in live
@@ -3452,51 +3310,36 @@ def upsert_rows(
             set(affected) | {r for r in live if _dv_count(g, r) > 0}
         )
         kept = [r for r in live if r not in set(affected)]
-        staging = tempfile.mkdtemp(
-            prefix="mri_upsert_", dir=os.path.dirname(path) or "."
-        )
-        commitio.chmod_staging(staging)
         part_cols = sorted({k for r in live for k in _partition_values(r)})
+        remaining = n_updates = 0
 
-        def _write(df: DataFrame) -> None:
-            w = df.write.mode("append")
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(staging)
-            for f in os.listdir(staging):  # Spark success markers
-                fp = os.path.join(staging, f)
-                if f.startswith("_") and os.path.isfile(fp):
-                    os.remove(fp)
+        def write(staging: str) -> None:
+            nonlocal remaining, n_updates
 
-        if affected:
-            # the shared listing reader: evolved stores reconcile to
-            # the declared schema, deletion vectors apply — the merged
-            # head lands clean files
-            df = _read_listing(spark, path, g, m, affected, path)
-            _write(df.join(upd.select(*key_cols), list(key_cols), "left_anti"))
-        survivors = set(_data_files(staging))
-        _write(upd)
-        update_files = [r for r in _data_files(staging) if r not in survivors]
-        _link_tree(path, kept, staging)
-        affected_rows = 0
-        for r in affected:
-            n = (stats.get(r) or {}).get("rows")
-            if n is None:
-                n = _file_num_rows(os.path.join(path, r))
-            # logical rows: physical minus any deletion-vector entries
-            # (the rewrite's input was DV-filtered)
-            affected_rows += int(n or 0) - _dv_count(g, r)
-        remaining = sum(
-            int(_file_num_rows(os.path.join(staging, r)) or 0)
-            for r in survivors
-        )
-        n_updates = sum(
-            int(_file_num_rows(os.path.join(staging, r)) or 0)
-            for r in update_files
-        )
-        updated = affected_rows - remaining
-        carry_generations(path, staging, spark=spark)
-        commitio.IO.publish_swap(path, staging)
+            def rows_written(df: DataFrame) -> int:
+                before = set(_data_files(staging))
+                w = df.write.mode("append")
+                if part_cols:
+                    w = w.partitionBy(*part_cols)
+                w.parquet(staging)
+                return sum(
+                    int(_file_num_rows(os.path.join(staging, r)) or 0)
+                    for r in _data_files(staging)
+                    if r not in before
+                )
+
+            if affected:
+                # the shared listing reader: evolved stores reconcile
+                # to the declared schema, deletion vectors apply — the
+                # merged head lands clean files
+                df = _read_listing(spark, path, g, m, affected, path)
+                remaining = rows_written(
+                    df.join(upd.select(*key_cols), list(key_cols), "left_anti")
+                )
+            n_updates = rows_written(upd)
+
+        staged_rewrite(path, write, "mri_upsert_", spark=spark, keep=kept)
+        updated = _logical_rows(path, g, affected) - remaining
         return {
             "generation": head + 1,
             "rewritten_files": len(affected),

@@ -80,6 +80,8 @@ from .generations import (
     load_manifest,
     publish_generation,
     read_generation,
+    staged_rewrite,
+    strip_markers,
 )
 
 
@@ -328,47 +330,32 @@ def run_incremental_pipeline(
         if mode == "rebuild":
             # staged overwrite, same swap discipline as compaction:
             # the destination's prior generations stay pinned/readable
-            import tempfile
 
-            from .generations import carry_generations
+            def write(staging: str) -> None:
+                w = out.write.mode("overwrite")
+                if partition_by:
+                    w = w.partitionBy(*partition_by)
+                w.parquet(staging)
 
-            staging = tempfile.mkdtemp(
-                prefix="mri_pipeline_", dir=os.path.dirname(dst_path) or "."
-            )
-            commitio.chmod_staging(staging)
-            w = out.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(staging)
-            for f in os.listdir(staging):
-                if f.startswith("_") and os.path.isfile(
-                    os.path.join(staging, f)
-                ):
-                    os.remove(os.path.join(staging, f))
-            # carry_generations records the rebuilt listing as the new
-            # head INSIDE the staged manifest — the bookmark rides that
-            # same save, and the swap publishes data + manifest together
-            carry_generations(
+            # the staged manifest records the rebuilt listing as the new
+            # head — the bookmark rides that same save, and the swap
+            # publishes data + manifest together
+            staged_rewrite(
                 dst_path,
-                staging,
+                write,
+                "mri_pipeline_",
                 spark=spark,
                 entry_extra=entry,
                 manifest_extra=top,
                 schema=out_schema,
             )
-            commitio.IO.publish_swap(dst_path, staging)
             gen = generation_head(dst_path)
         else:
             w = out.write.mode("append")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(dst_path)
-            for f in os.listdir(dst_path):
-                if f.startswith("_") and os.path.isfile(
-                    os.path.join(dst_path, f)
-                ):
-                    if not f.endswith(".json"):
-                        os.remove(os.path.join(dst_path, f))
+            strip_markers(dst_path)
             gen = publish_generation(
                 dst_path,
                 spark=spark,
@@ -377,52 +364,21 @@ def run_incremental_pipeline(
                 schema=out_schema,
             )
         if rejects is not None:
-            from .expectations import quarantine_path
+            from .expectations import quarantine_path, replace_quarantine
 
             qpath = quarantine_path(dst_path)
             rejects = rejects.withColumn("_src_generation", F.lit(gen))
-            if mode == "rebuild" and not os.path.isdir(qpath):
-                # nothing to replace and (if the set is empty) nothing
-                # to create — fresh rejects fall through to the append
-                rejects = rejects if n_bad else None
-            if rejects is None:
-                pass
-            elif mode == "rebuild" and os.path.isdir(qpath):
+            if mode == "rebuild" and os.path.isdir(qpath):
                 # a rebuild recomputed EVERY destination row, so its
                 # rejects are the quarantine's complete new content —
                 # appending would duplicate rows earlier runs already
-                # quarantined. Staged overwrite, prior generations
-                # stay pinnable (same shape as readmit's rewrite).
-                import tempfile
-
-                from .generations import carry_generations
-
-                with commitio.IO.writer_lock(qpath):
-                    staging = tempfile.mkdtemp(
-                        prefix="mri_pipeq_",
-                        dir=os.path.dirname(qpath) or ".",
-                    )
-                    commitio.chmod_staging(staging)
-                    rejects.write.mode("overwrite").parquet(staging)
-                    for f in os.listdir(staging):
-                        if f.startswith("_") and os.path.isfile(
-                            os.path.join(staging, f)
-                        ):
-                            os.remove(os.path.join(staging, f))
-                    carry_generations(qpath, staging)
-                    commitio.IO.publish_swap(qpath, staging)
-                    if load_manifest(qpath) is None:
-                        publish_generation(qpath)
-            else:
+                # quarantined
+                replace_quarantine(qpath, rejects)
+            elif n_bad:
+                # fresh rejects (a rebuild with nothing to replace and
+                # nothing rejected creates no quarantine)
                 rejects.write.mode("append").parquet(qpath)
-                for f in os.listdir(qpath):
-                    p = os.path.join(qpath, f)
-                    if (
-                        f.startswith("_")
-                        and os.path.isfile(p)
-                        and not f.endswith(".json")
-                    ):
-                        os.remove(p)
+                strip_markers(qpath)
                 publish_generation(qpath)
         result = {
             "mode": mode if since > 0 else "append",

@@ -116,10 +116,10 @@ def test_writer_lock_excludes_threads(tmp_path):
     assert order == ["a-in", "a-out", "b-in"]
 
 
-def test_artifact_paths_route_through_the_seam(tmp_path, monkeypatch):
+def test_artifact_paths_route_through_the_seam(spark, tmp_path, monkeypatch):
     """Package writers look the backend up at call time — swap in a
-    counting backend and watch a writer's lock call arrive (the seam is
-    real, not parallel code)."""
+    counting backend and watch a writer's lock and swap calls arrive
+    (the seam is real, not parallel code)."""
     import map_reduce_indexing_spark.sources.commitio as C
 
     calls = []
@@ -144,6 +144,24 @@ def test_artifact_paths_route_through_the_seam(tmp_path, monkeypatch):
     os.makedirs(store)
     drop_tag(store, "t")  # a manifest writer: enters the writer lock
     assert ("lock", store) in calls
+
+    # a trained vector-store build replaces its directory: the swap must
+    # be the backend's (a hand-rolled rename pair writes no CAS journal)
+    from map_reduce_indexing_spark.operators.similarity import (
+        DIM,
+        build_vector_store,
+    )
+
+    vectors = spark.createDataFrame(
+        [(i, [float(i % 2)] * DIM) for i in range(8)],
+        "vec_id long, v array<double>",
+    )
+    vstore = str(tmp_path / "vs")
+    build_vector_store(
+        spark, vectors, vstore, layout="ivf",
+        centroids=[[0.0] * DIM, [1.0] * DIM],
+    )
+    assert ("swap", vstore) in calls
 
 
 # ---------------------------------------------------------------------------
@@ -383,3 +401,57 @@ with io.writer_lock(sys.argv[1]):
     assert waited > 0.4  # blocked until the other process released
     p.communicate(timeout=30)
     assert p.returncode == 0
+
+
+def test_failed_staged_rewrite_leaves_no_staging(spark, tmp_path, io_backend):
+    """A staged rewrite that raises — in the caller's write step, or in
+    the backend's swap before it owns the staging dir — removes its
+    staging dir: no `mri_*` sibling is stranded beside the store, the
+    store reads exactly as before, and the next compaction works."""
+    import pytest
+
+    from map_reduce_indexing_spark.sources import commitio as C
+    from map_reduce_indexing_spark.sources.artifacts import compact_artifact
+    from map_reduce_indexing_spark.sources.generations import (
+        append_rows,
+        generation_head,
+        read_generation,
+    )
+
+    store = str(tmp_path / "store")
+    append_rows(
+        spark,
+        store,
+        spark.createDataFrame([(i, f"v{i}") for i in range(6)], "k long, v string"),
+    )
+    head = generation_head(store)
+    listing = sorted(os.listdir(store))
+
+    def keys():
+        return sorted(r.k for r in read_generation(spark, store).collect())
+
+    def rewrite(df, staging):
+        df.write.mode("overwrite").parquet(staging)
+
+    def failing_rewrite(df, staging):
+        rewrite(df, staging)
+        raise RuntimeError("rewrite failed")
+
+    class RefusingSwap(type(C.IO)):
+        def publish_swap(self, live, staging):
+            raise C.CommitConflict("head moved")
+
+    with pytest.raises(RuntimeError, match="rewrite failed"):
+        compact_artifact(spark, store, failing_rewrite)
+    with C.using_backend(RefusingSwap()):
+        with pytest.raises(C.CommitConflict):
+            compact_artifact(spark, store, rewrite)
+    assert [e for e in os.listdir(tmp_path) if e.startswith("mri_")] == []
+    assert sorted(os.listdir(store)) == listing
+    assert generation_head(store) == head
+    assert keys() == list(range(6))
+
+    compact_artifact(spark, store, rewrite)
+    assert generation_head(store) == head + 1
+    assert keys() == list(range(6))
+    assert [e for e in os.listdir(tmp_path) if e.startswith("mri_")] == []

@@ -160,3 +160,60 @@ def test_only_commitio_binds_the_backend():
             ):
                 found.append(f"{rel}:{node.lineno}")
     assert not found, f"modules binding commitio's IO: {found}"
+
+
+# Store directories are replaced in exactly one place: a staging dir is
+# made, filled and swapped in by generations.staged_rewrite, and the swap
+# itself is the commit backend's. The two other staging dirs are not
+# swapped in: a session artifact's fresh build dir, and the private dir
+# an optimistic append places its files from.
+SWAP_CALLERS = {("sources/generations.py", "staged_rewrite")}
+MKDTEMP_CALLERS = SWAP_CALLERS | {
+    ("sources/artifacts.py", "session_artifact_path"),
+    ("sources/generations.py", "append_rows"),
+}
+
+
+def _calls_in_functions(tree):
+    """(enclosing top-level function name or None, call node) for every
+    call in a module."""
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, fn or child.name)
+            else:
+                if isinstance(child, ast.Call):
+                    yield fn, child
+                yield from walk(child, fn)
+
+    yield from walk(tree, None)
+
+
+def _call_name(call) -> str:
+    return ast.unparse(call.func)
+
+
+def test_one_staged_rewrite_path():
+    """`publish_swap` is called only by commitio itself and by the
+    staged-rewrite primitive; `tempfile.mkdtemp` only by the primitive
+    and the two non-swapping staging dirs; and outside commitio,
+    `os.replace`/`os.rename` only move a `tmp` file over its final name
+    (the per-file atomic write) — never a store directory."""
+    found = []
+    for rel, tree in _modules():
+        if rel == "sources/commitio.py":
+            continue
+        for fn, call in _calls_in_functions(tree):
+            name = _call_name(call)
+            where = f"{rel}:{call.lineno} {name} in {fn}"
+            if name.endswith(".publish_swap") and (rel, fn) not in SWAP_CALLERS:
+                found.append(where)
+            elif name.endswith("mkdtemp") and (rel, fn) not in MKDTEMP_CALLERS:
+                found.append(where)
+            elif name in ("os.replace", "os.rename") and not (
+                call.args
+                and isinstance(call.args[0], ast.Name)
+                and call.args[0].id == "tmp"
+            ):
+                found.append(where)
+    assert not found, f"store swaps outside the staged rewrite: {found}"
