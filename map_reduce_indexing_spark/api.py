@@ -327,7 +327,8 @@ class IndexSession:
         preserves sums and the distinct word/doc sets but not physical
         row counts — so the view carries sum(cnt) and distinct counts,
         never count(*). Across a compaction the refresh REBUILDS from
-        the head snapshot (operators/matview.py:_rebuild_locked): a
+        the head snapshot (operators/matview.py:_refresh_locked, which
+        falls back to _rebuild_locked without a count(*) anchor): a
         fold changes cnt on keys that already existed at the pin, so
         a key-level anti-join delta would silently drop the appended
         cnt from total_cnt — the rebuild is exact for any rewrite and

@@ -88,12 +88,16 @@ homomorphic aggregates, which is exactly what makes it exact:
   SQL sample form, null below n=2. With integer/decimal inputs the
   ingredients are exact, so incremental == full rebuild bit-for-bit.
 
-- `create_matview_join` extends the tier to FACT ⋈ DIMS specs (every
-  real dashboard joins a fact to dimensions): refresh applies the
-  standard join-IVM telescoping delta — Σ_i (new ⋈ … ⋈ ΔR_i ⋈ … ⋈
-  old), each term delta-sized in ΔR_i, stable stores contributing no
-  term — so with dims stable the refresh is exactly ΔF ⋈ dims. Any
-  store whose span rewrote files triggers the same exact rebuild.
+- ONE maintenance engine serves every view. A view aggregates FACT
+  ⋈ DIMS (`create_matview_join` — every real dashboard joins a fact
+  to dimensions), and a single-table view (`create_matview`) is the
+  zero-dimension case. Refresh applies the standard join-IVM
+  telescoping delta — Σ_i (new ⋈ … ⋈ ΔR_i ⋈ … ⋈ old), each term
+  delta-sized in ΔR_i, stable stores contributing no term — so with
+  dims stable the refresh is exactly ΔF ⋈ dims, and with no dims it
+  is ΔF alone. A store whose span rewrote files contributes its
+  signed change feed (retraction, above) or triggers the exact
+  rebuild.
 
 - `"hist:<lo>:<hi>:<nbins>"` (round 10 third wave) materializes an
   equal-width HISTOGRAM of a numeric column per group, stored as
@@ -320,22 +324,24 @@ def _support_partial(
     df: DataFrame, key_cols: list[str], col: str
 ) -> DataFrame:
     """The support view's partial rows for one distinct-counted
-    column: (group keys, value) -> row count. NULLs are excluded up
-    front — COUNT(DISTINCT col) ignores them (SQL semantics)."""
+    column: (group keys, value) -> row count, or the sum of `_sg` for
+    a signed change frame (a multiplicity that retracts). NULLs are
+    excluded up front — COUNT(DISTINCT col) ignores them (SQL
+    semantics)."""
+    n = F.sum("_sg") if "_sg" in df.columns else F.count(F.lit(1))
     return (
         df.filter(F.col(col).isNotNull())
         .groupBy(*key_cols, F.col(col).alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_n"))
+        .agg(n.alias("_n"))
     )
 
 
-def _merge_partials(
-    stored: DataFrame, delta: DataFrame, key_cols: list[str], aggs: dict
-) -> DataFrame:
-    """Fold two partial-aggregate frames into one: counts and sums ADD
-    (count-of-nonnull partials merge by summation, not re-counting —
-    re-counting would count partial ROWS), min/max combine, HLL
-    sketches union (register-wise max)."""
+def _merge_exprs(aggs: dict) -> list:
+    """The re-aggregation of stored partials, for a refresh's merge
+    and a rollup alike: counts and sums ADD (count-of-nonnull partials
+    merge by summation, not re-counting — re-counting would count
+    partial ROWS), min/max combine, HLL sketches union (register-wise
+    max)."""
     _m, _cd, hll, _der = _split(aggs)
     exprs = []
     for out, (op, _col) in _physical(aggs).items():
@@ -347,7 +353,7 @@ def _merge_partials(
             exprs.append(F.max(out).alias(out))
     for out in hll:
         exprs.append(F.hll_union_agg(_sk(out)).alias(_sk(out)))
-    return stored.unionByName(delta).groupBy(*key_cols).agg(*exprs)
+    return exprs
 
 
 def _join_null_safe(
@@ -432,19 +438,16 @@ def _write_view(
     df: DataFrame,
     view_path: str,
     sidecar: dict,
-    supports: dict[str, DataFrame] | None = None,
-    locked: bool = False,
+    supports: dict[str, DataFrame],
 ) -> None:
     """Staged write + atomic swap of data, support tables, AND sidecar
-    together, under the view's writer flock (`staged_rewrite`, the same
-    crash story as compact_artifact: old view intact until the swap).
-    `locked=True` when the caller already holds the flock — the lock
-    is per-fd, so re-entering from the same thread would deadlock."""
-    import contextlib
+    together (`staged_rewrite`, the same crash story as
+    compact_artifact: old view intact until the swap). The caller
+    holds the view's writer flock."""
 
     def write(staging: str) -> None:
         df.write.mode("overwrite").parquet(staging)
-        for name, sup in (supports or {}).items():
+        for name, sup in supports.items():
             dst = os.path.join(staging, f"_support_{name}")
             if isinstance(sup, tuple):
                 # ("append", existing_dir, delta_partials): the stored
@@ -469,11 +472,7 @@ def _write_view(
         with open(os.path.join(staging, MATVIEW_FILE), "w") as fh:
             json.dump(sidecar, fh)
 
-    guard = (
-        contextlib.nullcontext() if locked else commitio.IO.writer_lock(view_path)
-    )
-    with guard:
-        staged_rewrite(view_path, write, "mri_matview_")
+    staged_rewrite(view_path, write, "mri_matview_")
 
 
 def create_matview(
@@ -487,15 +486,11 @@ def create_matview(
     where=None,
 ) -> int:
     """Materialize the partial-aggregate view of base generation `at`
-    (head when None) at `view_path` and pin that generation in the
-    sidecar AND as a named tag on the base store (so retention can
-    never expire the pin under writer churn; the tag moves forward on
-    every refresh). `row_keys` (e.g. ["doc_id"]) names the base's row
-    identity — recorded in the sidecar for consumers/debugging; the
-    refresh itself no longer needs it (a span that rewrote files
-    rebuilds from head, exact for folding AND deleting rewrites,
-    where a key-level anti-join silently missed value changes on
-    retained keys).
+    (head when None) at `view_path` — the zero-dimension join view
+    (`create_matview_join` with no dims) — and return the pinned
+    generation. `row_keys` (e.g. ["doc_id"]) names the base's row
+    identity: with a count(*) output it lets a refresh across a
+    delete/upsert RETRACT from the change feed instead of rebuilding.
 
     `where` makes it a FILTERED view — the same `[(col, op, val),
     ...]` predicate language as `read_generation` (AND-list; an
@@ -508,40 +503,10 @@ def create_matview(
     predicate also FILE-PRUNES each refresh's delta scan via the
     manifest stats — a view over one tenant/month touches only that
     slice's files."""
-    from ..sources.generations import load_manifest, _resolve
-
-    for out, (op, _c) in aggs.items():
-        if not _valid_op(op):
-            raise ValueError(f"unsupported aggregate op {op!r} for {out!r}")
-    m = load_manifest(base_path)
-    if m is None:
-        raise ValueError(f"{base_path!r} has no generation manifest")
-    gen = _resolve(m, base_path, at)  # int, None (head), or a tag name
-    # pin BEFORE reading: from here retention cannot expire the
-    # generation the view is about to record as its base
-    _pin_base(base_path, view_path, gen)
-    base = read_generation(spark, base_path, at=gen, where=where)
-    _merge, cd, _hll, _der = _split(aggs)
-    supports = {
-        out: _support_partial(base, key_cols, col) for out, col in cd.items()
-    }
-    view = _attach_derived(
-        _partial_agg(base, key_cols, aggs), supports, key_cols, aggs
-    )
-    _write_view(
-        view,
-        view_path,
-        {
-            "base_path": os.path.abspath(base_path),
-            "base_gen": gen,
-            "key_cols": list(key_cols),
-            "aggs": {k: list(v) for k, v in aggs.items()},
-            "row_keys": list(row_keys or []),
-            "where": _where_json(where),
-        },
-        supports,
-    )
-    return gen
+    return create_matview_join(
+        spark, view_path, base_path, [], key_cols, aggs,
+        at=at, where=where, row_keys=row_keys,
+    )["fact_gen"]
 
 
 def _where_json(where):
@@ -562,6 +527,29 @@ def _where_from_spec(spec: dict):
     return spec.get("where") or None
 
 
+def _spec_aggs(spec: dict) -> dict:
+    return {k: tuple(v) for k, v in spec["aggs"].items()}
+
+
+def _stores(spec: dict) -> tuple[list[dict], list[str], list[int]]:
+    """(dims, store paths, pinned generations) of a view, the fact
+    first. A single-table view has no dims (sidecars written before
+    join views existed have no `dims` key at all)."""
+    dims = spec.get("dims") or []
+    paths = [spec["base_path"], *(d["path"] for d in dims)]
+    pins = [int(spec["base_gen"]), *(int(d["gen"]) for d in dims)]
+    return dims, paths, pins
+
+
+def _pinned_at(spec: dict, gens: list[int]) -> dict:
+    """The sidecar with every store's pin moved to `gens` (a sidecar
+    without a `dims` key keeps that shape)."""
+    out = {**spec, "base_gen": gens[0]}
+    if "dims" in spec:
+        out["dims"] = [{**d, "gen": g} for d, g in zip(spec["dims"], gens[1:])]
+    return out
+
+
 def _stored_main(spark: SparkSession, view_path: str, aggs: dict) -> DataFrame:
     """The stored frame reduced to its MERGEABLE columns: the served
     count_distinct / estimate columns are derived, so a refresh drops
@@ -572,16 +560,18 @@ def _stored_main(spark: SparkSession, view_path: str, aggs: dict) -> DataFrame:
 
 
 def refresh_matview(spark: SparkSession, view_path: str) -> dict:
-    """Advance the view to the base's current head generation. Returns
-    a report: {"from": g, "to": g', "delta_files": n, "mode": m,
-    "refreshed": bool} — `mode` is "incremental" (the span is provably
-    append-only: merge the partial aggregates of exactly the appended
-    files, `delta_files` counts them) or "rebuild" (the span rewrote
-    files — a compaction may have FOLDED rows into existing keys, a
-    delete removed them; no key-level delta recovers either, so the
-    view recomputes from the head snapshot: always exact, and cheaper
-    than an anti-join that would scan head plus the old keys anyway;
-    `delta_files` is -1).
+    """Advance the view to every store's current head generation.
+    Returns a report: {"from": g, "to": g', "delta_files": n, "mode":
+    m, "refreshed": bool} — `from`/`to` are ints for a single-table
+    view and per-store lists (fact first) for a join view. `mode` is
+    "noop", "incremental" (every span is provably append-only: merge
+    the partial aggregates of exactly the appended files,
+    `delta_files` counts them), "retract" (a span rewrote files and
+    the spec is retractable: the signed change feed is merged,
+    `delta_files` is -1) or "rebuild" (otherwise — a compaction may
+    have FOLDED rows into existing keys, a delete removed them, and
+    no key-level delta recovers either; the view recomputes from the
+    head snapshots, always exact; `delta_files` is -1).
 
     The ENTIRE refresh holds the view's writer flock, not just the
     final swap: pin and stored partials must be read under the same
@@ -592,31 +582,6 @@ def refresh_matview(spark: SparkSession, view_path: str) -> dict:
 
     with commitio.IO.writer_lock(view_path):
         return _refresh_locked(spark, view_path)
-
-
-def _rebuild_locked(
-    spark: SparkSession, view_path: str, spec: dict, head: int
-) -> None:
-    """Recompute the view (and its supports) from base generation
-    `head` wholesale — the exact fallback for any span whose files
-    were rewritten. One head-snapshot scan; the old view swaps out
-    atomically like any refresh."""
-    base_path = spec["base_path"]
-    key_cols = spec["key_cols"]
-    aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
-    base = read_generation(
-        spark, base_path, at=head, where=_where_from_spec(spec)
-    )
-    _m, cd, _h, _der = _split(aggs)
-    supports = {
-        out: _support_partial(base, key_cols, col) for out, col in cd.items()
-    }
-    view = _attach_derived(
-        _partial_agg(base, key_cols, aggs), supports, key_cols, aggs
-    )
-    sidecar = dict(spec)
-    sidecar["base_gen"] = head
-    _write_view(view, view_path, sidecar, supports, locked=True)
 
 
 _NONRETRACTABLE_OPS = {"min", "max", "approx_distinct"}
@@ -637,18 +602,6 @@ def _retraction_plan(aggs: dict, row_keys: list) -> str | None:
         if op == "count" and col == "*":
             return out
     return None
-
-
-def _signed_partial(
-    plus: DataFrame, minus: DataFrame, key_cols: list[str], aggs: dict
-) -> DataFrame:
-    return _signed_agg(
-        plus.withColumn("_sg", F.lit(1)).unionByName(
-            minus.withColumn("_sg", F.lit(-1))
-        ),
-        key_cols,
-        aggs,
-    )
 
 
 def _signed_agg(
@@ -685,202 +638,12 @@ def _signed_agg(
     return signed.groupBy(*key_cols).agg(*exprs)
 
 
-def _refresh_retract_locked(
-    spark: SparkSession,
-    view_path: str,
-    spec: dict,
-    pinned: int,
-    head: int,
-    rows_out: str,
-) -> dict:
-    """Refresh across a REWRITING span without rebuilding: consume the
-    row-level change feed (which scans only the span's DIFFERING
-    files — sources/generations.py:_changed_sides), apply postimages
-    and inserts positively, RETRACT preimages and deletes, and drop
-    groups whose row count reaches zero (a rebuild would not emit
-    them). Exact for every retractable spec: counts and sums (and the
-    avg/stddev ingredients) are abelian-group aggregates, and the
-    count_distinct supports carry per-(group, value) multiplicities
-    that decrement to zero and drop. This closes the last rebuild
-    trigger for the common DML spans: a delete/upsert that rewrote 2
-    of 1000 files now costs those 2 files' two versions plus
-    answer-sized state — never the base. With int/decimal inputs the
-    arithmetic is exact, so retraction == rebuild bit-for-bit
-    (tests/test_matview.py); double inputs share the usual float
-    order-sensitivity of any partial-sum path."""
-    from ..sources.generations import _where_column, generation_changes
-
-    base_path = spec["base_path"]
-    key_cols = spec["key_cols"]
-    aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
-    where = _where_from_spec(spec)
-    ch = generation_changes(
-        spark,
-        base_path,
-        since=pinned,
-        until=head,
-        key_cols=tuple(spec["row_keys"]),
-    )
-    if where:
-        # a filtered view sees only predicate-matching images; an
-        # update moving a row across the predicate boundary becomes a
-        # pure insert or pure retraction here — exactly the filtered
-        # rebuild's semantics (filtering distributes over the images)
-        ch = ch.filter(_where_column(where))
-    plus = ch.filter(
-        F.col("change_type").isin("insert", "update_postimage")
-    ).drop("change_type")
-    minus = ch.filter(
-        F.col("change_type").isin("delete", "update_preimage")
-    ).drop("change_type")
-    stored = _stored_main(spark, view_path, aggs)
-    delta = _signed_partial(plus, minus, key_cols, aggs)
-    merged = _merge_partials(stored, delta, key_cols, aggs).filter(
-        F.col(rows_out) > 0
-    )
-    _m, cd, _h, _der = _split(aggs)
-    supports = {}
-    for out, col in cd.items():
-        sup_dir = os.path.join(view_path, f"_support_{out}")
-        stored_sup = spark.read.parquet(sup_dir)
-        delta_sup = _support_partial(plus, key_cols, col).unionByName(
-            _support_partial(minus, key_cols, col).withColumn(
-                "_n", -F.col("_n")
-            )
-        )
-        supports[out] = (
-            stored_sup.unionByName(delta_sup)
-            .groupBy(*key_cols, "_v")
-            .agg(F.sum("_n").alias("_n"))
-            .filter(F.col("_n") > 0)
-        )
-    merged = _attach_derived(merged, supports, key_cols, aggs)
-    sidecar = dict(spec)
-    sidecar["base_gen"] = head
-    _write_view(merged, view_path, sidecar, supports, locked=True)
-    return {
-        "from": pinned,
-        "to": head,
-        "delta_files": -1,
-        "mode": "retract",
-        "refreshed": True,
-    }
-
-
-def _refresh_locked(spark: SparkSession, view_path: str) -> dict:
-    spec = _load_spec(view_path)
-    if spec.get("dims"):
-        return _refresh_join_locked(spark, view_path, spec)
-    base_path, pinned = spec["base_path"], int(spec["base_gen"])
-    head = generation_head(base_path)
-    if head <= pinned:
-        return {
-            "from": pinned,
-            "to": pinned,
-            "delta_files": 0,
-            "mode": "noop",
-            "refreshed": False,
-        }
-    key_cols = spec["key_cols"]
-    aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
-    try:
-        mode, delta_rels = diff_plan(base_path, since=pinned, until=head)
-    except ValueError:
-        # the pinned generation is gone (a pre-tag view whose pin aged
-        # out, or a crash between tag-move and sidecar write): the
-        # incremental path is lost but the rebuild needs only head
-        mode, delta_rels = "rebuild", None
-    if mode != "append":
-        # a rewrite (compaction/delete/upsert) landed in the span —
-        # folds change values on retained keys, deletes remove rows,
-        # and no key-level anti-join can see either. Retractable specs
-        # (counts/sums/derived ratios/count_distinct supports, with
-        # row keys and a count(*) anchor) refresh from the row-level
-        # change feed, which scans only the span's DIFFERING files;
-        # everything else rebuilds exactly from head.
-        _pin_base(base_path, view_path, head)
-        rows_out = (
-            _retraction_plan(
-                {k: tuple(v) for k, v in spec["aggs"].items()},
-                spec.get("row_keys") or [],
-            )
-            if mode == "antijoin"
-            else None
-        )
-        if rows_out is not None:
-            try:
-                return _refresh_retract_locked(
-                    spark, view_path, spec, pinned, head, rows_out
-                )
-            except ValueError:
-                pass  # e.g. pinned gen aged out mid-plan: rebuild
-        _rebuild_locked(spark, view_path, spec, head)
-        return {
-            "from": pinned,
-            "to": head,
-            "delta_files": -1,
-            "mode": "rebuild",
-            "refreshed": True,
-        }
-    _pin_base(base_path, view_path, head)
-    delta = generation_diff(
-        spark,
-        base_path,
-        since=pinned,
-        until=head,
-        where=_where_from_spec(spec),
-    )
-    n_files = len(delta_rels)
-    stored = _stored_main(spark, view_path, aggs)
-    merged = _merge_partials(
-        stored, _partial_agg(delta, key_cols, aggs), key_cols, aggs
-    )
-    _m, cd, _h, _der = _split(aggs)
-    supports = {}
-    supports_union = {}
-    for out, col in cd.items():
-        sup_dir = os.path.join(view_path, f"_support_{out}")
-        stored_sup = spark.read.parquet(sup_dir)
-        delta_sup = _support_partial(delta, key_cols, col)
-        supports_union[out] = stored_sup.unionByName(delta_sup)
-        n_sup_files = sum(
-            1
-            for f in os.listdir(sup_dir)
-            if not f.startswith(("_", "."))
-            and os.path.isfile(os.path.join(sup_dir, f))
-        )
-        if n_sup_files > SUPPORT_FOLD_FILES:
-            # opportunistic fold: bound read amplification from the
-            # accumulated delta files (amortized — one answer-sized
-            # rewrite every SUPPORT_FOLD_FILES refreshes)
-            supports[out] = supports_union[out].groupBy(
-                *key_cols, "_v"
-            ).agg(F.sum("_n").alias("_n"))
-        else:
-            # the fast path: staging hardlinks the stored support's
-            # immutable partial files and writes ONLY the delta —
-            # refresh cost stays delta-sized even when the distinct
-            # answer itself is huge (no answer-sized rewrite)
-            supports[out] = ("append", sup_dir, delta_sup)
-    merged = _attach_derived(merged, supports_union, key_cols, aggs)
-    sidecar = dict(spec)
-    sidecar["base_gen"] = head
-    _write_view(merged, view_path, sidecar, supports, locked=True)
-    return {
-        "from": pinned,
-        "to": head,
-        "delta_files": n_files,
-        "mode": "incremental",
-        "refreshed": True,
-    }
-
-
 def _join_chain(frames: list[DataFrame], dims_spec: list[dict]) -> DataFrame:
     """frames[0] (the fact) inner-joined to frames[1:] (the dims) on
     each dim's same-named equi keys, in spec order. A dim's `select`
     projects it to (join keys + named columns) before the join —
     column pruning the reader applies so a wide dim never rides the
-    exchange."""
+    exchange. With no dims this is the fact frame itself."""
     out = frames[0]
     for frame, d in zip(frames[1:], dims_spec):
         right = frame
@@ -892,6 +655,27 @@ def _join_chain(frames: list[DataFrame], dims_spec: list[dict]) -> DataFrame:
             right = right.select(*keep)
         out = out.join(right, on=list(d["on"]), how="inner")
     return out
+
+
+def _joined(
+    spark: SparkSession,
+    spec: dict,
+    gens: list[int],
+    delta: tuple[int, DataFrame] | None = None,
+) -> DataFrame:
+    """The view's input rows: the fact (under the view's predicate)
+    joined to its dims, store j read at generation `gens[j]` — except
+    that with `delta=(i, frame)` store i is that change frame instead,
+    one term of the telescoping delta."""
+    dims, paths, _pins = _stores(spec)
+    where = _where_from_spec(spec)
+    frames = [
+        delta[1]
+        if delta is not None and j == delta[0]
+        else read_generation(spark, p, at=g, where=where if j == 0 else None)
+        for j, (p, g) in enumerate(zip(paths, gens))
+    ]
+    return _join_chain(frames, dims)
 
 
 def create_matview_join(
@@ -908,16 +692,16 @@ def create_matview_join(
     """Materialize an aggregate over FACT ⋈ DIMS — every store a
     generations-managed artifact — and pin each store's generation
     (in the sidecar AND as a per-view tag, so retention never expires
-    a pin). `dims` is a list of
-    `{"path": store, "on": [equi key cols], "select": [cols]}`
+    a pin; the tags move forward on every refresh). `dims` is a list
+    of `{"path": store, "on": [equi key cols], "select": [cols]}`
     (`select` optional: project the dim to keys + named columns);
-    joins are INNER on same-named columns, in list order. `where`
-    (the `read_generation` predicate language) filters the FACT side
-    — it file-prunes every refresh's fact-delta scan via the
-    manifest stats, and filtering distributes over the append-only
-    union exactly as in the single-table view.
+    joins are INNER on same-named columns, in list order. An empty
+    `dims` is the single-table view (`create_matview`). `where` (the
+    `read_generation` predicate language) filters the FACT side — it
+    file-prunes every refresh's fact-delta scan via the manifest
+    stats, and filtering distributes over the append-only union.
 
-    Refresh (see `_refresh_join_locked`) uses the standard join-IVM
+    Refresh (see `_refresh_locked`) uses the standard join-IVM
     TELESCOPING delta: with every input append-only over the span
     (R_i@new = R_i@old ⊎ ΔR_i, inner join distributing over union),
 
@@ -927,14 +711,15 @@ def create_matview_join(
     — each term delta-sized in ΔR_i, and a stable store contributes
     no term at all. With dims stable (the common case) the whole
     refresh is ΔF ⋈ dims: one fact-delta file scan joined to the
-    dims. The identity holds in the ℤ-multiset algebra for ANY
-    Δ_i = new_i − old_i, so a REWRITTEN store (delete/upsert/dim
-    update) contributes its signed change feed instead and the view
-    RETRACTS incrementally — when the spec is retractable (no
-    min/max/HLL; `row_keys` for the fact, each dim's `row_keys` or
-    its join keys; a count(*) liveness anchor). Otherwise a rewritten
-    span rebuilds from all heads (exact for folding and deleting
-    rewrites alike). Returns {"fact_gen": g, "dim_gens": [g1, …]}."""
+    dims; with no dims it is ΔF alone. The identity holds in the
+    ℤ-multiset algebra for ANY Δ_i = new_i − old_i, so a REWRITTEN
+    store (delete/upsert/dim update) contributes its signed change
+    feed instead and the view RETRACTS incrementally — when the spec
+    is retractable (no min/max/HLL; `row_keys` for the fact, each
+    dim's `row_keys` or its join keys; a count(*) liveness anchor).
+    Otherwise a rewritten span rebuilds from all heads (exact for
+    folding and deleting rewrites alike). Returns {"fact_gen": g,
+    "dim_gens": [g1, …]}."""
     from ..sources.generations import _resolve, load_manifest
 
     for out, (op, _c) in aggs.items():
@@ -943,20 +728,17 @@ def create_matview_join(
     for d in dims:
         if not d.get("on"):
             raise ValueError("every dim needs a non-empty 'on' key list")
-    m = load_manifest(fact_path)
-    if m is None:
-        raise ValueError(f"{fact_path!r} has no generation manifest")
-    fact_gen = _resolve(m, fact_path, at)
-    _pin_base(fact_path, view_path, fact_gen)
-    dim_specs = []
-    dim_frames = []
-    for d in dims:
-        dm = load_manifest(d["path"])
-        if dm is None:
-            raise ValueError(f"{d['path']!r} has no generation manifest")
-        g = _resolve(dm, d["path"], d.get("at"))
-        _pin_base(d["path"], view_path, g)
-        dim_specs.append(
+    paths = [fact_path, *(d["path"] for d in dims)]
+    gens = []
+    for p, a in zip(paths, [at, *(d.get("at") for d in dims)]):
+        m = load_manifest(p)
+        if m is None:
+            raise ValueError(f"{p!r} has no generation manifest")
+        gens.append(_resolve(m, p, a))  # int, None (head), or a tag name
+    spec = {
+        "base_path": os.path.abspath(fact_path),
+        "base_gen": gens[0],
+        "dims": [
             {
                 "path": os.path.abspath(d["path"]),
                 "on": list(d["on"]),
@@ -964,51 +746,31 @@ def create_matview_join(
                 "row_keys": list(d.get("row_keys") or []),
                 "gen": g,
             }
-        )
-        dim_frames.append(read_generation(spark, d["path"], at=g))
-    fact = read_generation(spark, fact_path, at=fact_gen, where=where)
-    joined = _join_chain([fact, *dim_frames], dim_specs)
-    _m, cd, _h, _der = _split(aggs)
-    supports = {
-        out: _support_partial(joined, key_cols, col)
-        for out, col in cd.items()
+            for d, g in zip(dims, gens[1:])
+        ],
+        "key_cols": list(key_cols),
+        "aggs": {k: list(v) for k, v in aggs.items()},
+        "row_keys": list(row_keys or []),
+        "where": _where_json(where),
     }
-    view = _attach_derived(
-        _partial_agg(joined, key_cols, aggs), supports, key_cols, aggs
-    )
-    _write_view(
-        view,
-        view_path,
-        {
-            "base_path": os.path.abspath(fact_path),
-            "base_gen": fact_gen,
-            "dims": dim_specs,
-            "key_cols": list(key_cols),
-            "aggs": {k: list(v) for k, v in aggs.items()},
-            "row_keys": list(row_keys or []),
-            "where": _where_json(where),
-        },
-        supports,
-    )
-    return {"fact_gen": fact_gen, "dim_gens": [d["gen"] for d in dim_specs]}
+    # pin BEFORE reading: from here retention cannot expire the
+    # generations the view is about to record
+    _repin_all(view_path, paths, gens)
+    with commitio.IO.writer_lock(view_path):
+        _rebuild_locked(spark, view_path, spec, gens)
+    return {"fact_gen": gens[0], "dim_gens": gens[1:]}
 
 
-def _rebuild_join_locked(
-    spark: SparkSession, view_path: str, spec: dict, heads: list[int]
+def _rebuild_locked(
+    spark: SparkSession, view_path: str, spec: dict, gens: list[int]
 ) -> None:
-    """Recompute the join view from every store's head generation —
-    the exact fallback when any span rewrote files."""
-    dims = spec["dims"]
+    """Compute the view (and its supports) wholesale from every
+    store's generation `gens[j]` — the initial build, and the exact
+    fallback for any span whose files were rewritten. One scan per
+    store; the old view swaps out atomically like any refresh."""
     key_cols = spec["key_cols"]
-    aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
-    fact = read_generation(
-        spark, spec["base_path"], at=heads[0], where=_where_from_spec(spec)
-    )
-    dim_frames = [
-        read_generation(spark, d["path"], at=h)
-        for d, h in zip(dims, heads[1:])
-    ]
-    joined = _join_chain([fact, *dim_frames], dims)
+    aggs = _spec_aggs(spec)
+    joined = _joined(spark, spec, gens)
     _m, cd, _h, _der = _split(aggs)
     supports = {
         out: _support_partial(joined, key_cols, col)
@@ -1017,12 +779,7 @@ def _rebuild_join_locked(
     view = _attach_derived(
         _partial_agg(joined, key_cols, aggs), supports, key_cols, aggs
     )
-    sidecar = dict(spec)
-    sidecar["base_gen"] = heads[0]
-    sidecar["dims"] = [
-        {**d, "gen": h} for d, h in zip(dims, heads[1:])
-    ]
-    _write_view(view, view_path, sidecar, supports, locked=True)
+    _write_view(view, view_path, _pinned_at(spec, gens), supports)
 
 
 def _signed_changes(
@@ -1038,6 +795,10 @@ def _signed_changes(
         spark, path, since=since, until=until, key_cols=tuple(keys)
     )
     if where:
+        # a filtered view sees only predicate-matching images; an
+        # update moving a row across the predicate boundary becomes a
+        # pure insert or pure retraction here — exactly the filtered
+        # rebuild's semantics (filtering distributes over the images)
         ch = ch.filter(_where_column(where))
     return ch.withColumn(
         "_sg",
@@ -1048,190 +809,155 @@ def _signed_changes(
     ).drop("change_type")
 
 
-def _refresh_join_locked(
-    spark: SparkSession, view_path: str, spec: dict
-) -> dict:
+def _refresh_locked(spark: SparkSession, view_path: str) -> dict:
     """The telescoping-delta refresh (see create_matview_join), in the
     ℤ-multiset algebra: J(new…) − J(old…) = Σ_i (new_{<i} ⋈ Δ_i ⋈
     old_{>i}) holds for ANY per-store delta Δ_i = new_i − old_i, not
     just appends, because inner join is bilinear over signed
     multisets. An append-only store contributes its new files (+1);
-    a REWRITTEN store (delete/upsert/dim update) contributes its
-    signed change feed — so a dimension UPDATE (reprice, re-tier)
-    retracts the old attribute's joined rows and applies the new
-    one's, incrementally, when the aggregate spec is retractable
-    (same conditions as the single-table path: no min/max/HLL, row
-    keys — the fact's from the spec, each dim's from its `row_keys`
-    or its join keys — and a count(*) liveness anchor). Non-
-    retractable specs rebuild on any rewritten span, as before. One
-    union of per-store terms feeds the same partial-merge (plain) or
-    signed-merge (retraction) machinery as the single-table view."""
+    a REWRITTEN store (delete/upsert/compaction/dim update)
+    contributes its signed change feed, which scans only the span's
+    DIFFERING files — so a 2-of-1000-file delete costs those two
+    files' two versions plus answer-sized state, and a dimension
+    UPDATE retracts the old attribute's joined rows and applies the
+    new one's. That needs a retractable spec (counts/sums, the
+    avg/stddev/hist ingredients and the count_distinct supports are
+    abelian groups under removal; min/max and HLL registers are not),
+    row keys (the fact's from the spec, each dim's from its
+    `row_keys` or its join keys) and a count(*) output, whose zero
+    drops a group whose last row left. Anything else — or a pinned
+    generation that is no longer available — rebuilds from the
+    heads. With int/decimal inputs the arithmetic is exact, so
+    incremental == retraction == rebuild bit-for-bit; double inputs
+    share the usual float order-sensitivity of any partial-sum path."""
     from functools import reduce
 
-    dims = spec["dims"]
-    paths = [spec["base_path"], *(d["path"] for d in dims)]
-    pins = [int(spec["base_gen"]), *(int(d["gen"]) for d in dims)]
-    heads = [generation_head(p) for p in paths]
-    if all(h <= p for h, p in zip(heads, pins)):
+    spec = _load_spec(view_path)
+    dims, paths, pins = _stores(spec)
+    heads = [max(generation_head(p), g) for p, g in zip(paths, pins)]
+
+    def report(delta_files: int, mode: str) -> dict:
         return {
-            "from": pins,
-            "to": pins,
-            "delta_files": 0,
-            "mode": "noop",
-            "refreshed": False,
+            "from": pins if dims else pins[0],
+            "to": heads if dims else heads[0],
+            "delta_files": delta_files,
+            "mode": mode,
+            "refreshed": mode != "noop",
         }
-    heads = [max(h, p) for h, p in zip(heads, pins)]
+
+    if heads == pins:
+        return report(0, "noop")
     modes = []
-    n_delta_files = 0
     for p, pin, head in zip(paths, pins, heads):
-        if head <= pin:
+        if head == pin:
             modes.append(("noop", []))
             continue
         try:
-            mode, rels = diff_plan(p, since=pin, until=head)
+            modes.append(diff_plan(p, since=pin, until=head))
         except ValueError:
-            mode, rels = "rebuild", None
-        modes.append((mode, rels))
-        if mode == "append":
-            n_delta_files += len(rels)
+            # the pinned generation is gone (a pre-tag view whose pin
+            # aged out, or a crash between tag-move and sidecar
+            # write): only the rebuild, which needs only heads, is left
+            modes.append(("rebuild", None))
     key_cols = spec["key_cols"]
-    aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
+    aggs = _spec_aggs(spec)
     rewriting = any(mode == "antijoin" for mode, _ in modes)
-    unplannable = any(mode == "rebuild" for mode, _ in modes)
     rows_out = (
         _retraction_plan(aggs, spec.get("row_keys") or [])
-        if rewriting and not unplannable
+        if rewriting
         else None
     )
-    if (rewriting and rows_out is None) or unplannable:
-        _repin_all(view_path, paths, heads)
-        _rebuild_join_locked(spark, view_path, spec, heads)
-        return {
-            "from": pins,
-            "to": heads,
-            "delta_files": -1,
-            "mode": "rebuild",
-            "refreshed": True,
-        }
     _repin_all(view_path, paths, heads)
-    where = _where_from_spec(spec)
-
-    def at_new(j):
-        w = where if j == 0 else None
-        return read_generation(spark, paths[j], at=heads[j], where=w)
-
-    def at_old(j):
-        w = where if j == 0 else None
-        return read_generation(spark, paths[j], at=pins[j], where=w)
-
-    store_keys = [list(spec.get("row_keys") or [])]
-    for d in dims:
-        store_keys.append(list(d.get("row_keys") or d["on"]))
-    terms = []
-    for i, (mode, rels) in enumerate(modes):
-        if mode == "noop" or (mode == "append" and not rels):
-            continue  # stable store (or empty append): no term
-        if mode == "append":
-            delta_i = generation_diff(
-                spark,
-                paths[i],
-                since=pins[i],
-                until=heads[i],
-                where=where if i == 0 else None,
-            )
-            if rewriting:  # signed algebra: appends are +1 rows
-                delta_i = delta_i.withColumn("_sg", F.lit(1))
-        else:  # a rewritten span: the store's signed change feed
-            delta_i = _signed_changes(
-                spark,
-                paths[i],
-                pins[i],
-                heads[i],
-                store_keys[i],
-                where if i == 0 else None,
-            )
-        parts = [
-            at_new(j) if j < i else (delta_i if j == i else at_old(j))
-            for j in range(len(paths))
+    terms = None
+    if all(mode != "rebuild" for mode, _ in modes) and (
+        rows_out is not None or not rewriting
+    ):
+        where = _where_from_spec(spec)
+        store_keys = [
+            spec.get("row_keys") or [],
+            *(d.get("row_keys") or d["on"] for d in dims),
         ]
-        terms.append(_join_chain(parts, dims))
-    if not terms:
-        # appends landed but every delta file was pruned by the fact
-        # predicate (or was empty): advance the pins, keep the data
-        sidecar = dict(spec)
-        sidecar["base_gen"] = heads[0]
-        sidecar["dims"] = [{**d, "gen": h} for d, h in zip(dims, heads[1:])]
-        stored = spark.read.parquet(view_path)
-        supports = {}
-        _m0, cd0, _h0, _d0 = _split(aggs)
-        for out in cd0:
-            sup_dir = os.path.join(view_path, f"_support_{out}")
-            supports[out] = spark.read.parquet(sup_dir)
-        _write_view(stored, view_path, sidecar, supports, locked=True)
-        return {
-            "from": pins,
-            "to": heads,
-            "delta_files": 0,
-            "mode": "incremental",
-            "refreshed": True,
-        }
-    delta_join = reduce(lambda a, b: a.unionByName(b), terms)
-    stored = _stored_main(spark, view_path, aggs)
+        # stable stores (and empty appends) contribute no term; when
+        # none is left the fact's empty diff keeps the schema
+        live = [
+            i for i, (mode, rels) in enumerate(modes)
+            if rels or mode == "antijoin"
+        ] or [0]
+        try:
+            terms = []
+            for i in live:
+                w = where if i == 0 else None
+                if modes[i][0] == "antijoin":
+                    delta_i = _signed_changes(
+                        spark, paths[i], pins[i], heads[i], store_keys[i], w
+                    )
+                else:
+                    delta_i = generation_diff(
+                        spark, paths[i], since=pins[i], until=heads[i],
+                        where=w,
+                    )
+                    if rewriting:  # signed algebra: appends are +1 rows
+                        delta_i = delta_i.withColumn("_sg", F.lit(1))
+                terms.append(
+                    _joined(spark, spec, [*heads[:i], *pins[i:]], (i, delta_i))
+                )
+        except ValueError:
+            if not rewriting:
+                raise
+            terms = None  # e.g. a pinned generation aged out mid-plan
+    if terms is None:
+        _rebuild_locked(spark, view_path, spec, heads)
+        return report(-1, "rebuild")
+    delta_rows = reduce(lambda a, b: a.unionByName(b), terms)
+    delta = (_signed_agg if rewriting else _partial_agg)(
+        delta_rows, key_cols, aggs
+    )
+    merged = (
+        _stored_main(spark, view_path, aggs)
+        .unionByName(delta)
+        .groupBy(*key_cols)
+        .agg(*_merge_exprs(aggs))
+    )
     if rewriting:
-        merged = _merge_partials(
-            stored, _signed_agg(delta_join, key_cols, aggs), key_cols, aggs
-        ).filter(F.col(rows_out) > 0)
-    else:
-        merged = _merge_partials(
-            stored, _partial_agg(delta_join, key_cols, aggs), key_cols, aggs
-        )
+        merged = merged.filter(F.col(rows_out) > 0)
     _m, cd, _h, _der = _split(aggs)
     supports = {}
-    supports_union = {}
+    served = {}
     for out, col in cd.items():
         sup_dir = os.path.join(view_path, f"_support_{out}")
-        stored_sup = spark.read.parquet(sup_dir)
-        if rewriting:
-            delta_sup = (
-                delta_join.filter(F.col(col).isNotNull())
-                .groupBy(*key_cols, F.col(col).alias("_v"))
-                .agg(F.sum("_sg").alias("_n"))
-            )
-            folded = (
-                stored_sup.unionByName(delta_sup)
-                .groupBy(*key_cols, "_v")
-                .agg(F.sum("_n").alias("_n"))
-                .filter(F.col("_n") > 0)
-            )
-            supports[out] = folded
-            supports_union[out] = folded
-            continue
-        delta_sup = _support_partial(delta_join, key_cols, col)
-        supports_union[out] = stored_sup.unionByName(delta_sup)
+        delta_sup = _support_partial(delta_rows, key_cols, col)
+        served[out] = spark.read.parquet(sup_dir).unionByName(delta_sup)
         n_sup_files = sum(
             1
             for f in os.listdir(sup_dir)
             if not f.startswith(("_", "."))
             and os.path.isfile(os.path.join(sup_dir, f))
         )
-        if n_sup_files > SUPPORT_FOLD_FILES:
-            supports[out] = supports_union[out].groupBy(
-                *key_cols, "_v"
-            ).agg(F.sum("_n").alias("_n"))
+        if rewriting or n_sup_files > SUPPORT_FOLD_FILES:
+            # fold to one row per (group, value): a retraction must
+            # (multiplicities that reach zero leave the support); an
+            # append refresh does so opportunistically, bounding the
+            # read amplification of the accumulated delta files — one
+            # answer-sized rewrite every SUPPORT_FOLD_FILES refreshes
+            supports[out] = (
+                served[out]
+                .groupBy(*key_cols, "_v")
+                .agg(F.sum("_n").alias("_n"))
+                .filter(F.col("_n") > 0)
+            )
+            if rewriting:
+                served[out] = supports[out]
         else:
+            # the fast path: staging hardlinks the stored support's
+            # immutable partial files and writes ONLY the delta —
+            # refresh cost stays delta-sized even when the distinct
+            # answer itself is huge (no answer-sized rewrite)
             supports[out] = ("append", sup_dir, delta_sup)
-    merged = _attach_derived(merged, supports_union, key_cols, aggs)
-    sidecar = dict(spec)
-    sidecar["base_gen"] = heads[0]
-    sidecar["dims"] = [{**d, "gen": h} for d, h in zip(dims, heads[1:])]
-    _write_view(merged, view_path, sidecar, supports, locked=True)
-    return {
-        "from": pins,
-        "to": heads,
-        "delta_files": -1 if rewriting else n_delta_files,
-        "mode": "retract" if rewriting else "incremental",
-        "refreshed": True,
-    }
+    merged = _attach_derived(merged, served, key_cols, aggs)
+    _write_view(merged, view_path, _pinned_at(spec, heads), supports)
+    if rewriting:
+        return report(-1, "retract")
+    return report(sum(len(rels) for _m, rels in modes), "incremental")
 
 
 def _repin_all(view_path: str, paths: list[str], gens: list[int]) -> None:
@@ -1240,21 +966,21 @@ def _repin_all(view_path: str, paths: list[str], gens: list[int]) -> None:
 
 
 def drop_matview(view_path: str) -> None:
-    """Remove the view and release its pin tag on the base (the pinned
-    generation re-enters normal TTL retention at the base's next
-    publish)."""
+    """Remove the view and release its pin tag on every store it reads
+    (each pinned generation re-enters normal TTL retention at that
+    store's next publish)."""
     import shutil
 
     from ..sources.generations import drop_tag
 
     with commitio.IO.writer_lock(view_path):
         try:
-            spec = _load_spec(view_path)
+            _dims, paths, _pins = _stores(_load_spec(view_path))
         except OSError:
-            spec = None
-        if spec is not None:
+            paths = []
+        for p in paths:
             try:
-                drop_tag(spec["base_path"], _view_ref(view_path))
+                drop_tag(p, _view_ref(view_path))
             except OSError:
                 pass
         shutil.rmtree(view_path, ignore_errors=True)
@@ -1288,26 +1014,16 @@ def rollup_matview(
             f"rollup keys {sub_keys!r} are not a subset of the view's "
             f"keys {key_cols!r}; the view cannot answer this grouping"
         )
-    aggs = {k: tuple(v) for k, v in spec["aggs"].items()}
-    _merge, cd, hll, der = _split(aggs)
-    stored = spark.read.parquet(view_path)
-    exprs = []
-    for out, (op, _col) in _physical(aggs).items():
-        if op in ("count", "sum", "sumsq", "bin"):
-            exprs.append(F.sum(out).alias(out))
-        elif op == "min":
-            exprs.append(F.min(out).alias(out))
-        else:
-            exprs.append(F.max(out).alias(out))
-    for out in hll:
-        exprs.append(
-            F.coalesce(
-                F.hll_sketch_estimate(F.hll_union_agg(_sk(out))), F.lit(0)
-            ).alias(out)
-        )
-    rolled = stored.groupBy(*sub_keys).agg(*exprs)
-    for out, (op, _col) in der.items():
-        rolled = rolled.withColumn(out, _derived_expr(op, out))
+    aggs = _spec_aggs(spec)
+    _merge, cd, _hll, _der = _split(aggs)
+    rolled = _attach_derived(
+        spark.read.parquet(view_path)
+        .groupBy(*sub_keys)
+        .agg(*_merge_exprs(aggs)),
+        {},
+        sub_keys,
+        aggs,
+    )
     rolled = rolled.drop(
         *[c for c in rolled.columns if c.startswith(_INTERNAL_PREFIXES)]
     )

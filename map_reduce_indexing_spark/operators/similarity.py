@@ -347,31 +347,30 @@ def build_vector_store(
         )
     col = _LAYOUT_COLS[layout]
     books = (codebooks or PQ_CODEBOOKS) if pq else None
-    with commitio.IO.writer_lock(path):
-        if centroids is None and not pq:
-            _write_vector_store(vectors, path, mode="overwrite", col=col)
-        else:
-            # Staged swap (compact_artifact's pattern): data and model
-            # sidecar(s) must commit TOGETHER. Writing them sequentially
-            # into the live path would leave a crash window where the
-            # store holds trained-cell partitions (or PQ codes) but no
-            # sidecar — a "healthy" store that silently routes every
-            # later lookup/append with the wrong model.
-            def write(staging: str) -> None:
-                _write_vector_store(
-                    vectors,
-                    staging,
-                    mode="overwrite",
-                    col=col,
-                    centroids=centroids,
-                    books=books,
-                )
-                if centroids is not None:
-                    _save_quantizer(staging, centroids)
-                if books is not None:
-                    _save_codebook(staging, books)
+    # Staged swap (compact_artifact's pattern) for every layout: the
+    # live store stays intact until the swap (an in-place overwrite
+    # deletes it first, so a failed build would lose the store and its
+    # generations), and data and model sidecar(s) commit TOGETHER —
+    # sequential writes into the live path would leave a crash window
+    # where the store holds trained-cell partitions (or PQ codes) but
+    # no sidecar, a "healthy" store that silently routes every later
+    # lookup/append with the wrong model.
+    def write(staging: str) -> None:
+        _write_vector_store(
+            vectors,
+            staging,
+            mode="overwrite",
+            col=col,
+            centroids=centroids,
+            books=books,
+        )
+        if centroids is not None:
+            _save_quantizer(staging, centroids)
+        if books is not None:
+            _save_codebook(staging, books)
 
-            staged_rewrite(path, write, "mri_build_", spark=spark)
+    with commitio.IO.writer_lock(path):
+        staged_rewrite(path, write, "mri_build_", spark=spark)
 
 
 def append_vectors(spark: SparkSession, vectors: DataFrame, path: str) -> None:

@@ -129,12 +129,18 @@ class PosixStoreIO:
         delete the old copy. POSIX rename gives no two-directory
         atomic swap, so there is a two-rename instant with the live
         path absent; `recover` heals a crash inside it, and readers
-        re-resolve once. Caller holds the writer lock."""
+        re-resolve once. If the second rename raises, the old copy is
+        moved back before re-raising, so the caller still owns (and
+        removes) its staging dir. Caller holds the writer lock."""
         old = live + ".old"
         shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
         if os.path.isdir(live):
             os.replace(live, old)
-        os.replace(staging, live)
+        try:
+            os.replace(staging, live)
+        except BaseException:
+            self.recover(live)
+            raise
         shutil.rmtree(old, ignore_errors=True)
 
     def recover(self, path: str) -> None:

@@ -2625,9 +2625,10 @@ def _generation_diff_impl(
     compact_index sums duplicate (word, doc_id) partials into one
     row — changes values on keys that already existed at `since`,
     which no key-level anti-join can see; consumers that maintain
-    value aggregates across such spans must rebuild from `until`
-    instead (matview refresh does exactly that —
-    operators/matview.py:_rebuild_locked). Without `key_cols` this
+    value aggregates across such spans must retract the span's signed
+    change feed (`generation_changes`) or rebuild from `until`
+    instead (matview refresh does one or the other —
+    operators/matview.py:_refresh_locked). Without `key_cols` this
     raises rather than silently rescanning."""
     mode, _delta = diff_plan(path, since, until)
     m = load_manifest(path)

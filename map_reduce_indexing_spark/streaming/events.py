@@ -1368,11 +1368,7 @@ def run_continuous_aggregate(
 
     Returns the per-batch refresh reports (delta_files per refresh —
     the delta-only claim, asserted in tests)."""
-    from ..operators.matview import (
-        create_matview,
-        create_matview_join,
-        refresh_matview,
-    )
+    from ..operators.matview import create_matview_join, refresh_matview
     from ..sources.generations import ensure_base_generation, publish_generation
 
     reports: list[dict] = []
@@ -1384,21 +1380,14 @@ def run_continuous_aggregate(
             publish_generation(store_path)
         if os.path.isfile(os.path.join(view_path, "_matview.json")):
             reports.append(refresh_matview(spark, view_path))
-        elif dims:
+        else:
             rep = create_matview_join(
-                spark, view_path, store_path, dims, key_cols, aggs,
+                spark, view_path, store_path, dims or [], key_cols, aggs,
                 row_keys=row_keys,
             )
             reports.append(
                 {"from": 0, "to": rep["fact_gen"], "delta_files": -2,
                  "refreshed": True}
-            )
-        else:
-            gen = create_matview(
-                spark, store_path, view_path, key_cols, aggs, row_keys=row_keys
-            )
-            reports.append(
-                {"from": 0, "to": gen, "delta_files": -2, "refreshed": True}
             )
 
     reader = spark.readStream.option("pathGlobFilter", glob).option(

@@ -451,6 +451,28 @@ def test_failed_staged_rewrite_leaves_no_staging(spark, tmp_path, io_backend):
     assert generation_head(store) == head
     assert keys() == list(range(6))
 
+    if isinstance(C.IO, C.PosixStoreIO):
+        # the swap's second rename (staging -> live) fails after live
+        # was renamed aside: live is moved back, staging removed
+        real_replace = os.replace
+
+        def failing_replace(src, dst):
+            if os.path.basename(src).startswith("mri_") and dst == store:
+                raise OSError("rename failed")
+            real_replace(src, dst)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(os, "replace", failing_replace)
+            with pytest.raises(OSError, match="rename failed"):
+                compact_artifact(spark, store, rewrite)
+        assert [
+            e for e in os.listdir(tmp_path)
+            if e.startswith("mri_") or e == "store.old"
+        ] == []
+        assert sorted(os.listdir(store)) == listing
+        assert generation_head(store) == head
+        assert keys() == list(range(6))
+
     compact_artifact(spark, store, rewrite)
     assert generation_head(store) == head + 1
     assert keys() == list(range(6))

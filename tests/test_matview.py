@@ -995,6 +995,7 @@ def test_join_matview_rollup_routes(spark, tmp_path):
 
 
 def test_join_matview_pins_every_store(spark, tmp_path):
+    from map_reduce_indexing_spark.operators.matview import drop_matview
     from map_reduce_indexing_spark.sources.generations import list_tags
 
     fact, dim, view = _setup_join(spark, tmp_path)
@@ -1004,6 +1005,8 @@ def test_join_matview_pins_every_store(spark, tmp_path):
     publish_generation(fact)
     report = refresh_matview(spark, view)
     assert set(list_tags(fact).values()) == {report["to"][0]}
+    drop_matview(view)  # releases the pin on every store
+    assert list_tags(fact) == {} and list_tags(dim) == {}
 
 
 def test_join_matview_filtered_fact(spark, tmp_path):
@@ -1205,12 +1208,36 @@ def test_retraction_refresh_across_upsert(spark, tmp_path):
 def test_retraction_refresh_across_delete_drops_empty_groups(
     spark, tmp_path
 ):
+    """Also a LEGACY single-table view, whose sidecar was written
+    before join views existed and has no `dims` key: it refreshes
+    incrementally after an append and retracts after a copy-on-write
+    delete, reporting int generations like any single-table view."""
+    import json
+
     from map_reduce_indexing_spark.sources.generations import delete_rows
 
     base, view = str(tmp_path / "b"), str(tmp_path / "v")
+    legacy = str(tmp_path / "legacy")
     _chunk(spark, 0, 30).coalesce(2).write.parquet(base)
     publish_generation(base)
     create_matview(spark, base, view, ["grp"], RAGGS, row_keys=["rid"])
+    gen = create_matview(
+        spark, base, legacy, ["grp"], RAGGS, row_keys=["rid"]
+    )
+    sidecar = os.path.join(legacy, "_matview.json")
+    with open(sidecar) as fh:
+        spec = json.load(fh)
+    assert spec.pop("dims") == []
+    with open(sidecar, "w") as fh:
+        json.dump(spec, fh)
+    _chunk(spark, 30, 6).coalesce(1).write.mode("append").parquet(base)
+    publish_generation(base)
+    assert refresh_matview(spark, legacy) == {
+        "from": gen, "to": gen + 1, "delta_files": 1,
+        "mode": "incremental", "refreshed": True,
+    }
+    assert _rview(spark, legacy) == _rfull(spark, base)
+    refresh_matview(spark, view)
     # g1 = rids with rid % 3 == 1: delete ALL of them — the group must
     # VANISH from the view (a rebuild would not emit it)
     delete_rows(spark, base, [("grp", "=", "g1")])
@@ -1218,6 +1245,37 @@ def test_retraction_refresh_across_delete_drops_empty_groups(
     assert report["mode"] == "retract", report
     assert _rview(spark, view) == _rfull(spark, base)
     assert "g1" not in {r.grp for r in read_matview(spark, view).collect()}
+    assert refresh_matview(spark, legacy) == {
+        "from": gen + 1, "to": gen + 2, "delta_files": -1,
+        "mode": "retract", "refreshed": True,
+    }
+    assert _rview(spark, legacy) == _rview(spark, view)
+    with open(sidecar) as fh:
+        assert "dims" not in json.load(fh)
+
+
+def test_retraction_value_error_falls_back_to_rebuild(
+    spark, tmp_path, monkeypatch
+):
+    """A ValueError while planning the retraction (e.g. a pinned
+    generation that aged out mid-plan) rebuilds from head instead."""
+    from map_reduce_indexing_spark.sources import generations
+    from map_reduce_indexing_spark.sources.generations import delete_rows
+
+    base, view = str(tmp_path / "b"), str(tmp_path / "v")
+    _chunk(spark, 0, 30).coalesce(2).write.parquet(base)
+    publish_generation(base)
+    create_matview(spark, base, view, ["grp"], RAGGS, row_keys=["rid"])
+    delete_rows(spark, base, [("v", ">=", 200)])
+
+    def gone(*_a, **_k):
+        raise ValueError("generation 1 is not available")
+
+    monkeypatch.setattr(generations, "generation_changes", gone)
+    report = refresh_matview(spark, view)
+    assert report["mode"] == "rebuild", report
+    assert isinstance(report["from"], int) and isinstance(report["to"], int)
+    assert _rview(spark, view) == _rfull(spark, base)
 
 
 def test_retraction_refresh_across_fold(spark, tmp_path):

@@ -217,3 +217,40 @@ def test_one_staged_rewrite_path():
             ):
                 found.append(where)
     assert not found, f"store swaps outside the staged rewrite: {found}"
+
+
+# A materialized view is maintained by one engine: a refresh plans and
+# reads per-store deltas, and only the build reads whole snapshots.
+MATVIEW_DIFF_CALLERS = {"_refresh_locked", "_signed_changes"}
+MATVIEW_BUILDERS = {"create_matview_join", "_rebuild_locked"}
+
+
+def test_one_matview_engine():
+    """In operators/matview.py only `_refresh_locked` and
+    `_signed_changes` plan or read generation deltas (`diff_plan`,
+    `generation_diff`, `generation_changes`), and only
+    `create_matview_join` and `_rebuild_locked` build a view from full
+    snapshot reads: `read_generation` is called only by `_joined`, which
+    the builders call bare and `_refresh_locked` calls only with a
+    `delta=` term (the other stores' sides of a telescoping term)."""
+    tree = dict(_modules())["operators/matview.py"]
+    defined = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+    assert MATVIEW_DIFF_CALLERS | MATVIEW_BUILDERS | {"_joined"} <= defined
+    found = []
+    for fn, call in _calls_in_functions(tree):
+        name = _call_name(call)
+        where = f"{call.lineno} {name} in {fn}"
+        if name in ("diff_plan", "generation_diff", "generation_changes"):
+            if fn not in MATVIEW_DIFF_CALLERS:
+                found.append(where)
+        elif name == "read_generation" and fn != "_joined":
+            found.append(where)
+        elif name == "_joined":
+            is_term = len(call.args) > 3 or any(
+                k.arg == "delta" for k in call.keywords
+            )
+            if fn not in MATVIEW_BUILDERS | {"_refresh_locked"} or (
+                fn == "_refresh_locked"
+            ) != is_term:
+                found.append(where)
+    assert not found, f"matview snapshot/delta reads off the one path: {found}"

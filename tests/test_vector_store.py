@@ -696,3 +696,57 @@ def test_filtered_topk_applies_predicate_in_the_pruned_scan(spark, tmp_path):
         spark, store, qv, k=10_000, nprobe=8, where=[("label", "=", 3)]
     ).collect())
     assert n8 >= n1
+
+
+def test_rebuild_keeps_the_store_and_its_generations(
+    spark, tmp_path, monkeypatch
+):
+    """A rebuild stages its write and swaps it in: one that raises
+    after its files were written leaves the store as it was (vectors,
+    generations manifest, pinned snapshots), and one that succeeds
+    publishes a new generation with the old ones still readable — an
+    in-place overwrite replaces the live directory, manifest and
+    snapshots included."""
+    from map_reduce_indexing_spark.operators import similarity
+    from map_reduce_indexing_spark.sources.generations import (
+        generation_head,
+        read_generation,
+    )
+
+    store = str(tmp_path / "store")
+    similarity.build_vector_store(
+        spark, _vectors(spark, 0, 60), store, layout="lsh"
+    )
+    similarity.append_vectors(spark, _vectors(spark, 60, 80), store)
+    head = generation_head(store)
+
+    def ids(at=None):
+        return sorted(
+            r.vec_id for r in read_generation(spark, store, at=at).collect()
+        )
+
+    before, pinned = ids(), ids(at=head - 1)
+    assert before == list(range(80))
+    write = similarity._write_vector_store
+
+    def write_then_fail(*args, **kwargs):
+        write(*args, **kwargs)
+        raise RuntimeError("build failed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "_write_vector_store", write_then_fail)
+        with pytest.raises(RuntimeError, match="build failed"):
+            similarity.build_vector_store(
+                spark, _vectors(spark, 0, 30), store, layout="lsh"
+            )
+    assert generation_head(store) == head
+    assert ids() == before
+    assert ids(at=head - 1) == pinned
+    assert [e for e in os.listdir(tmp_path) if e.startswith("mri_")] == []
+
+    similarity.build_vector_store(
+        spark, _vectors(spark, 0, 30), store, layout="lsh"
+    )
+    assert generation_head(store) == head + 1
+    assert ids() == list(range(30))
+    assert ids(at=head) == before
