@@ -206,28 +206,21 @@ class IndexSession:
             else corpus
         )
 
-        from .sources.generations import (
-            ensure_base_generation,
-            publish_generation,
-        )
+        from .sources.generations import locked_append, publish_append
 
-        with commitio.IO.writer_lock(self.index_path):
-            # Heal a crashed compaction FIRST: appending while the live
-            # path is missing would recreate it with only the delta and
-            # permanently orphan the full index stranded at <path>.old
-            # (recover_index's path-missing guard would never fire again).
-            commitio.IO.recover(self.index_path)
-            # snapshot isolation: the pre-append state becomes pinnable
-            # before the first mutation, and every append publishes a
-            # new head generation (sources/generations.py)
-            ensure_base_generation(self.index_path)
-            (
+        # Heal a crashed compaction FIRST: appending while the live path
+        # is missing would recreate it with only the delta and
+        # permanently orphan the full index stranded at <path>.old. The
+        # pre-append state stays pinnable, and every append publishes a
+        # new head generation (sources/generations.py).
+        with locked_append(self.index_path):
+            publish_append(
+                self.index_path,
                 with_letter(build_postings(docs))
                 .write.mode("append")
                 .partitionBy("letter")
-                .parquet(self.index_path)
+                .parquet,
             )
-            publish_generation(self.index_path)
 
     def compact(self) -> None:
         """Merge appended partial postings back to one row per
@@ -341,12 +334,12 @@ class IndexSession:
             read_matview,
             refresh_matview,
         )
-        from .sources.generations import ensure_base_generation
+        from .sources.generations import locked_append
 
         view = self.index_path.rstrip("/") + "_letter_stats"
         if not _os.path.isfile(_os.path.join(view, "_matview.json")):
-            with commitio.IO.writer_lock(self.index_path):
-                ensure_base_generation(self.index_path)
+            with locked_append(self.index_path):
+                pass  # the index's current state becomes its base generation
             create_matview(
                 self.spark,
                 self.index_path,

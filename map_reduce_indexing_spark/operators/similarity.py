@@ -32,7 +32,12 @@ from ..localrel import local_rows_df
 from ..plans.registry import register
 from ..sources import commitio
 from ..sources.artifacts import compact_artifact, session_artifact_df
-from ..sources.generations import staged_rewrite
+from ..sources.generations import (
+    check_batch_layout,
+    locked_append,
+    publish_append,
+    staged_rewrite,
+)
 from ..sources.tables import load_table
 from .dedup import (
     EMB_DIM,
@@ -388,46 +393,25 @@ def append_vectors(spark: SparkSession, vectors: DataFrame, path: str) -> None:
     with the STORE's layout (inferred from its partition directories),
     so an append can never mix bucket and cell partitions."""
 
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)  # heal a crashed compactor first
-        # Fail-fast layout guard, same as the streaming ingest: a raw
-        # top-level bucket=* append beside a checkpointed
-        # batch=<id>/bucket=* store makes Spark's partition discovery
-        # raise "conflicting directory structures" on every subsequent
-        # read — and compaction (which must read first) cannot heal it.
-        # Checked AFTER recovery, under the lock: a store stranded
-        # mid-compaction looks like an empty path until healed, which
-        # would silently bypass this guard (and default the layout).
-        if os.path.isdir(path) and any(
-            e.startswith("batch=") for e in os.listdir(path)
-        ):
-            raise ValueError(
-                f"{path!r} holds a checkpointed batch=<id> store; a raw "
-                "append would corrupt its partition discovery. "
-                "Run compact_vector_store first (it folds the batched "
-                "layout flat), or keep appending through the checkpointed "
-                "streaming ingest."
-            )
-        # sidecars are read under the lock, after healing: a store
-        # stranded mid-swap has its models in the .old copy until
-        # healed. A compressed store's append re-encodes the new
-        # vectors against the persisted codebook, so lookups never see
-        # a partition mixing coded and code-less rows.
-        from ..sources.generations import (
-            ensure_base_generation,
-            publish_generation,
-        )
-
-        ensure_base_generation(path)  # pre-append state stays pinnable
-        _write_vector_store(
-            vectors,
+    # The layout guard and the sidecar reads run after the heal, under
+    # the lock: a store stranded mid-compaction looks like an empty path
+    # (bypassing the guard and defaulting the layout) and has its models
+    # in the .old copy until healed. A compressed store's append
+    # re-encodes the new vectors against the persisted codebook, so
+    # lookups never see a partition mixing coded and code-less rows.
+    with locked_append(path):
+        check_batch_layout(path, ("bucket=", "cell="), False)
+        publish_append(
             path,
-            mode="append",
-            col=store_layout_col(path),
-            centroids=load_quantizer(path),
-            books=load_codebook(path),
+            lambda p: _write_vector_store(
+                vectors,
+                p,
+                mode="append",
+                col=store_layout_col(p),
+                centroids=load_quantizer(p),
+                books=load_codebook(p),
+            ),
         )
-        publish_generation(path)
 
 
 def compact_vector_store(

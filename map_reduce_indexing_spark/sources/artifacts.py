@@ -191,19 +191,19 @@ def _delta_refresh(spark: SparkSession, src: str, path: str, delta_build) -> boo
         [os.path.join(src, p) for p in new_files],
     ):
         return False
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
+    # Snapshot isolation for the artifact tier: the pre-delta state is
+    # pinnable, and each delta publishes a new head (read back with
+    # `read_artifact(..., at=)`).
+    with generations.locked_append(path):
         # The sidecar goes before the artifact changes and comes back
         # only after the publish: a failure anywhere in between leaves
         # none, so the next lookup takes the full rebuild instead of
         # appending this delta a second time.
         os.remove(os.path.join(path, SOURCES_FILE))
-        # Snapshot isolation for the artifact tier: the pre-delta state
-        # becomes pinnable, and each delta publishes a new head (read
-        # back with `read_artifact(..., at=)`).
-        generations.ensure_base_generation(path)
-        delta_build(path, [os.path.join(src, p) for p in new_files])
-        generations.publish_generation(path)
+        generations.publish_append(
+            path,
+            lambda p: delta_build(p, [os.path.join(src, f) for f in new_files]),
+        )
         _save_sources(path, current)
     return True
 

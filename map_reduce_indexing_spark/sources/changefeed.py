@@ -64,15 +64,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import local_rows_df
-from . import commitio
 from .generations import (
     drop_tag,
     generation_changes,
     generation_head,
     load_manifest,
-    publish_generation,
+    locked_append,
+    publish_append,
     read_generation,
-    strip_markers,
     tag_generation,
 )
 from .pipeline import _src_keys
@@ -250,24 +249,12 @@ def run_changes_feed(
         )
     if not key_cols:
         raise ValueError("run_changes_feed requires key_cols")
-    from .generations import _data_files, reachable_files
-
     os.makedirs(dst_path, exist_ok=True)
-    with commitio.IO.writer_lock(dst_path):
-        commitio.IO.recover(dst_path)
-        # orphan sweep — the pipeline runner's crash-window close
-        # (pipeline.py): a run that crashed between its append and its
-        # publish left unpublished files AND an unadvanced bookmark;
-        # the redo would otherwise fold both copies in
-        m_live = load_manifest(dst_path)
-        if m_live is not None and m_live["gens"].get(str(m_live["head"])):
-            keep = reachable_files(m_live)
-            for rel in _data_files(dst_path):
-                if rel not in keep:
-                    try:
-                        os.remove(os.path.join(dst_path, rel))
-                    except OSError:
-                        pass
+    # orphan sweep — the pipeline runner's crash-window close
+    # (pipeline.py): a run that crashed between its append and its
+    # publish left unpublished files AND an unadvanced bookmark; the
+    # redo would otherwise fold both copies in
+    with locked_append(dst_path, settle="sweep"):
         since = feed_bookmark(dst_path, src_path)
         head = generation_head(src_path)
         src_key = _src_keys(src_path)[0]
@@ -323,10 +310,9 @@ def run_changes_feed(
                     "resync": resync,
                 }
             }
-            batch.write.mode("append").parquet(dst_path)
-            strip_markers(dst_path)
-            gen = publish_generation(
+            gen = publish_append(
                 dst_path,
+                batch.write.mode("append").parquet,
                 spark=spark,
                 entry_extra=entry,
                 manifest_extra=mark,

@@ -57,8 +57,8 @@ is a correctness requirement, not a cost optimization: a
 non-deterministic upstream (rand, current-time columns, source files
 changing mid-run) re-evaluated per action could route a row into the
 store on one evaluation and the quarantine on another, or into
-neither. Callers invoking `gate_eval` directly owe it an already-
-pinned (checkpointed/persisted) or deterministic frame.
+neither. Every gated writer goes through `gate`, which owns the pin,
+the count, and the split.
 
 Reference basis: the unchecked append at helper_reduce.c:241 (any
 mapper output is folded in verbatim); SURVEY.md §2.12 lists the
@@ -72,17 +72,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import commitio
 from .generations import (
-    _data_files,
-    _publish,
     _where_column,
+    check_append,
     load_manifest,
-    publish_generation,
-    reachable_files,
+    locked_append,
+    publish_append,
     read_generation,
     staged_rewrite,
-    strip_markers,
 )
 
 QUARANTINE_SUFFIX = ".quarantine"
@@ -121,34 +118,6 @@ def _violation_flags(expectations: dict) -> list[tuple[str, F.Column]]:
         pred = _where_column(expectations[name])
         out.append((name, ~F.coalesce(pred, F.lit(False))))
     return out
-
-
-def gate_eval(df: DataFrame, expectations: dict):
-    """The gate's evaluation pass, shared with the pipeline runner:
-    (flags, bad-row predicate, rows_in, n_bad, {name: violations}) —
-    per-expectation violation counts from ONE map-side-combined
-    aggregate, one driver row."""
-    flags = _violation_flags(expectations)
-    bad = flags[0][1]
-    for _, fl in flags[1:]:
-        bad = bad | fl
-    counts_row = df.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(bad.cast("long")).alias("_bad"),
-        *[F.sum(fl.cast("long")).alias(name) for name, fl in flags],
-    ).first()
-    rows_in = int(counts_row["_n"] or 0)
-    n_bad = int(counts_row["_bad"] or 0)
-    violations = {name: int(counts_row[name] or 0) for name, _ in flags}
-    return flags, bad, rows_in, n_bad, violations
-
-
-def violation_tags(flags) -> F.Column:
-    """`_violations`: comma-joined, name-sorted names of every failed
-    expectation for a row (concat_ws skips the NULLs of passed ones)."""
-    return F.concat_ws(
-        ",", *[F.when(fl, F.lit(name)) for name, fl in flags]
-    )
 
 
 # Current-time expressions are DETERMINISTIC to Catalyst (evaluated
@@ -215,18 +184,68 @@ def pin_once(df: DataFrame, pin_batch="auto") -> DataFrame:
     return df.localCheckpoint(eager=True) if _plan_needs_pin(df) else df
 
 
+def gate(df: DataFrame, expectations: dict, mode: str = "quarantine",
+         pin_batch="auto"):
+    """The one admission gate, shared by every gated writer
+    (`append_with_expectations`, `readmit`, `generations.append_rows`,
+    `pipeline.run_incremental_pipeline`): pin the batch once
+    (`pin_once`), count per-expectation violations in ONE
+    map-side-combined aggregate (one driver row), raise
+    ExpectationError in mode "fail" before anything is written, and
+    split the batch. Returns (admitted, rejects, audit): `rejects` is
+    the violating rows tagged with `_violations` (comma-joined,
+    name-sorted names of every failed expectation) in mode
+    "quarantine", else None; `audit` is {"mode", "rows_in",
+    "rows_appended", "violations": {name: n}} plus "rows_quarantined"
+    or "rows_dropped"."""
+    if mode not in _MODES:
+        raise ValueError(f"mode must be one of {_MODES}, got {mode!r}")
+    df = pin_once(df, pin_batch)
+    flags = _violation_flags(expectations)
+    bad = flags[0][1]
+    for _, fl in flags[1:]:
+        bad = bad | fl
+    counts_row = df.agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum(bad.cast("long")).alias("_bad"),
+        *[F.sum(fl.cast("long")).alias(name) for name, fl in flags],
+    ).first()
+    rows_in = int(counts_row["_n"] or 0)
+    n_bad = int(counts_row["_bad"] or 0)
+    violations = {name: int(counts_row[name] or 0) for name, _ in flags}
+    if mode == "fail" and n_bad:
+        raise ExpectationError({k: v for k, v in violations.items() if v})
+    audit = {
+        "mode": mode,
+        "rows_in": rows_in,
+        "rows_appended": rows_in - n_bad,
+        "violations": violations,
+    }
+    rejects = None
+    if mode == "quarantine":
+        audit["rows_quarantined"] = n_bad
+        # concat_ws skips the NULLs of passed expectations
+        rejects = df.filter(bad).withColumn(
+            "_violations",
+            F.concat_ws(",", *[F.when(fl, F.lit(name)) for name, fl in flags]),
+        )
+    elif mode == "drop":
+        audit["rows_dropped"] = n_bad
+    return (df.filter(~bad) if n_bad else df), rejects, audit
+
+
 def replace_quarantine(qpath: str, rows: DataFrame) -> None:
     """Make `rows` the quarantine's complete content: a staged rewrite
     under the quarantine's own writer lock that carries its prior
     generations, so the pre-rewrite quarantine stays pinnable."""
-    with commitio.IO.writer_lock(qpath):
+    with locked_append(qpath) as m:
         staged_rewrite(
             qpath,
             lambda staging: rows.write.mode("overwrite").parquet(staging),
             "mri_quarantine_",
         )
-        if load_manifest(qpath) is None:
-            publish_generation(qpath)
+        if m is None:
+            publish_append(qpath)
 
 
 def append_with_expectations(
@@ -260,7 +279,10 @@ def append_with_expectations(
     point replays cleanly: before the quarantine publish, nothing is
     recorded anywhere (full redo); between the two publishes, the
     redo skips only the quarantine write; after the main publish, the
-    whole call is a no-op."""
+    whole call is a no-op. A replay-safe stream owns its store, so
+    unpublished files in it (or in its quarantine) can only be a
+    crashed batch's half-written output, which this call redoes: they
+    are swept, never adopted (`generations.locked_append`)."""
     if mode not in _MODES:
         raise ValueError(f"mode must be one of {_MODES}, got {mode!r}")
 
@@ -286,146 +308,51 @@ def append_with_expectations(
 
         return {"generation": generation_head(path), "mode": mode,
                 "replayed": True}
-    # Pin ONE evaluation of the batch lineage before the gate: the
-    # violation counts, the admit write, and the quarantine write must
-    # all see the SAME rows, and a non-deterministic upstream (rand,
-    # current_timestamp, source files changing mid-run) evaluated once
-    # per action could disagree — rows lost or double-routed between
-    # store and quarantine. localCheckpoint materializes the batch
-    # once (executor memory/disk, lineage truncated; the context
-    # cleaner reclaims it on GC); batches are microbatch-sized by
-    # contract, so the pin is bounded — and CONDITIONAL since round
-    # 12: a plan Catalyst proves deterministic (and free of
-    # per-execution time expressions) skips the materialization
-    # entirely (pin_once / pin_batch="auto").
-    df = pin_once(df, pin_batch)
-    flags, bad, rows_in, n_bad, violations = gate_eval(df, expectations)
+    admitted, rejects, audit = gate(df, expectations, mode, pin_batch)
 
-    if mode == "fail" and n_bad:
-        raise ExpectationError({k: v for k, v in violations.items() if v})
-
-    # schema gate (round 12): same contract as append_rows — strict
-    # rejects drift before anything is written; evolve records the
-    # additive/widened schema with the publish
-    from .generations import (
-        check_layout,
-        check_schema_evolution,
-        declared_schema,
-        retired_names,
-    )
-
-    m_pre = load_manifest(path)
-    schema_sj = check_schema_evolution(
-        declared_schema(m_pre),
-        df.schema.jsonValue(),
-        schema_mode,
-        retired_names(m_pre),
-    )
-    check_layout(m_pre, path, partition_by)
-
+    # schema gate: same contract as append_rows — strict rejects drift
+    # before anything is written; evolve records the additive/widened
+    # schema with the publish. Checked again under the lock, where a
+    # writer that landed since may have changed the layout or schema.
+    check_append(load_manifest(path), path, df, schema_mode, partition_by)
+    settle = "keep" if idempotency is None else "sweep"
     os.makedirs(path, exist_ok=True)
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
-        m = load_manifest(path)
+    with locked_append(path, settle, adopt=idempotency is None) as m:
         if _already_applied(m):
             return {"generation": int(m["head"]), "mode": mode,
                     "replayed": True}
-        if m is None:
-            m = {"head": 0, "gens": {}}
-            if _data_files(path):
-                if idempotency is not None:
-                    # a replay-safe stream owns this store exclusively:
-                    # unpublished files can only be a crashed batch's
-                    # half-written output (its offset never committed,
-                    # so THIS call is its redo) — pinning them would
-                    # duplicate the batch. Delete instead.
-                    for rel in _data_files(path):
-                        try:
-                            os.remove(os.path.join(path, rel))
-                        except OSError:
-                            pass
-                else:
-                    # pre-existing unpublished state: pin it first so
-                    # this append's generation diff is exactly this
-                    # batch (the adoption path for stores that held
-                    # data before gating began)
-                    _publish(path, 1, m)
-                    m = load_manifest(path)
-        elif set(_data_files(path)) != reachable_files(m):
-            if idempotency is not None:
-                # same reasoning: live-minus-reachable in a replay-safe
-                # stream's store is the crashed predecessor of THIS
-                # redo, not data to adopt. Reachable = head files PLUS
-                # any retained generation pinned at root "." (its
-                # files ARE the snapshot — deleting them would break
-                # its pinned readers; see generations.reachable_files)
-                keep = reachable_files(m)
-                for rel in _data_files(path):
-                    if rel not in keep:
-                        try:
-                            os.remove(os.path.join(path, rel))
-                        except OSError:
-                            pass
-            else:
-                _publish(path, int(m["head"]) + 1, m)
-                m = load_manifest(path)
-
-        # authoritative guard re-check UNDER the lock (r12 advice,
-        # low): the pre-lock validation raced other writers — a
-        # conflicting layout change or schema evolution that landed
-        # since must refuse here, not publish a mixed store
-        schema_sj = check_schema_evolution(
-            declared_schema(m),
-            df.schema.jsonValue(),
-            schema_mode,
-            retired_names(m),
-        )
-        check_layout(m, path, partition_by)
-
-        audit = {
-            "mode": mode,
-            "rows_in": rows_in,
-            "rows_appended": rows_in - n_bad,
-            "violations": violations,
-        }
-        if mode == "quarantine":
-            audit["rows_quarantined"] = n_bad
-        elif mode == "drop":
-            audit["rows_dropped"] = n_bad
-
-        # the generation the main publish below will produce — we hold
-        # the writer lock, so nothing can move the head under us
-        next_gen = int(m["head"]) + 1
-        if mode == "quarantine" and n_bad:
+        m = m or {"head": 0, "gens": {}}
+        schema_sj = check_append(m, path, df, schema_mode, partition_by)
+        if audit.get("rows_quarantined"):
             # quarantine FIRST, with its own applied-batch record: a
             # crash between the two publishes replays the batch, the
             # redo sees the quarantine already recorded and skips only
             # this write (main-after-quarantine would instead lose the
-            # batch's rejects forever on the same crash)
+            # batch's rejects forever on the same crash). We hold the
+            # writer lock, so the main publish below is head + 1.
             qpath = quarantine_path(path)
-            qm = load_manifest(qpath) if os.path.isdir(qpath) else None
-            if not _already_applied(qm):
-                qdf = (
-                    df.filter(bad)
-                    .withColumn("_violations", violation_tags(flags))
-                    .withColumn("_src_generation", F.lit(next_gen))
-                )
-                qdf.write.mode("append").parquet(qpath)
-                strip_markers(qpath)
-                publish_generation(qpath, manifest_extra=_applied_extra(qm))
+            with locked_append(qpath, settle, adopt=idempotency is None) as qm:
+                if not _already_applied(qm):
+                    publish_append(
+                        qpath,
+                        rejects.withColumn(
+                            "_src_generation", F.lit(int(m["head"]) + 1)
+                        ).write.mode("append").parquet,
+                        manifest_extra=_applied_extra(qm),
+                    )
 
-        admitted = df.filter(~bad) if n_bad else df
-        if rows_in - n_bad > 0 or not m["gens"]:
+        def write(p: str) -> None:
             w = admitted.write.mode("append")
             if partition_by:
                 w = w.partitionBy(*partition_by)
-            w.parquet(path)
-            strip_markers(path)
+            w.parquet(p)
+
         # the audit AND the applied-batch bookmark ride the SAME
         # manifest save that records the generation — a crash can
         # never separate the three
-        head = publish_generation(
+        head = publish_append(
             path,
+            write if audit["rows_appended"] > 0 or not m["gens"] else None,
             bloom_cols=bloom_cols,
             spark=spark,
             entry_extra={"expectations": audit},
@@ -493,28 +420,23 @@ def readmit(
     if not isinstance(fixed, DataFrame):
         raise TypeError("fix must return a DataFrame")
 
-    # same single-evaluation pin as append_with_expectations (and the
-    # same conditional skip): the re-gate's counts, the readmit
-    # append, and the quarantine rewrite must split ONE evaluation of
-    # the repaired batch — a user `fix` built from deterministic
-    # column expressions skips the materialization
-    fixed = pin_once(fixed)
-    flags, bad, rows_in, n_bad, violations = gate_eval(fixed, expectations)
+    # the re-gate's counts, the readmit append, and the quarantine
+    # rewrite split ONE evaluation of the repaired batch (`gate` pins
+    # it unless the `fix` plan is deterministic)
+    admitted, still_bad, audit = gate(fixed, expectations)
 
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
+    with locked_append(path):
         head = None
-        if rows_in - n_bad > 0:
-            fixed.filter(~bad).write.mode("append").parquet(path)
-            strip_markers(path)
-            head = publish_generation(
+        if audit["rows_appended"] > 0:
+            head = publish_append(
                 path,
+                admitted.write.mode("append").parquet,
                 entry_extra={
                     "expectations": {
                         "mode": "readmit",
-                        "rows_in": rows_in,
-                        "rows_appended": rows_in - n_bad,
-                        "violations": violations,
+                        "rows_in": audit["rows_in"],
+                        "rows_appended": audit["rows_appended"],
+                        "violations": audit["violations"],
                         "readmitted": True,
                     }
                 },
@@ -522,14 +444,12 @@ def readmit(
         # the quarantine becomes exactly the still-failing rows
         replace_quarantine(
             qpath,
-            fixed.filter(bad)
-            .withColumn("_violations", violation_tags(flags))
-            .withColumn(
+            still_bad.withColumn(
                 "_src_generation", F.lit(head if head is not None else 0)
             ),
         )
     return {
-        "readmitted": rows_in - n_bad,
-        "still_quarantined": n_bad,
-        "violations": violations,
+        "readmitted": audit["rows_appended"],
+        "still_quarantined": audit["rows_quarantined"],
+        "violations": audit["violations"],
     }

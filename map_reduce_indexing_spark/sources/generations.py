@@ -16,9 +16,9 @@ export_shards manifest pattern applied inward:
   records, per generation, a root (`_gen/g{N}`) and the file list
   under it.
 - A generation is IMMUTABLE FROM BIRTH: `publish_generation` (called
-  by writers under the artifact flock, after each append /
-  microbatch; `ensure_base_generation` pins the pre-first-mutation
-  state) hardlinks the live listing into `_gen/g{N}` and roots the
+  after each append / microbatch through `locked_append` +
+  `publish_append`, which also pin the pre-first-mutation state)
+  hardlinks the live listing into `_gen/g{N}` and roots the
   manifest entry there — metadata-only on one filesystem, and the
   pinned file PATHS are never the live paths a compaction swap will
   replace. (The first design rooted unrelocated generations at the
@@ -1476,7 +1476,7 @@ def check_layout(
     m: dict | None, path: str, partition_by: list[str] | None
 ) -> None:
     """Refuse an append whose partition layout differs from the
-    store's (round 12): Spark cannot plan ONE parquet relation over
+    store's: Spark cannot plan ONE parquet relation over
     conflicting directory structures, so a mismatched append does not
     just read oddly — it makes every subsequent head read fail with
     'Conflicting directory structures detected'. The guard turns the
@@ -1492,6 +1492,63 @@ def check_layout(
             f"{path!r}'s existing layout {have or 'unpartitioned'}; "
             "mixed layouts make the store unreadable — re-layout with "
             "optimize_store(partition_by=[...]) first"
+        )
+
+
+def check_append(
+    m: dict | None,
+    path: str,
+    df: DataFrame,
+    schema_mode: str,
+    partition_by: list[str] | None,
+) -> dict | None:
+    """The schema and layout guard of an append of `df` over manifest
+    `m`: schema_mode "strict" rejects schema drift; "evolve" accepts
+    added columns and lossless widenings and returns the schema to
+    record with the publish (readers reconcile mixed listings — see
+    _read_groups). A mismatched partition_by would make every later
+    read fail on conflicting directory structures."""
+    sj = check_schema_evolution(
+        declared_schema(m), df.schema.jsonValue(), schema_mode, retired_names(m)
+    )
+    check_layout(m, path, partition_by)
+    return sj
+
+
+def check_batch_layout(
+    path: str, flat: tuple[str, ...], checkpointed: bool, batch_id=None
+) -> None:
+    """The layout guard of the checkpointed streaming sinks and the raw
+    appends beside them. A checkpointed ingest writes
+    `batch=<id>/<flat>=*`, a raw append and a compaction write flat
+    `<flat>=*` partitions (`flat` names the partition prefixes), and
+    the two mixed on one path make every later read — compaction's
+    included — fail with 'Conflicting directory structures'. Sinks run
+    it once before the stream starts and again per batch under the
+    writer lock (`batch_id` set): the lock admits a compaction between
+    microbatches, which folds the batched layout flat."""
+    entries = os.listdir(path) if os.path.isdir(path) else []
+    names = "/".join(f"{p}*" for p in flat)
+    if checkpointed and any(e.startswith(flat) for e in entries):
+        if batch_id is not None:
+            raise ValueError(
+                f"{path!r} was compacted to the flat {names} layout while "
+                "this checkpointed ingest was running; writing "
+                f"batch={batch_id} beside it would corrupt partition "
+                "discovery. Restart the ingest with a fresh checkpoint "
+                "against the compacted store."
+            )
+        raise ValueError(
+            f"{path!r} holds a flat {names} store (raw-append or "
+            "compacted layout); resuming it checkpointed would write the "
+            "incompatible batch=<id> layout beside it. Use a fresh path."
+        )
+    if not checkpointed and any(e.startswith("batch=") for e in entries):
+        raise ValueError(
+            f"{path!r} holds a checkpointed batch=<id> store; a raw "
+            "append would corrupt its partition discovery. Compact it "
+            "first (compaction folds the batched layout flat), or keep "
+            "appending through the checkpointed streaming ingest."
         )
 
 
@@ -1793,40 +1850,77 @@ def _publish(
 
 
 @contextlib.contextmanager
-def _locked_head(path: str, verb: str):
-    """The head a locked row-level verb edits: take the writer lock,
-    heal crash residue, adopt a manifest-less store as its base
-    generation, and pin unpublished appends as a generation of their
-    own, so the verb's span is exactly one generation and the change
-    feed's "before" image is well-defined. Yields (manifest, head, live
-    data files) with the lock held."""
+def locked_append(path: str, settle: str | None = "keep", adopt: bool = True):
+    """The one way into a store for every verb that adds to it in
+    place. Takes the writer lock, heals crash residue
+    (`commitio.IO.recover`), adopts a manifest-less store that holds
+    data as its base generation, then settles the live data files no
+    retained generation lists (`reachable_files`) by the caller's rule:
+
+    - "keep" publishes them as a generation of their own, so the verb's
+      span is exactly its own writes;
+    - "sweep" deletes them: in a store whose writer records its
+      progress in the manifest (pipeline, change feed, idempotent
+      gate) they are a crashed run's output, which this run redoes;
+    - None leaves them to the caller (a precise-listing publish never
+      lists them).
+
+    `adopt=False` leaves a manifest-less store's data files unpublished,
+    so "sweep" deletes them too. Yields the settled manifest (None when
+    the store still has none) with the lock held; appends then go
+    through `publish_append`."""
     with commitio.IO.writer_lock(path):
         commitio.IO.recover(path)
         m = load_manifest(path)
-        if m is None:
-            ensure_base_generation(path)
-            m = load_manifest(path)
-            if m is None:
-                raise ValueError(f"{path!r} has no data to {verb}")
-        head = int(m["head"])
         live = _data_files(path)
-        if set(live) != set(m["gens"][str(head)]["files"]):
-            head = _publish(path, head + 1, m)
+        if m is None and live and adopt:
+            _publish(path, 1, {"head": 0, "gens": {}})
             m = load_manifest(path)
-        yield m, head, live
+        unpublished = set(live) - reachable_files(m)
+        if unpublished and settle == "keep" and m is not None:
+            _publish(path, int(m["head"]) + 1, m)
+            m = load_manifest(path)
+        elif unpublished and settle == "sweep":
+            for rel in unpublished:
+                with contextlib.suppress(OSError):
+                    os.remove(os.path.join(path, rel))
+        yield m
 
 
 def ensure_base_generation(path: str) -> int:
     """Publish the CURRENT live state as generation 1 iff no manifest
-    exists — called by writers before their first mutation so the
-    pre-mutation state is pinnable. Callers hold the artifact's
-    writer flock."""
+    exists, so the pre-mutation state is pinnable. Callers hold the
+    artifact's writer flock; the package's own appends get this from
+    `locked_append`."""
     if not os.path.isdir(path):
         return 0  # store not created yet: nothing to pin before the write
     m = load_manifest(path)
     if m is not None:
         return int(m["head"])
     return _publish(path, 1, {"head": 0, "gens": {}})
+
+
+def publish_append(path: str, write=None, **publish) -> int:
+    """The append step under `locked_append`: `write(path)` adds data
+    files to the live store (None publishes without writing), Spark's
+    markers are stripped, and `publish_generation(path, **publish)`
+    records the new head, which is returned."""
+    if write is not None:
+        write(path)
+        strip_markers(path)
+    return publish_generation(path, **publish)
+
+
+@contextlib.contextmanager
+def _locked_head(path: str, verb: str):
+    """The head a locked row-level verb edits: `locked_append` with
+    unpublished appends kept, so the verb's span is exactly one
+    generation and the change feed's "before" image is well-defined.
+    Yields (manifest, head, live data files) with the lock held."""
+    with locked_append(path) as m:
+        if m is None:
+            raise ValueError(f"{path!r} has no data to {verb}")
+        yield m, int(m["head"]), _data_files(path)
 
 
 def publish_generation(
@@ -1934,9 +2028,9 @@ def append_rows(
     (plan_generation_scan), so unreferenced files there are inert and
     are collected when the generation's root is pruned.
 
-    `expectations` gates the batch with the
-    `append_with_expectations` semantics BEFORE the optimistic append
-    — the concurrent form of publish-time admission: fail raises with
+    `expectations` gates the batch through `expectations.gate` BEFORE
+    the optimistic append — the concurrent form of publish-time
+    admission: fail raises with
     nothing written, drop discards violations, quarantine routes them
     (tagged) to the store's `.quarantine` sibling via a nested
     optimistic append, so N independent GATED writers still compose
@@ -1946,7 +2040,7 @@ def append_rows(
     and vacuumable); replay-safe streams should keep using
     `append_with_expectations(idempotency=...)`.
 
-    `schema_mode` (round 12): "strict" (default) refuses a batch whose
+    `schema_mode`: "strict" (default) refuses a batch whose
     schema drifts from the store's declared schema; "evolve" accepts
     added columns and lossless widenings, recording the new schema
     with the publish (see check_schema_evolution / _read_groups).
@@ -1959,79 +2053,24 @@ def append_rows(
     entry_extra = None
     rejects = None
     if expectations:
-        from .expectations import (
-            ExpectationError,
-            gate_eval,
-            pin_once,
-            violation_tags,
-        )
+        from .expectations import gate
 
-        if expect_mode not in ("fail", "drop", "quarantine"):
-            raise ValueError(
-                f"expect_mode must be fail|drop|quarantine, got {expect_mode!r}"
-            )
-        # single-evaluation pin (see expectations.pin_once): counts,
-        # admit write, and quarantine write split one evaluation;
-        # deterministic plans skip the materialization (pin_batch)
-        df = pin_once(df, pin_batch)
-        flags, bad, rows_in, n_bad, violations = gate_eval(df, expectations)
-        if expect_mode == "fail" and n_bad:
-            raise ExpectationError(
-                {k: v for k, v in violations.items() if v}
-            )
-        audit = {
-            "mode": expect_mode,
-            "rows_in": rows_in,
-            "rows_appended": rows_in - n_bad,
-            "violations": violations,
-        }
-        if expect_mode == "quarantine":
-            audit["rows_quarantined"] = n_bad
-            if n_bad:
-                rejects = df.filter(bad).withColumn(
-                    "_violations", violation_tags(flags)
-                )
-        elif expect_mode == "drop":
-            audit["rows_dropped"] = n_bad
+        df, rejects, audit = gate(df, expectations, expect_mode, pin_batch)
         entry_extra = {"expectations": audit}
-        if n_bad:
-            df = df.filter(~bad)
+        if not audit.get("rows_quarantined"):
+            rejects = None
 
-    # SCHEMA check (round 12): validate the batch against the store's
-    # declared schema before anything is written. strict (default)
-    # rejects any drift; evolve accepts added columns and lossless
-    # widenings, recording the new schema with the publish (readers
-    # reconcile mixed listings — see _read_groups). Under a lost
-    # CAS race the publish re-reads the manifest, but the schema
-    # declaration rides this writer's batch either way; CONCURRENT
+    def guard(m: dict | None) -> dict | None:
+        return check_append(m, path, df, schema_mode, partition_by)
+
+    # checked before anything is written, and again against the
+    # manifest each publish attempt reads: a writer that landed since
+    # may have changed the layout or evolved the schema. Concurrent
     # conflicting evolutions are a user error (last publish wins the
     # declared schema; files stay stamped with what they were written
     # under, so no read breaks).
-    m_pre = load_manifest(path)
-    schema_sj = check_schema_evolution(
-        declared_schema(m_pre),
-        df.schema.jsonValue(),
-        schema_mode,
-        retired_names(m_pre),
-    )
-    # layout guard (round 12): a mismatched partition_by would make
-    # every later read fail on conflicting directory structures
-    check_layout(m_pre, path, partition_by)
-
+    guard(load_manifest(path))
     os.makedirs(path, exist_ok=True)
-    # ADOPTION (r11 advice, high): a store holding pre-existing data
-    # files but NO manifest must pin that state as the base generation
-    # BEFORE this verb's precise-listing publish — otherwise the first
-    # publish lists only the new batch, the pre-existing rows vanish
-    # from every generation read, and vacuum_store later deletes them
-    # as "unreachable residue". Mirrors append_with_expectations'
-    # adoption branch; the exclusive lock also drains concurrent
-    # optimistic appenders, and ensure_base_generation re-checks the
-    # manifest under it (losers of this race become a no-op).
-    if load_manifest(path) is None and _data_files(path):
-        with commitio.IO.writer_lock(path):
-            commitio.IO.recover(path)
-            ensure_base_generation(path)
     staging = tempfile.mkdtemp(
         prefix="mri_append_", dir=os.path.dirname(path) or "."
     )
@@ -2075,23 +2114,11 @@ def append_rows(
                 )
             return head
 
+        # precise listings (`add_files`) never fold in another writer's
+        # placements, so the head is taken without settling
         if not getattr(commitio.IO, "supports_cas", False):
-            with commitio.IO.writer_lock(path):
-                commitio.IO.recover(path)
-                # authoritative guard re-check UNDER the lock (r12
-                # advice, low): the pre-staging validation read m_pre
-                # before exclusion — a writer that landed since could
-                # have changed the layout or evolved the schema, and
-                # two guards validated against the same stale manifest
-                # would otherwise both pass
-                m_now = load_manifest(path)
-                check_layout(m_now, path, partition_by)
-                schema_sj = check_schema_evolution(
-                    declared_schema(m_now),
-                    df.schema.jsonValue(),
-                    schema_mode,
-                    retired_names(m_now),
-                )
+            with locked_append(path, settle=None) as m_now:
+                schema_sj = guard(m_now)
                 _place()
                 head = publish_generation(
                     path,
@@ -2102,35 +2129,27 @@ def append_rows(
                     schema=schema_sj,
                 )
             return _route_rejects(head)
-        if commitio.IO.needs_recovery(path):
-            # a rewriter crashed mid-swap: heal under the exclusive
-            # lease (which also drains other appenders) before joining
-            with commitio.IO.writer_lock(path):
-                commitio.IO.recover(path)
+        if commitio.IO.needs_recovery(path) or (
+            load_manifest(path) is None and _data_files(path)
+        ):
+            # a rewriter crashed mid-swap, or the store holds data but
+            # no manifest (its first precise publish would list only
+            # this batch, and vacuum_store would later delete the rest):
+            # heal and adopt under the exclusive lease, which also
+            # drains the other appenders, before joining them
+            with locked_append(path, settle=None):
+                pass
         with commitio.IO.append_lease(path):
             _place()
             last: Exception = CommitConflict("unreached")
             head = None
             for _ in range(max_retries):
-                # guard re-check per attempt (r12 advice, low): a
-                # concurrent append that WON the CAS race may have
-                # changed the layout or evolved the schema since the
-                # pre-staging validation; re-validating against the
-                # fresh manifest makes the guard hold under
-                # concurrency (a conflicting loser raises loudly —
-                # its placed files are invisible residue for vacuum —
-                # instead of publishing a mixed-layout store). The
-                # residual check-to-save window is closed by the CAS
-                # itself: if another writer lands between this check
-                # and our save, our save conflicts and re-enters here.
-                m_now = load_manifest(path)
-                check_layout(m_now, path, partition_by)
-                schema_sj = check_schema_evolution(
-                    declared_schema(m_now),
-                    df.schema.jsonValue(),
-                    schema_mode,
-                    retired_names(m_now),
-                )
+                # the guard against the manifest this attempt publishes
+                # over: a loser whose layout or schema now conflicts
+                # raises (its placed files are invisible residue for
+                # vacuum); a writer landing after this check makes our
+                # save conflict and re-enter here
+                schema_sj = guard(load_manifest(path))
                 try:
                     head = publish_generation(
                         path,
@@ -2294,7 +2313,8 @@ def staged_rewrite(
 ) -> None:
     """The one staged rewrite behind every verb that replaces a store
     directory (callers hold `path`'s writer lock): `write(staging)`
-    fills a fresh sibling staging dir, Spark markers are stripped, the
+    fills a fresh sibling staging dir (after `commitio.IO.recover` heals
+    a crashed swap), Spark markers are stripped, the
     `keep` files (live data the rewrite leaves untouched) hardlink in,
     `carry_generations` stages the manifest (`carry` passes through to
     it), and `commitio.IO.publish_swap` publishes data, snapshots and
@@ -2304,6 +2324,10 @@ def staged_rewrite(
     leaves the store and its parent directory as they were — unless the
     backend already owns it: a CAS swap that wrote its journal
     (`needs_recovery`) replays from staging on the next `recover`."""
+    # a live path still renamed aside by a crashed swap comes back
+    # first: the swap would delete that `.old` copy, and the carry
+    # below would find no manifest to carry
+    commitio.IO.recover(path)
     staging = tempfile.mkdtemp(prefix=prefix, dir=os.path.dirname(path) or ".")
     try:
         commitio.chmod_staging(staging)
@@ -3541,7 +3565,7 @@ def set_compaction_policy(
     file counts growing without bound) and `optimize_store` (which
     only ever fired when someone remembered to call it).
 
-    `max_deleted_ratio` / `max_dv_rows` (round 13) bound DELETION-
+    `max_deleted_ratio` / `max_dv_rows` bound DELETION-
     VECTOR growth — the trigger a merge-on-read workload needs: DV
     deletes add no data files, so a store whose file count stays
     within bounds would otherwise NEVER fire the fold while its vector
@@ -3561,10 +3585,7 @@ def set_compaction_policy(
         raise ValueError("max_deleted_ratio must be in (0, 1)")
     if max_dv_rows is not None and max_dv_rows < 1:
         raise ValueError("max_dv_rows must be >= 1")
-    with commitio.IO.writer_lock(path):
-        commitio.IO.recover(path)
-        ensure_base_generation(path)
-        m = load_manifest(path)
+    with locked_append(path, settle=None) as m:
         if m is None:
             raise ValueError(
                 f"{path!r} has no published data; set the policy after "

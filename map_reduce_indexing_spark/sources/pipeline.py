@@ -72,16 +72,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import local_rows_df
-from . import commitio
 from .generations import (
     diff_plan,
     generation_diff,
     generation_head,
     load_manifest,
-    publish_generation,
+    locked_append,
+    publish_append,
     read_generation,
     staged_rewrite,
-    strip_markers,
 )
 
 
@@ -136,8 +135,8 @@ def run_incremental_pipeline(
 
     `expectations` gates the TRANSFORMED output (the medallion
     promotion gate: bronze rows may be arbitrarily dirty, the silver
-    store admits only rows proving the declared predicates) with the
-    append_with_expectations semantics: `expect_mode` "quarantine"
+    store admits only rows proving the declared predicates) through
+    `expectations.gate`: `expect_mode` "quarantine"
     routes rejects to the destination's `.quarantine` sibling tagged
     with their failed expectations, "drop" discards them, "fail"
     raises BEFORE anything is written — and since the bookmark only
@@ -156,38 +155,18 @@ def run_incremental_pipeline(
         raise ValueError(
             f"on_first_run must be append|error, got {on_first_run!r}"
         )
-    from .generations import _data_files, reachable_files
-
     os.makedirs(dst_path, exist_ok=True)
-    with commitio.IO.writer_lock(dst_path):
-        commitio.IO.recover(dst_path)
-        # Orphan sweep: a prior run that crashed BETWEEN its output
-        # append and its publish leaves data files on the live listing
-        # that no generation records — and its bookmark unadvanced, so
-        # the retry re-transforms the same span and the next publish
-        # would fold BOTH copies in (permanent duplicates). Every store
-        # verb publishes atomically, so live-minus-head files in a
-        # pipeline destination are exactly that crash residue: delete
-        # them (no published reader can reference an unpublished file).
-        # A destination with data but NO manifest is pre-pipeline
-        # content, not residue — the first publish pins it as the base
-        # generation, same as append_with_expectations' adoption path.
-        m_live = load_manifest(dst_path)
-        head_entry = (
-            m_live["gens"].get(str(m_live["head"])) if m_live else None
-        )
-        if head_entry is not None:
-            # reachable = head + any retained generation pinned at
-            # root "." (its files ARE the snapshot — see
-            # generations.reachable_files); deleting live-minus-HEAD
-            # alone would break that generation's pinned readers
-            keep = reachable_files(m_live)
-            for rel in _data_files(dst_path):
-                if rel not in keep:
-                    try:
-                        os.remove(os.path.join(dst_path, rel))
-                    except OSError:
-                        pass
+    # Orphan sweep: a prior run that crashed BETWEEN its output append
+    # and its publish leaves data files on the live listing that no
+    # generation records — and its bookmark unadvanced, so the retry
+    # re-transforms the same span and the next publish would fold BOTH
+    # copies in (permanent duplicates). Every store verb publishes
+    # atomically, so unpublished files in a pipeline destination are
+    # exactly that crash residue and are swept. A destination with
+    # data but NO manifest is pre-pipeline content, not residue: it is
+    # adopted as the base generation.
+    with locked_append(dst_path, settle="sweep") as m0:
+        head_entry = m0["gens"].get(str(m0["head"])) if m0 else None
         src_head = generation_head(src_path)
         since = pipeline_bookmark(dst_path, src_path)
         if (
@@ -245,7 +224,6 @@ def run_incremental_pipeline(
         # making the next run duplicate the whole source
         from .generations import check_schema_evolution, declared_schema
 
-        m0 = load_manifest(dst_path)
         marks = dict((m0 or {}).get("pipelines") or {})
         for alias in _src_keys(src_path)[1:]:
             marks.pop(alias, None)  # fold legacy abspath keys into realpath
@@ -274,7 +252,7 @@ def run_incremental_pipeline(
             )
         )
         if mode != "rebuild":
-            # layout guard (round 12): an append under a different
+            # layout guard: an append under a different
             # partition scheme would corrupt every later read; a
             # rebuild rewrites wholesale, so it may change the layout
             from .generations import check_layout
@@ -283,86 +261,40 @@ def run_incremental_pipeline(
 
         rejects = None
         if expectations:
-            from .expectations import (
-                ExpectationError,
-                gate_eval,
-                pin_once,
-                violation_tags,
-            )
+            from .expectations import gate
 
-            # single-evaluation pin (see expectations.pin_once): the
-            # gate counts, the admit write, and the quarantine write
-            # must split ONE evaluation of the transformed delta —
-            # skipped when the transform's plan is provably
-            # deterministic (the common projection/filter ETL stage)
-            out = pin_once(out)
-            flags, bad, rows_in, n_bad, violations = gate_eval(
-                out, expectations
-            )
-            if expect_mode == "fail" and n_bad:
-                # nothing written, bookmark not advanced: the retry
-                # re-reads this exact span
-                raise ExpectationError(
-                    {k: v for k, v in violations.items() if v}
-                )
-            audit = {
-                "mode": expect_mode,
-                "rows_in": rows_in,
-                "rows_appended": rows_in - n_bad,
-                "violations": violations,
-            }
-            if expect_mode == "quarantine":
-                audit["rows_quarantined"] = n_bad
-                # a rebuild's reject set is COMPLETE (every destination
-                # row was recomputed), so it must replace the
-                # quarantine even when empty — stale rejects would
-                # otherwise outlive the rows they came from
-                if n_bad or mode == "rebuild":
-                    rejects = out.filter(bad).withColumn(
-                        "_violations", violation_tags(flags)
-                    )
-            elif expect_mode == "drop":
-                audit["rows_dropped"] = n_bad
+            # raises in "fail" mode before anything is written, with
+            # the bookmark not advanced: the retry re-reads this span
+            out, rejects, audit = gate(out, expectations, expect_mode)
             entry["expectations"] = audit
-            if n_bad:
-                out = out.filter(~bad)
+            # a rebuild's reject set is COMPLETE (every destination
+            # row was recomputed), so it must replace the quarantine
+            # even when empty — stale rejects would otherwise outlive
+            # the rows they came from
+            if not audit.get("rows_quarantined") and mode != "rebuild":
+                rejects = None
 
-        if mode == "rebuild":
-            # staged overwrite, same swap discipline as compaction:
-            # the destination's prior generations stay pinned/readable
-
-            def write(staging: str) -> None:
-                w = out.write.mode("overwrite")
-                if partition_by:
-                    w = w.partitionBy(*partition_by)
-                w.parquet(staging)
-
-            # the staged manifest records the rebuilt listing as the new
-            # head — the bookmark rides that same save, and the swap
-            # publishes data + manifest together
-            staged_rewrite(
-                dst_path,
-                write,
-                "mri_pipeline_",
-                spark=spark,
-                entry_extra=entry,
-                manifest_extra=top,
-                schema=out_schema,
-            )
-            gen = generation_head(dst_path)
-        else:
-            w = out.write.mode("append")
+        def write(target: str) -> None:
+            w = out.write.mode("overwrite" if mode == "rebuild" else "append")
             if partition_by:
                 w = w.partitionBy(*partition_by)
-            w.parquet(dst_path)
-            strip_markers(dst_path)
-            gen = publish_generation(
-                dst_path,
-                spark=spark,
-                entry_extra=entry,
-                manifest_extra=top,
-                schema=out_schema,
-            )
+            w.parquet(target)
+
+        # the bookmark rides the same manifest save as the generation
+        publish = {
+            "spark": spark,
+            "entry_extra": entry,
+            "manifest_extra": top,
+            "schema": out_schema,
+        }
+        if mode == "rebuild":
+            # staged overwrite, same swap discipline as compaction: the
+            # destination's prior generations stay pinned/readable, and
+            # the swap publishes data + manifest together
+            staged_rewrite(dst_path, write, "mri_pipeline_", **publish)
+            gen = generation_head(dst_path)
+        else:
+            gen = publish_append(dst_path, write, **publish)
         if rejects is not None:
             from .expectations import quarantine_path, replace_quarantine
 
@@ -374,12 +306,11 @@ def run_incremental_pipeline(
                 # appending would duplicate rows earlier runs already
                 # quarantined
                 replace_quarantine(qpath, rejects)
-            elif n_bad:
+            elif audit["rows_quarantined"]:
                 # fresh rejects (a rebuild with nothing to replace and
                 # nothing rejected creates no quarantine)
-                rejects.write.mode("append").parquet(qpath)
-                strip_markers(qpath)
-                publish_generation(qpath)
+                with locked_append(qpath):
+                    publish_append(qpath, rejects.write.mode("append").parquet)
         result = {
             "mode": mode if since > 0 else "append",
             "src_from": since,

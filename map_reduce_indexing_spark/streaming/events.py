@@ -135,6 +135,37 @@ def run_to_completion(stream_df: DataFrame, output_mode: str) -> DataFrame:
     return spark.table(name)
 
 
+def drain_files(
+    spark: SparkSession,
+    src_dir: str,
+    sink,
+    glob: str | None = None,
+    schema=None,
+    max_files_per_trigger: int | None = None,
+    checkpoint: str | None = None,
+) -> None:
+    """Drive a file-source stream through a foreachBatch `sink` to
+    completion: read the parquet files under `src_dir` (matching
+    `glob`, at most `max_files_per_trigger` per microbatch, as
+    `schema` when given), checkpoint to `checkpoint` when given, and
+    return once the availableNow trigger has drained every file."""
+    reader = spark.readStream
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    if schema is not None:
+        reader = reader.schema(schema)
+    writer = reader.parquet(src_dir).writeStream.foreachBatch(sink)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+
+
 @register(
     "stream_tumbling_counts",
     oracle=f"""
@@ -519,21 +550,11 @@ def q_stream_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     docs.repartition(4).write.mode("overwrite").parquet(staging)
 
-    stream = (
-        spark.readStream.schema(DOCUMENT)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         postings = with_letter(build_postings(batch_df))
         postings.write.mode("append").partitionBy("letter").parquet(index_path)
 
-    q = stream.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain_files(spark, staging, sink, schema=DOCUMENT, max_files_per_trigger=1)
 
     # Each microbatch appended its own partial counts; the index read
     # re-aggregates them (the streaming analogue of the reference's
@@ -584,95 +605,48 @@ def incremental_index_append(
     `max_files_per_trigger` bounds each microbatch (production knob for
     commit granularity; tests use 1 to force multi-batch runs)."""
     from ..schemas import DOCUMENT
+    from ..sources.generations import (
+        check_batch_layout,
+        locked_append,
+        publish_append,
+    )
 
-    # Layout guard: the two modes produce different directory depths
-    # (checkpointed: batch=<id>/letter=*; raw append: letter=*). Mixing
-    # them on one path yields 'Conflicting directory structures' at read
-    # time — fail fast at write time instead.
-    if os.path.isdir(index_path):
-        has_flat = any(e.startswith("letter=") for e in os.listdir(index_path))
-        if checkpoint is not None and has_flat:
-            raise ValueError(
-                f"{index_path!r} holds a flat letter=* index (raw-append "
-                "layout); resuming it checkpointed would write the "
-                "incompatible batch=<id>/letter=* layout beside it. Use a "
-                "fresh index path, or compact the old index first."
-            )
-        has_batched = any(e.startswith("batch=") for e in os.listdir(index_path))
-        if checkpoint is None and has_batched:
-            raise ValueError(
-                f"{index_path!r} holds a checkpointed batch=<id> index; "
-                "raw-append writes would corrupt its partition discovery. "
-                "Use a fresh index path."
-            )
-
-    reader = spark.readStream.schema(DOCUMENT).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.parquet(sf_dir)
+    # the two modes write different directory depths (checkpointed:
+    # batch=<id>/letter=*; raw append: letter=*): fail fast at write
+    # time instead of at every later read
+    check_batch_layout(index_path, ("letter=",), checkpoint is not None)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         postings = with_letter(build_postings(batch_df))
-        # Same writer lock as IndexSession.append/compact_index: a
-        # microbatch append racing a compaction's directory swap would
-        # otherwise be silently dropped by it (raw mode) — one flock
-        # per microbatch is noise next to the batch's Spark job. Heal a
-        # crashed compaction before writing, for the same reason as
-        # IndexSession.append: appending into a missing live path would
-        # orphan the .old copy forever.
-        with commitio.IO.writer_lock(index_path):
-            commitio.IO.recover(index_path)
-            if checkpoint is not None:
-                # Per-batch layout re-check under the lock (the pre-start
-                # guard above runs once, outside the flock): a compaction
-                # between microbatches folds batch=<id>/letter=* into the
-                # flat letter=* form, and writing the next batch=<id>
-                # beside flat partitions would break partition discovery
-                # for every later read.
-                if os.path.isdir(index_path) and any(
-                    e.startswith("letter=") for e in os.listdir(index_path)
-                ):
-                    raise ValueError(
-                        f"{index_path!r} was compacted to the flat "
-                        "letter=* layout while this checkpointed ingest "
-                        f"was running; writing batch={batch_id} beside "
-                        "it would corrupt partition discovery. Restart "
-                        "the ingest with a fresh checkpoint."
-                    )
-                from ..sources.generations import (
-                    ensure_base_generation,
-                    publish_generation,
+        # Same writer lock and heal as IndexSession.append/compact_index:
+        # a microbatch append racing a compaction's directory swap would
+        # otherwise be silently dropped by it, and appending into a
+        # missing live path would orphan the .old copy forever. One
+        # pinnable generation per microbatch.
+        with locked_append(index_path):
+            if checkpoint is None:
+                publish_append(
+                    index_path,
+                    postings.write.mode("append").partitionBy("letter").parquet,
                 )
+                return
+            check_batch_layout(index_path, ("letter=",), True, batch_id)
+            publish_append(
+                index_path,
+                lambda p: postings.write.mode("overwrite")
+                .partitionBy("letter")
+                .parquet(os.path.join(p, f"batch={batch_id}")),
+            )
 
-                # one pinnable generation per microbatch (snapshot
-                # isolation for readers of a live ingest; the
-                # raw-append branch gets this inside IndexSession-
-                # style appends via the same helpers)
-                ensure_base_generation(index_path)
-                postings.write.mode("overwrite").partitionBy("letter").parquet(
-                    os.path.join(index_path, f"batch={batch_id}")
-                )
-                publish_generation(index_path)
-            else:
-                from ..sources.generations import (
-                    ensure_base_generation,
-                    publish_generation,
-                )
-
-                ensure_base_generation(index_path)
-                postings.write.mode("append").partitionBy("letter").parquet(
-                    index_path
-                )
-                publish_generation(index_path)
-
-    writer = docs.writeStream.foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain_files(
+        spark,
+        sf_dir,
+        sink,
+        glob=glob,
+        schema=DOCUMENT,
+        max_files_per_trigger=max_files_per_trigger,
+        checkpoint=checkpoint,
+    )
 
 
 @register(
@@ -820,36 +794,18 @@ def incremental_vector_append(
         store_layout_col,
     )
     from ..schemas import EMBEDDING
+    from ..sources.generations import (
+        check_batch_layout,
+        locked_append,
+        publish_append,
+    )
 
+    flat = ("bucket=", "cell=")
     # Heal a crash-stranded store BEFORE sniffing its layout: a store
     # caught between a compactor's two renames looks like an empty path,
-    # which would silently bypass both guards and default the layout.
+    # which would silently bypass the guard and default the layout.
     commitio.recover_index(store_path)
-    if os.path.isdir(store_path):
-        has_flat = any(
-            e.startswith(("bucket=", "cell=")) for e in os.listdir(store_path)
-        )
-        if checkpoint is not None and has_flat:
-            raise ValueError(
-                f"{store_path!r} holds a flat bucket=*/cell=* store "
-                "(raw-append or compacted layout); resuming it "
-                "checkpointed would write the incompatible "
-                "batch=<id> layout beside it. Use a fresh store path."
-            )
-        has_batched = any(e.startswith("batch=") for e in os.listdir(store_path))
-        if checkpoint is None and has_batched:
-            raise ValueError(
-                f"{store_path!r} holds a checkpointed batch=<id> store; "
-                "raw-append writes would corrupt its partition discovery. "
-                "Use a fresh store path."
-            )
-
-    reader = spark.readStream.schema(EMBEDDING).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    vecs = reader.parquet(sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    check_batch_layout(store_path, flat, checkpoint is not None)
 
     # Routing key follows the STORE's layout (LSH bucket for a fresh
     # path) — a checkpointed ingest into an IVF-cell store must write
@@ -862,76 +818,54 @@ def incremental_vector_append(
     store_books = load_codebook(store_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if checkpoint is not None:
-            bucketed = _with_bucket(batch_df, layout_col, store_cents)
-            if store_books is not None:
-                # a compressed store's ingest re-encodes each batch
-                # against the persisted codebook, same as append_vectors
-                bucketed = bucketed.withColumn(
-                    "code",
-                    F.expr(spark_pq_code("v", store_books)).cast(
-                        "array<int>"
-                    ),
-                )
-            bucketed = bucketed.repartition(layout_col)
-            with commitio.IO.writer_lock(store_path):
-                commitio.IO.recover(store_path)
-                # Re-check the layout PER BATCH under the lock, not just
-                # once before the stream started: the flock explicitly
-                # admits a compactor BETWEEN microbatches, and
-                # compact_vector_store folds batch=<id> partitions into
-                # the flat bucket=*/cell=* form — a later microbatch
-                # writing batch=<id> beside those flat partitions would
-                # poison partition discovery for every subsequent read
-                # (including the compaction that would have to heal it).
-                if os.path.isdir(store_path) and any(
-                    e.startswith(("bucket=", "cell="))
-                    for e in os.listdir(store_path)
-                ):
-                    raise ValueError(
-                        f"{store_path!r} was compacted to the flat "
-                        "bucket=*/cell=* layout while this checkpointed "
-                        "ingest was running; writing batch="
-                        f"{batch_id} beside it would corrupt partition "
-                        "discovery. Restart the ingest with a fresh "
-                        "checkpoint against the compacted store."
-                    )
-                live_layout = store_layout_col(store_path)
-                if (
-                    live_layout != layout_col
-                    or load_quantizer(store_path) != store_cents
-                    or load_codebook(store_path) != store_books
-                ):
-                    raise ValueError(
-                        f"{store_path!r} changed layout/quantizer "
-                        f"({layout_col!r} -> {live_layout!r}) under this "
-                        "running ingest; batches routed with the stale "
-                        "model would land in wrong partitions."
-                    )
-                from ..sources.generations import (
-                    ensure_base_generation,
-                    publish_generation,
-                )
-
-                ensure_base_generation(store_path)
-                bucketed.write.mode("overwrite").partitionBy(layout_col).parquet(
-                    os.path.join(store_path, f"batch={batch_id}")
-                )
-                publish_generation(store_path)
-        else:
+        vecs = batch_df.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        )
+        if checkpoint is None:
             # The raw-append branch IS the batch append — one code path
             # owns lock + heal + layout guard + bucketed write, so a fix
             # to any of those applies to both the batch API and this sink.
-            append_vectors(spark, batch_df, store_path)
+            append_vectors(spark, vecs, store_path)
+            return
+        bucketed = _with_bucket(vecs, layout_col, store_cents)
+        if store_books is not None:
+            # a compressed store's ingest re-encodes each batch against
+            # the persisted codebook, same as append_vectors
+            bucketed = bucketed.withColumn(
+                "code",
+                F.expr(spark_pq_code("v", store_books)).cast("array<int>"),
+            )
+        bucketed = bucketed.repartition(layout_col)
+        with locked_append(store_path):
+            check_batch_layout(store_path, flat, True, batch_id)
+            live_layout = store_layout_col(store_path)
+            if (
+                live_layout != layout_col
+                or load_quantizer(store_path) != store_cents
+                or load_codebook(store_path) != store_books
+            ):
+                raise ValueError(
+                    f"{store_path!r} changed layout/quantizer "
+                    f"({layout_col!r} -> {live_layout!r}) under this "
+                    "running ingest; batches routed with the stale "
+                    "model would land in wrong partitions."
+                )
+            publish_append(
+                store_path,
+                lambda p: bucketed.write.mode("overwrite")
+                .partitionBy(layout_col)
+                .parquet(os.path.join(p, f"batch={batch_id}")),
+            )
 
-    writer = vecs.writeStream.foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain_files(
+        spark,
+        sf_dir,
+        sink,
+        glob=glob,
+        schema=EMBEDDING,
+        max_files_per_trigger=max_files_per_trigger,
+        checkpoint=checkpoint,
+    )
 
 
 def _vector_ingest_oracle() -> str:
@@ -1360,7 +1294,7 @@ def run_continuous_aggregate(
     costs one microbatch of rows regardless of how large the store has
     grown — the whole point at 100 TB of accumulated events.
 
-    `dims` (round 10) makes the continuous view a JOIN matview: each
+    `dims` makes the continuous view a JOIN matview: each
     microbatch's refresh is ΔF ⋈ dims via the telescoping delta
     (create_matview_join) — the streaming half of the fact-join-dims
     dashboard, with dim appends/updates between batches handled by
@@ -1369,15 +1303,13 @@ def run_continuous_aggregate(
     Returns the per-batch refresh reports (delta_files per refresh —
     the delta-only claim, asserted in tests)."""
     from ..operators.matview import create_matview_join, refresh_matview
-    from ..sources.generations import ensure_base_generation, publish_generation
+    from ..sources.generations import locked_append, publish_append
 
     reports: list[dict] = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        with commitio.IO.writer_lock(store_path):
-            ensure_base_generation(store_path)
-            batch_df.write.mode("append").parquet(store_path)
-            publish_generation(store_path)
+        with locked_append(store_path):
+            publish_append(store_path, batch_df.write.mode("append").parquet)
         if os.path.isfile(os.path.join(view_path, "_matview.json")):
             reports.append(refresh_matview(spark, view_path))
         else:
@@ -1390,20 +1322,9 @@ def run_continuous_aggregate(
                  "refreshed": True}
             )
 
-    reader = spark.readStream.option("pathGlobFilter", glob).option(
-        "maxFilesPerTrigger", str(max_files_per_trigger)
+    drain_files(
+        spark, src_dir, sink, glob, schema, max_files_per_trigger, checkpoint
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.parquet(src_dir)
-    writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return reports
 
 
@@ -1493,8 +1414,10 @@ def run_cdc_apply(
     makes the exported query's oracle (a plain window over the raw
     table) exact. Returns the per-batch upsert reports."""
     from ..sources.generations import (
-        ensure_base_generation,
-        publish_generation,
+        key_prune_where,
+        locked_append,
+        plan_generation_scan,
+        publish_append,
         read_generation,
         upsert_rows,
     )
@@ -1523,17 +1446,15 @@ def run_cdc_apply(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if not os.path.isdir(store_path):
-            with commitio.IO.writer_lock(store_path):
-                newest.write.parquet(store_path)
-                publish_generation(store_path)
+        with locked_append(store_path) as m:
+            if m is None:  # the first batch creates the store
+                publish_append(store_path, newest.write.mode("append").parquet)
+        if m is None:
             reports.append(
                 {"batch": batch_id, "inserted_rows": newest.count(),
                  "updated_rows": 0, "stale_dropped": True}
             )
             return
-        with commitio.IO.writer_lock(store_path):
-            ensure_base_generation(store_path)
         # drop candidates not strictly newer than the stored version.
         # The stored side reads ONLY the files that may hold the
         # batch's keys (the same per-key-column list/bounds pruning
@@ -1542,11 +1463,6 @@ def run_cdc_apply(
         # in a pruned file, and a key with no kept file is genuinely
         # new. Without this the stale check would scan the store per
         # microbatch.
-        from ..sources.generations import (
-            key_prune_where,
-            plan_generation_scan,
-        )
-
         where = key_prune_where(newest, key_cols)
         root, files, _total = plan_generation_scan(store_path, where=where)
         if files:
@@ -1570,20 +1486,9 @@ def run_cdc_apply(
         rep["batch"] = batch_id
         reports.append(rep)
 
-    reader = spark.readStream.option("pathGlobFilter", glob).option(
-        "maxFilesPerTrigger", str(max_files_per_trigger)
+    drain_files(
+        spark, src_dir, sink, glob, schema, max_files_per_trigger, checkpoint
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.parquet(src_dir)
-    writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return reports
 
 
@@ -1789,20 +1694,9 @@ def run_gated_ingest(
                 rep["compacted_to"] = new_head
         reports.append(rep)
 
-    reader = spark.readStream.option("pathGlobFilter", glob).option(
-        "maxFilesPerTrigger", str(max_files_per_trigger)
+    drain_files(
+        spark, src_dir, sink, glob, schema, max_files_per_trigger, checkpoint
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.parquet(src_dir)
-    writer = stream.writeStream.foreachBatch(sink)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return reports
 
 

@@ -166,3 +166,38 @@ def test_matview_retracts_across_apply_spans(spark, tmp_path):
         .collect()
     )
     assert got == want
+
+
+def test_batch_after_stranded_swap_keeps_prior_rows(spark, tmp_path):
+    """A swap stranded between its two renames leaves the store at
+    `<store>.old` and no live path. The next microbatch must heal it
+    before deciding it is the first batch: every prior row survives,
+    instead of a fresh store holding only the new batch beside an
+    orphaned `.old`."""
+    store, _ = _apply(
+        spark, tmp_path, [[(1, 1, "a"), (2, 1, "b")], [(3, 1, "c")]]
+    )
+    os.replace(store, store + ".old")  # the stranded swap
+    src = str(tmp_path / "src")
+    d = str(tmp_path / "b2.tmpdir")
+    spark.createDataFrame([(4, 1, "d"), (1, 2, "a2")], SCHEMA).coalesce(
+        1
+    ).write.parquet(d)
+    part = next(
+        f for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    os.rename(os.path.join(d, part), os.path.join(src, "002.parquet"))
+    run_cdc_apply(
+        spark,
+        src,
+        store,
+        key_cols=["k"],
+        order_cols=["ver"],
+        checkpoint=str(tmp_path / "ckpt"),
+        schema=spark.createDataFrame([], SCHEMA).schema,
+    )
+    assert not os.path.exists(store + ".old")
+    assert _state(spark, store) == [
+        (1, 2, "a2"), (2, 1, "b"), (3, 1, "c"), (4, 1, "d")
+    ]

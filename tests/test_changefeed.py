@@ -95,14 +95,16 @@ def test_feed_crash_between_append_and_publish_is_exactly_once(
     """Crash window: batch appended, publish never ran. The redo's
     orphan sweep removes the unpublished files; the replay lands the
     batch exactly once."""
-    import map_reduce_indexing_spark.sources.changefeed as CF
+    # the feed publishes through generations.publish_append, which
+    # resolves publish_generation in its own module
+    import map_reduce_indexing_spark.sources.generations as G
 
     src = _build_src(spark, tmp_path)
     dst = str(tmp_path / "dst")
     run_changes_feed(spark, src, dst, ["id"], max_batches=1)
 
     calls = []
-    real = CF.publish_generation
+    real = G.publish_generation
 
     def crashing(path, **kw):
         if len(calls) == 0:
@@ -110,11 +112,11 @@ def test_feed_crash_between_append_and_publish_is_exactly_once(
             raise RuntimeError("simulated crash before publish")
         return real(path, **kw)
 
-    monkeypatch.setattr(CF, "publish_generation", crashing)
+    monkeypatch.setattr(G, "publish_generation", crashing)
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_changes_feed(spark, src, dst, ["id"])
     assert feed_bookmark(dst, src) == 1  # bookmark unadvanced
-    monkeypatch.setattr(CF, "publish_generation", real)
+    monkeypatch.setattr(G, "publish_generation", real)
     rep = run_changes_feed(spark, src, dst, ["id"])
     assert rep["src_to"] == 4
     assert _changelog(spark, dst) == EXPECT  # no duplicates

@@ -477,3 +477,48 @@ def test_failed_staged_rewrite_leaves_no_staging(spark, tmp_path, io_backend):
     assert generation_head(store) == head + 1
     assert keys() == list(range(6))
     assert [e for e in os.listdir(tmp_path) if e.startswith("mri_")] == []
+
+
+def test_staged_rewrite_heals_a_stranded_swap_first(spark, tmp_path):
+    """POSIX crash point: a store with two generations was renamed to
+    `<path>.old` and the swap never finished. The next staged rewrite
+    must restore it before swapping: the prior generations stay
+    retained and readable, and `.old` is gone (its leftover `rmtree`
+    would otherwise delete the only full copy and publish a store with
+    no manifest)."""
+    from map_reduce_indexing_spark.sources.generations import (
+        append_rows,
+        generation_head,
+        load_manifest,
+        read_generation,
+        staged_rewrite,
+    )
+
+    store = str(tmp_path / "store")
+    for lo in (0, 3):
+        append_rows(
+            spark,
+            store,
+            spark.createDataFrame([(k,) for k in range(lo, lo + 3)], "k long"),
+        )
+    assert generation_head(store) == 2
+    os.replace(store, store + ".old")  # the stranded two-rename instant
+
+    rows = spark.createDataFrame([(k,) for k in range(10, 12)], "k long")
+    with IO.writer_lock(store):
+        staged_rewrite(
+            store,
+            lambda staging: rows.write.mode("overwrite").parquet(staging),
+            "mri_rewrite_",
+        )
+    assert not os.path.exists(store + ".old")
+    m = load_manifest(store)
+    assert m is not None and int(m["head"]) == 3
+    assert {"1", "2"} <= set(m["gens"])
+
+    def keys(at=None):
+        return sorted(r.k for r in read_generation(spark, store, at=at).collect())
+
+    assert keys() == [10, 11]
+    assert keys(at=2) == list(range(6))
+    assert keys(at=1) == [0, 1, 2]

@@ -184,3 +184,54 @@ def test_continuous_join_aggregate_per_batch(spark, tmp_path):
     assert reports2 and reports2[-1]["mode"] == "incremental"
     assert served() == full()
     assert "g2" in {t[0] for t in served()}
+
+
+def test_microbatch_after_stranded_swap_keeps_prior_rows(spark, tmp_path):
+    """A swap stranded between its two renames (the store sits at
+    `<store>.old`) is healed by the next microbatch's sink before it
+    appends: the store keeps every prior row instead of restarting
+    with only the new batch, and the view lands on the full answer."""
+    import os
+
+    from map_reduce_indexing_spark.sources.generations import read_generation
+
+    src = str(tmp_path / "src")
+    store, view = str(tmp_path / "store"), str(tmp_path / "view")
+    os.makedirs(src)
+    schema = "rid long, k long, v long"
+
+    def land(i, rows):
+        d = str(tmp_path / f"stage{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
+        part = next(
+            f for f in os.listdir(d)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        os.rename(os.path.join(d, part), os.path.join(src, f"{i:03d}.parquet"))
+
+    def run():
+        return run_continuous_aggregate(
+            spark,
+            src,
+            store,
+            view,
+            ["k"],
+            {"n": ("count", "*"), "s": ("sum", "v")},
+            row_keys=["rid"],
+            schema=spark.createDataFrame([], schema).schema,
+            checkpoint=str(tmp_path / "ckpt"),
+        )
+
+    land(0, [(i, i % 2, i) for i in range(10)])
+    land(1, [(10 + i, i % 2, i) for i in range(6)])
+    run()
+    os.replace(store, store + ".old")  # the stranded swap
+    land(2, [(20 + i, i % 2, 100) for i in range(4)])
+    run()
+
+    assert not os.path.exists(store + ".old")
+    assert sorted(r.rid for r in read_generation(spark, store).collect()) == (
+        list(range(16)) + list(range(20, 24))
+    )
+    got = sorted((r.k, r.n, r.s) for r in read_matview(spark, view).collect())
+    assert got == [(0, 10, 226), (1, 10, 234)]

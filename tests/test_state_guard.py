@@ -254,3 +254,43 @@ def test_one_matview_engine():
             ) != is_term:
                 found.append(where)
     assert not found, f"matview snapshot/delta reads off the one path: {found}"
+
+
+# A store is appended to in one way: `generations.locked_append` takes
+# the lock, heals, adopts and settles unpublished files, and
+# `generations.publish_append` writes and publishes; a gated batch is
+# split by `expectations.gate`. The demo-store fixture builders in these
+# two modules build private stores inside session artifacts.
+APPEND_FIXTURE_BUILDERS = {"operators/relational_extra.py", "operators/dedup.py"}
+APPEND_INTERNALS = {
+    "ensure_base_generation",
+    "publish_generation",
+    "gate_eval",
+    "_publish",
+    "reachable_files",
+}
+GATE_INTERNALS = {"gate_eval", "_violation_flags", "pin_once"}
+
+
+def test_one_append_path():
+    """Outside sources/generations.py (and the fixture builders), no
+    function publishes a generation, adopts a base generation, settles
+    unpublished files or evaluates an expectations gate itself; and
+    nowhere but `expectations.gate` pins, counts or splits a gated
+    batch."""
+    found = []
+    for rel, tree in _modules():
+        for fn, call in _calls_in_functions(tree):
+            name = _call_name(call).rsplit(".", 1)[-1]
+            where = f"{rel}:{call.lineno} {name} in {fn}"
+            if name in GATE_INTERNALS and (rel, fn) != (
+                "sources/expectations.py", "gate"
+            ):
+                found.append(where)
+            elif (
+                name in APPEND_INTERNALS
+                and rel != "sources/generations.py"
+                and rel not in APPEND_FIXTURE_BUILDERS
+            ):
+                found.append(where)
+    assert not found, f"appends outside the one append path: {found}"
